@@ -24,8 +24,9 @@ def debug_checks_enabled() -> bool:
     production paths skip because the invariant holds by construction
     (e.g. the MERGE source-uniqueness pre-check under
     ``source_unique=True`` — ADVICE r14: an upstream dedup regression
-    should fail loudly somewhere, and the test suite runs with this
-    on)."""
+    should fail loudly somewhere). Off by default, also in the test
+    suite: only ``test_merge_source_unique_debug_checks_rearm_guard``
+    sets it, to pin what it re-arms."""
     return os.environ.get("SPARK_GRAFT_DEBUG_CHECKS", "0") == "1"
 
 

@@ -2,8 +2,8 @@
 
 Building-transaction pipeline ≙ reference `etl_pipeline_spark.py:51-80`;
 land-transaction pipeline ≙ reference `etl_pipeline_beam.py:10-111`.
-Both are single narrow-transformation chains: no shuffle, one stage,
-filters/projections pushed into the CSV scan, zero Python UDFs (the
+Each is one filter plus one projection over the raw CSV columns: no
+shuffle, one stage, filters pushed into the CSV scan, zero Python UDFs (the
 reference's three UDFs are native expressions here — SURVEY §2.4 X1-X3).
 
 Deliberate divergences from the reference (SURVEY §7.4):
@@ -16,27 +16,27 @@ Deliberate divergences from the reference (SURVEY §7.4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dates import minguo_to_date
 from ..functions.geo import city_code_from_filename, city_from_code
 from ..functions.numeric import dec_avg, m2_to_ping, ping_price_from_m2
 
-# Chinese → English rename maps (reference etl_pipeline_spark.py:43-45,
-# etl_pipeline_beam.py:41-45).
-_COMMON = {
+# Raw Chinese header → English name (reference etl_pipeline_spark.py:43-45,
+# etl_pipeline_beam.py:41-45). One map for both pipelines: a name a
+# pipeline does not output never enters its plan.
+RAW_NAMES = {
     "鄉鎮市區": "township_dist",
     "交易標的": "transaction_sign",
     "土地位置建物門牌": "position",
     "交易年月日": "transaction_date",
     "總價元": "total_price",
     "單價元平方公尺": "unit_price_m2",
+    "建物移轉總面積平方公尺": "building_area_m2",
+    "建築完成年月": "completion_date",
+    "土地移轉總面積平方公尺": "land_area_m2",
 }
-BUILDING_RENAMES = {**_COMMON,
-                    "建物移轉總面積平方公尺": "building_area_m2",
-                    "建築完成年月": "completion_date"}
-LAND_RENAMES = {**_COMMON, "土地移轉總面積平方公尺": "land_area_m2"}
 
 BUILDING_OUTPUT = ["city", "township_dist", "transaction_sign", "position",
                    "building_area_ping", "completion_date", "transaction_date",
@@ -46,79 +46,69 @@ LAND_OUTPUT = ["city", "township_dist", "transaction_sign", "position", "section
                "unit_price_ping"]
 
 
-def _common_tail(df: DataFrame, area_col: str) -> DataFrame:
-    """Shared cleaning tail: dates, casts, repair, unit conversion.
+def _clean(raw: DataFrame, kind: Column, area: str,
+           output: list[str]) -> DataFrame:
+    """Shared cleaning pass: ONE filter and ONE projection over the raw
+    all-string columns — dates, casts, repair, unit conversion.
 
-    ``area_col`` is ``building_area_m2`` or ``land_area_m2``.
+    ``area`` is ``building`` or ``land``. One step each, because every
+    DataFrame step re-runs analysis on the driver: a ~10-step
+    withColumn chain spent 150-230 ms per cleaner there before any job
+    ran, and the optimizer made the same filter + project of it.
     """
-    repaired_unit_price = F.when(
-        F.col("unit_price_m2").try_cast("double") == 0,
-        # Beam semantics: total / area (reference etl_pipeline_beam.py:99).
-        # try_divide: NULL (not an ANSI error) when the area is 0 too.
-        F.round(F.try_divide(F.col("total_price").try_cast("double"),
-                             F.col(area_col).try_cast("double")), 2),
-    ).otherwise(F.col("unit_price_m2").try_cast("double"))
-
-    return (
-        df
-        # Minguo → DateType; NULL on garbage, then filter — replaces the
-        # reference's check_date UDF + "True"/"False" flag + drop
-        # (etl_pipeline_spark.py:63-67) with pushdown-friendly expressions.
-        .withColumn("transaction_date", minguo_to_date("transaction_date"))
-        .filter(F.col("transaction_date").isNotNull())
-        # Lenient numeric coercion matching pd.to_numeric(errors=
-        # 'coerce') at etl_pipeline_beam.py:98: parse as DOUBLE first —
-        # a direct try_cast('long') silently NULLs decimal-formatted
-        # strings like '2000000.0' that pandas coerces fine (review r9)
-        # — then truncate to the reference's integer TWD type.
-        .withColumn("total_price",
-                    F.col("total_price").try_cast("double")
-                    .try_cast("long"))
-        .withColumn("unit_price_m2", repaired_unit_price)
-        .withColumn(area_col, F.col(area_col).try_cast("double"))
-        # m² → 坪 with 2-decimal rounding (etl_pipeline_spark.py:76-78).
-        .withColumn(area_col.replace("_m2", "_ping"), m2_to_ping(area_col))
-        .withColumn("unit_price_ping", ping_price_from_m2("unit_price_m2"))
-    )
+    c = {new: F.col(old) for old, new in RAW_NAMES.items()}
+    area_m2 = c[f"{area}_area_m2"].try_cast("double")
+    # Lenient numeric coercion matching pd.to_numeric(errors='coerce') at
+    # etl_pipeline_beam.py:98: parse as DOUBLE first — a direct
+    # try_cast('long') silently NULLs decimal-formatted strings like
+    # '2000000.0' that pandas coerces fine (review r9) — then truncate to
+    # the reference's integer TWD type.
+    total = c["total_price"].try_cast("double").try_cast("long")
+    unit_m2 = c["unit_price_m2"].try_cast("double")
+    # Beam semantics: total / area (reference etl_pipeline_beam.py:99).
+    # try_divide: NULL (not an ANSI error) when the area is 0 too.
+    unit_m2 = F.when(unit_m2 == 0, F.round(
+        F.try_divide(total.try_cast("double"), area_m2), 2)).otherwise(unit_m2)
+    # Minguo → DateType, NULL on garbage, then filter — replaces the
+    # reference's check_date UDF + "True"/"False" flag + drop
+    # (etl_pipeline_spark.py:63-67).
+    date = minguo_to_date(c["transaction_date"])
+    exprs = {
+        **c,
+        # city from filename char 7 — map-literal, no UDF, no join
+        "city": city_from_code(city_code_from_filename("檔名")),
+        # land only: see clean_land_transactions
+        "section": F.nullif(F.regexp_extract(c["position"], r"^(.*段)", 1),
+                            F.lit("")),
+        "transaction_date": date,
+        "total_price": total,
+        # m² → 坪 with 2-decimal rounding (etl_pipeline_spark.py:76-78)
+        f"{area}_area_ping": m2_to_ping(area_m2),
+        "unit_price_ping": ping_price_from_m2(unit_m2),
+    }
+    return (raw.filter(kind & date.isNotNull())
+            .select(*[exprs[name].alias(name) for name in output]))
 
 
 def clean_building_transactions(raw: DataFrame) -> DataFrame:
     """Building pipeline (reference `etl_pipeline_spark.py:51-80`).
 
     Input: all-string frame from ``load_raw_csv`` (with 檔名 lineage col).
+    Keeps house+land transactions (prefix filter, etl_pipeline_spark.py:54).
     """
-    return (
-        raw
-        # prefix filter: house+land transactions (etl_pipeline_spark.py:54)
-        .filter(F.col("交易標的").startswith("房地"))
-        # city from filename char 7 — map-literal, no UDF, no join
-        .withColumn("city", city_from_code(city_code_from_filename("檔名")))
-        .select("city", *BUILDING_RENAMES)
-        .withColumnsRenamed(BUILDING_RENAMES)
-        .transform(lambda df: _common_tail(df, "building_area_m2"))
-        .select(*BUILDING_OUTPUT)
-    )
+    return _clean(raw, F.col("交易標的").startswith("房地"), "building",
+                  BUILDING_OUTPUT)
 
 
 def clean_land_transactions(raw: DataFrame) -> DataFrame:
     """Land pipeline (reference `etl_pipeline_beam.py:10-111`).
 
-    Adds the regex-derived ``section`` column: longest prefix ending in 段,
-    NULL on no match (pandas ``str.extract`` semantics — Spark's
+    Keeps land transactions (etl_pipeline_beam.py:22) and adds the
+    regex-derived ``section`` column: longest prefix ending in 段, NULL
+    on no match (pandas ``str.extract`` semantics — Spark's
     ``regexp_extract`` returns ``''`` there, so wrap in nullif; SURVEY X10).
     """
-    return (
-        raw
-        .filter(F.col("交易標的") == "土地")  # etl_pipeline_beam.py:22
-        .withColumn("city", city_from_code(city_code_from_filename("檔名")))
-        .select("city", *LAND_RENAMES)
-        .withColumnsRenamed(LAND_RENAMES)
-        .withColumn("section",
-                    F.nullif(F.regexp_extract("position", r"^(.*段)", 1),
-                             F.lit("")))
-        .transform(lambda df: _common_tail(df, "land_area_m2"))
-        .select(*LAND_OUTPUT)
-    )
+    return _clean(raw, F.col("交易標的") == "土地", "land", LAND_OUTPUT)
 
 
 def avg_price_by_year(cleaned: DataFrame, city: str = "宜蘭縣") -> DataFrame:

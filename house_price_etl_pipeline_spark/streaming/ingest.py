@@ -528,6 +528,10 @@ _FLAT_SCHEMA_CACHE: "OrderedDict[tuple[str, str], object]" = \
 # versions per table) times a generous table count. Eviction only costs
 # one ~65 ms re-inference on a dir that has since left the working set.
 _FLAT_SCHEMA_CACHE_CAP = 512
+# Concurrent readers share the cache: without the lock a writer at the
+# cap can evict a key between another thread's get and move_to_end,
+# which then raises KeyError. Spark calls stay outside it.
+_FLAT_SCHEMA_LOCK = __import__("threading").Lock()
 
 
 def _flat_parquet_read(spark, snap_dir: str, paths: list[str]):
@@ -535,14 +539,18 @@ def _flat_parquet_read(spark, snap_dir: str, paths: list[str]):
     snapshot's cached physical schema when this session has read the
     dir before; first read infers and populates the cache."""
     key = (spark.sparkContext.applicationId, snap_dir)
-    schema = _FLAT_SCHEMA_CACHE.get(key)
+    with _FLAT_SCHEMA_LOCK:
+        schema = _FLAT_SCHEMA_CACHE.get(key)
+        if schema is not None:
+            _FLAT_SCHEMA_CACHE.move_to_end(key)
     if schema is not None:
-        _FLAT_SCHEMA_CACHE.move_to_end(key)
         return spark.read.schema(schema).parquet(*paths)
     df = spark.read.parquet(*paths)
-    _FLAT_SCHEMA_CACHE[key] = df.schema
-    if len(_FLAT_SCHEMA_CACHE) > _FLAT_SCHEMA_CACHE_CAP:
-        _FLAT_SCHEMA_CACHE.popitem(last=False)
+    schema = df.schema
+    with _FLAT_SCHEMA_LOCK:
+        _FLAT_SCHEMA_CACHE[key] = schema
+        if len(_FLAT_SCHEMA_CACHE) > _FLAT_SCHEMA_CACHE_CAP:
+            _FLAT_SCHEMA_CACHE.popitem(last=False)
     return df
 
 

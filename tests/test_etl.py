@@ -35,6 +35,15 @@ def test_minguo_conversion_cases(spark):
         ("", None),
         (None, None),
         ("11007180", None),          # 8 digits → malformed
+        ("10101", "1912-01-01"),     # 5-digit (ROC year < 10)
+        ("1090229", "2020-02-29"),   # Feb 29, leap year
+        ("1100229", None),           # Feb 29, non-leap year
+        ("890229", "2000-02-29"),    # Feb 29, leap century
+        (" 1100718 ", "2021-07-18"), # surrounding spaces trimmed
+        ("1101301", None),           # month 13
+        ("1100700", None),           # day 0
+        ("00000", None),             # month 0
+        ("１１００７１８", None),      # full-width digits are not ASCII
     ]
     df = spark.createDataFrame([(r[0],) for r in rows], "minguo string")
     got = [
@@ -96,10 +105,21 @@ def test_no_python_udf_in_plan(raw):
     assert "ArrowEvalPython" not in plan
 
 
+def test_cleaner_plans_stay_compact(raw):
+    """The optimizer substitutes the Minguo date expression into each
+    cleaner's ``IS NOT NULL`` filter, where repeated sub-trees are not
+    shared: an expression that references its input many times is
+    evaluated that many times per row (it once held 128 ``trim(`` calls
+    per plan). Pin the compact form."""
+    for clean in (clean_building_transactions, clean_land_transactions):
+        plan = clean(raw)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("trim(") <= 16, (clean.__name__, plan.count("trim("))
+
+
 # --- property tests (hypothesis): minguo date edge semantics ---------------
 
 try:
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
     HAVE_HYPOTHESIS = True
 except ImportError:  # pragma: no cover
@@ -126,14 +146,15 @@ if HAVE_HYPOTHESIS:
     @settings(max_examples=20, deadline=None,
               suppress_health_check=list(HealthCheck))
     @given(st.text(max_size=12))
+    @example("10101")
     def test_minguo_never_raises_on_garbage(spark, s):
         """The reference UDF raises on garbage (etl_pipeline_spark.py:47);
         our expression must instead yield NULL for anything that is not a
-        valid 6/7-digit minguo date — and never error."""
+        valid 5/6/7-digit minguo date — and never error."""
         row = (spark.range(1)
                .select(minguo_to_date(F.lit(s)).alias("d")).collect()[0])
         if row.d is not None:
-            assert s.strip().isdigit() and 6 <= len(s.strip()) <= 7
+            assert s.strip().isdigit() and 5 <= len(s.strip()) <= 7
 
 
 def test_materialized_layout_prunes_city_and_year(spark, house_csv_fixture, tmp_path):

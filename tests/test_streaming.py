@@ -4040,3 +4040,59 @@ def test_column_default_lands_at_table_column_type(spark, tmp_path):
     assert dict(snap.dtypes)["score"] == "double"
     got = {r.k: r.score for r in snap.collect()}
     assert got == {1: 1.5, 2: 0.0}
+
+
+def test_flat_schema_cache_survives_concurrent_eviction(monkeypatch):
+    """A reader that finds its snapshot's schema cached must not fail
+    when another reader evicts that entry between its lookup and its
+    LRU touch (cap 1 makes every insert evict). The lookup is held open
+    until the other reader finishes, or 0.2 s when it cannot get in."""
+    import threading
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    from house_price_etl_pipeline_spark.streaming import ingest
+
+    entered, other_done = threading.Event(), threading.Event()
+
+    class SlowHitCache(OrderedDict):
+        def get(self, key, default=None):
+            hit = super().get(key, default)
+            if hit is not None:
+                entered.set()
+                other_done.wait(0.2)
+            return hit
+
+    class Read:
+        def schema(self, schema):
+            return self
+
+        def parquet(self, *paths):
+            return SimpleNamespace(schema="s")
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"),
+                            read=Read())
+    monkeypatch.setattr(ingest, "_FLAT_SCHEMA_CACHE",
+                        SlowHitCache({("app", "d1"): "s"}))
+    monkeypatch.setattr(ingest, "_FLAT_SCHEMA_CACHE_CAP", 1)
+    errors = []
+
+    def read(snap_dir, done=None):
+        try:
+            ingest._flat_parquet_read(spark, snap_dir, [snap_dir])
+        except Exception as e:  # noqa: BLE001 — reported by the assert
+            errors.append(e)
+        finally:
+            if done is not None:
+                done.set()
+
+    hit = threading.Thread(target=read, args=("d1",))
+    hit.start()
+    assert entered.wait(5)
+    miss = threading.Thread(target=read, args=("d2", other_done))
+    miss.start()
+    hit.join(5)
+    miss.join(5)
+    assert not hit.is_alive() and not miss.is_alive()
+    assert errors == []
+    assert list(ingest._FLAT_SCHEMA_CACHE) == [("app", "d2")]
