@@ -36,18 +36,6 @@ def exact_twin_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_EXACT_TWIN", "1") != "0"
 
 
-def incremental_commits_enabled() -> bool:
-    """SPARK_GRAFT_INCREMENTAL_COMMITS (default "1"): upsert/DELETE/MERGE
-    commits on the versioned table rewrite ONLY the data files that
-    contain affected rows (computed per commit from ``_metadata.
-    file_path``) and reuse every untouched file in the new snapshot via
-    hard links — Delta's file-granular copy-on-write. "0" restores the
-    full-snapshot rewrite per commit (the pre-round-10 behavior), useful
-    for A/B and for filesystems without hard links where the copy
-    fallback would negate the win."""
-    return os.environ.get("SPARK_GRAFT_INCREMENTAL_COMMITS", "1") != "0"
-
-
 def carry_mode() -> str:
     """SPARK_GRAFT_CARRY_MODE (default "link"): how incremental commits
     carry a base snapshot's untouched data files into the new version.

@@ -688,9 +688,14 @@ def _staging_conf(spark, input_bytes_hint: int | None):
             spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 prev)
-            if input_bytes_hint is not None and prev_width is not None:
-                spark.conf.set("spark.sql.shuffle.partitions",
-                               prev_width)
+            if input_bytes_hint is not None:
+                # a session that never set the width gets it unset
+                # again, not left at the delta-scaled value
+                if prev_width is None:
+                    spark.conf.unset("spark.sql.shuffle.partitions")
+                else:
+                    spark.conf.set("spark.sql.shuffle.partitions",
+                                   prev_width)
 
 
 def _staged_write(df, target_dir: str, stage_path: str,
@@ -764,15 +769,15 @@ def _touched_files_by_keys(spark, base_dir: str, keys_df,
                            key_cols: list[str],
                            target_dir: str | None = None,
                            part_tuples: list[dict] | None = None
-                           ) -> set[str]:
-    """Relative paths of the base snapshot's data files holding at
-    least one row whose key appears in ``keys_df`` — Delta's
-    touched-file join. The scan reads ONLY the key columns (parquet
-    column pruning) plus the free ``_metadata.file_path`` constant; the
-    join is null-safe so a NULL-keyed delta row claims the file holding
-    the NULL-keyed base row (the window in keep_latest groups NULLs as
-    a real key, and the join must agree or the carried twin would
-    duplicate the key). The collect is bounded by the touched-file
+                           ) -> tuple[set[str], list[str]]:
+    """(touched, kept) relative paths of the base snapshot's data
+    files: those holding at least one row whose key appears in
+    ``keys_df`` — Delta's touched-file join — and every other file.
+    The scan reads ONLY the key columns (parquet column pruning) plus
+    the free ``_metadata.file_path`` constant; the join is null-safe so
+    a NULL-keyed delta row claims the file holding the NULL-keyed base
+    row (the window in keep_latest groups NULLs as a real key, and the
+    join must agree or the carried twin would duplicate the key). The collect is bounded by the touched-file
     count — the same driver-side file list every Delta MERGE
     materializes.
 
@@ -807,7 +812,35 @@ def _touched_files_by_keys(spark, base_dir: str, keys_df,
         cond = term if cond is None else (cond & term)
     rows = (snap.join(keys, cond, "leftsemi")
             .select("_file").distinct().collect())
-    return _file_paths_to_relpaths(rows, base_dir)
+    touched = _file_paths_to_relpaths(rows, base_dir)
+    return touched, [f for f in _snapshot_data_files(base_dir)
+                     if f not in touched]
+
+
+def _touched_files_by_predicate(spark, target_dir: str, base_dir: str,
+                                condition) -> tuple[set[str], list[str]]:
+    """(touched, kept) relative paths of the base snapshot's data files:
+    those holding at least one row ``condition`` is TRUE for, and every
+    other file — the DELETE/UPDATE touched-file scan. The predicate is
+    pushed to the scan, so a partition-column predicate prunes whole
+    directories before any file opens."""
+    rows = (_snapshot_read(spark, target_dir, base_dir, file_col="_file")
+            .filter(condition)
+            .select("_file").distinct().collect())
+    touched = _file_paths_to_relpaths(rows, base_dir)
+    return touched, [f for f in _snapshot_data_files(base_dir)
+                     if f not in touched]
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Carry a data file by hard link — a copy where links fail."""
+    import os
+    import shutil
+
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
 
 
 def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
@@ -835,19 +868,7 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
         # delta of comparable size): size the staging shuffle to it —
         # a tiny copy-on-write commit gets a 1-2 task write, a big one
         # keeps the session width (_stage_width)
-        kept = set(kept_files)
-        base_carry0 = read_carry(snapshot_dir)
-        vroot0 = versions_root_of(snapshot_dir) if base_carry0 else None
-        touched_bytes = 0
-        for f in _snapshot_data_files(snapshot_dir):
-            if f in kept:
-                continue
-            try:
-                touched_bytes += os.path.getsize(
-                    resolve_data_file(snapshot_dir, f, base_carry0,
-                                      vroot0))
-            except OSError:
-                continue    # pruned mid-walk: sizing is best-effort
+        touched_bytes = _data_file_bytes(snapshot_dir, skip=kept_files)
         _staged_write(rewritten_df, target_dir or snapshot_dir,
                       stage_dir, input_bytes_hint=2 * touched_bytes)
     else:
@@ -890,10 +911,7 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
             if os.path.exists(dst):          # freak part-name collision
                 root, ext = os.path.splitext(name)
                 dst = os.path.join(stage_dir, f"{root}-linked{ext}")
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
+            _link_or_copy(src, dst)
     if target_dir is not None:
         # keep data skipping alive across incremental commits: carry
         # kept files' manifest entries, footer-read only the rewritten
@@ -973,15 +991,19 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
     jobs.
 
     Safe iff every journal entry past our base (a) is a versioning
-    commit that (b) recorded ``touched_partitions`` (only the
-    incremental upsert path writes the field, so its presence also
-    certifies an unchanged schema) and (c) is disjoint from ours:
-    partition columns ⊆ merge key means key sets are then disjoint
-    too, so serial application commutes and rebased-state ≡ re-merged
-    state. Any other entry (full rewrite, OPTIMIZE, DELETE/UPDATE/
-    MERGE/drop — none record the field) returns None and the caller
-    pays the full re-stage, as before. Identity tables never get here
-    (allocation ranges could collide).
+    commit or an OPTIMIZE that (b) recorded a scope claim and (c) is
+    disjoint from ours: partition columns ⊆ merge key means key sets
+    are then disjoint too, so serial application commutes and
+    rebased-state ≡ re-merged state. The claims are
+    ``touched_partitions`` — written only where the op's rewritten rows
+    provably stay in the claimed partitions and the schema is
+    unchanged: the incremental upsert, DELETE, UPDATE and MERGE paths,
+    dynamic partition overwrite and incremental OPTIMIZE — and the
+    metadata drop's ``dropped_partitions``. Any entry without a claim
+    (a full rewrite, a schema-evolving or partition-moving op, RESTORE)
+    or with an overlapping one returns None and the caller pays the
+    full re-stage. Identity tables never get here (allocation ranges
+    could collide).
 
     The rebase: move OUR rewritten files out of the dead stage, carry
     the new head's files minus our touched set (same link/manifest
@@ -1078,6 +1100,155 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
                               ignore_errors=True)
 
 
+def _head_dir(target_dir: str, commits: list[dict],
+              missing: str = "") -> str:
+    """The journal head's snapshot dir, for ops that need an existing
+    table (only upsert and MERGE create one); ``missing`` extends the
+    error raised when there is none."""
+    import os
+
+    if not commits:
+        raise FileNotFoundError(f"no upsert table at {target_dir}{missing}")
+    return os.path.join(target_dir + "_versions",
+                        commits[-1]["version_name"])
+
+
+def _livelock(what: str, version: int, max_retries: int) -> str:
+    return (f"{what} commit for version {version} lost {max_retries} "
+            f"consecutive CAS races — livelocked writer set?")
+
+
+def _commit_version(target_dir: str, op: str, version: int | None,
+                    stage, *, writer: str, keep_versions: int,
+                    max_retries: int = 24, tag: str | None = None,
+                    replay=None, rebase=None, exhausted: str | None,
+                    _pre_stage_hook=None, _race_hook=None,
+                    _pre_swap_hook=None):
+    """THE optimistic commit loop every versioned-table op runs through
+    (Delta's rename-without-overwrite protocol on the ``_commits``
+    journal). Per attempt: back off (after the first), read the
+    journal, answer a replay, stage, rename the stage to its snapshot
+    name, CAS-claim the next journal slot, and publish — or discard the
+    stale stage and retry against the new head.
+
+    ``stage(commits, stage_dir)`` is the op: it writes the new snapshot
+    into ``stage_dir`` — a unique ``_stage_<writer>_<uuid>`` name, so
+    the journal only ever references fully-written data (Delta's
+    ordering) — from the base ``commits[-1]``, and returns the journal
+    entry's op-specific fields, or None when there is nothing to commit
+    (the driver then returns None).
+
+    - ``version``: the version the commit claims; None claims the
+      head's (OPTIMIZE rewrites the head in place, so it can never be
+      a replay of its own batch id either).
+    - ``tag``: None names the snapshot ``v<version>`` (a same-version
+      racer gets ``v<version>_<writer>_<uuid>``); a tag names it
+      ``v<version>_<tag>_<uuid>`` and the driver returns that name
+      instead of a status.
+    - ``replay(commits, applied)``: the op's exactly-once rule — a
+      result to return, None to commit. The default answers
+      "replayed" when ``version`` is already applied.
+    - ``rebase(snapshot_name, base_seq)``: after a lost CAS, a chance
+      to land the already-staged snapshot on the new head without
+      re-staging; returns the status, or None to re-stage.
+    - ``exhausted``: the RuntimeError message after ``max_retries``
+      lost races; None returns None instead.
+
+    Returns "applied", "applied-after-retry" (lost at least one race),
+    "replayed", or the tagged snapshot name. The hooks are test seams:
+    ``_pre_stage_hook(attempt, base_name)`` fires just before the stage
+    (the window where concurrent commits can retire and prune the base
+    under the running scan), ``_race_hook(attempt)`` between the rename
+    and the CAS, and ``_pre_swap_hook`` threads into
+    ``_publish_commit`` (the stale-publish regression window)."""
+    import os
+    import shutil
+    import uuid
+
+    from ..fsutil import cas_backoff, try_commit
+    from .index import _input_vanished
+
+    versions_root = target_dir + "_versions"
+    retried = False
+    for _attempt in range(max_retries):
+        if _attempt:
+            cas_backoff(_attempt)
+        commits, applied = _journal_state(versions_root)
+        done = (replay(commits, applied) if replay is not None
+                else "replayed" if version in applied else None)
+        if done is not None:
+            # exactly-once no-op — but repair the published view if a
+            # crash landed between CAS and publish
+            if commits:
+                _publish_commit(target_dir, versions_root, commits,
+                                keep_versions)
+            return done
+        head = commits[-1] if commits else None
+        base_seq = head["seq"] if head else -1
+        if _pre_stage_hook is not None:
+            _pre_stage_hook(_attempt, head["version_name"] if head else None)
+        stage_dir = os.path.join(versions_root,
+                                 f"_stage_{writer}_{uuid.uuid4().hex[:8]}")
+        try:
+            fields = stage(commits, stage_dir)
+        except Exception as exc:
+            # The stage reads the base snapshot lazily; if concurrent
+            # writers advance the journal by keep_versions commits
+            # meanwhile, their publish prunes our base UNDER the running
+            # scan or link pass — a lost CAS race observed one step
+            # early. Vanished-base signature: a Spark scan error on the
+            # pruned layout, a Python ENOENT from the hard-link pass, or
+            # a shutil.Error from RESTORE's copy. Journal moved past our
+            # base means discard and retry against the new head;
+            # journal UNMOVED means a real error and propagates.
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            now, _ = _journal_state(versions_root)
+            if (now[-1]["seq"] if now else -1) != base_seq and (
+                    _input_vanished(exc)
+                    or isinstance(exc, (FileNotFoundError, shutil.Error))):
+                retried = True
+                continue
+            raise
+        if fields is None:
+            return None
+        claimed = head["version"] if version is None else version
+        if tag is None:
+            # snapshot dirs keep the public v{version} name when free
+            # (the common single-writer case); a racing same-version
+            # writer gets a unique suffix — readers resolve through the
+            # journal anyway
+            perm = f"v{claimed}"
+            try:
+                os.rename(stage_dir, os.path.join(versions_root, perm))
+            except OSError:
+                perm = f"v{claimed}_{writer}_{uuid.uuid4().hex[:8]}"
+                os.rename(stage_dir, os.path.join(versions_root, perm))
+        else:
+            perm = f"v{claimed}_{tag}_{uuid.uuid4().hex[:8]}"
+            os.rename(stage_dir, os.path.join(versions_root, perm))
+        if _race_hook is not None:
+            _race_hook(_attempt)
+        entry = {"op": op, "version": claimed, "version_name": perm,
+                 "writer": writer, **fields}
+        if try_commit(_commits_dir(versions_root), base_seq + 1, entry):
+            commits, _ = _journal_state(versions_root)
+            _publish_commit(target_dir, versions_root, commits,
+                            keep_versions, _pre_swap_hook=_pre_swap_hook)
+            if tag is not None:
+                return perm
+            return "applied-after-retry" if retried else "applied"
+        # lost the race: our stage is based on a stale snapshot
+        retried = True
+        if rebase is not None:
+            status = rebase(perm, base_seq)
+            if status is not None:
+                return status
+        shutil.rmtree(os.path.join(versions_root, perm), ignore_errors=True)
+    if exhausted is None:
+        return None
+    raise RuntimeError(exhausted)
+
+
 def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                         key_cols: list[str], order_col: str,
                         keep_versions: int = 2, writer: str = "w0",
@@ -1102,24 +1273,14 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
     other file carries into the new version by hard link — commit cost
     proportional to the CHANGED data, not the table (see the module
     block comment above _snapshot_data_files). Schema-evolving batches
-    take the full mergeSchema rewrite. ``_race_hook``
-    is a test seam invoked between base-read and CAS attempt so a
-    conflicting writer can be interleaved deterministically;
-    ``_pre_stage_hook`` fires just before the staging write (the window
-    where concurrent commits can retire and prune our base snapshot
-    under the running merge scan); ``_pre_swap_hook`` threads into
-    ``_publish_commit`` (the stale-publish regression window)."""
+    take the full mergeSchema rewrite. The ``_race_hook``,
+    ``_pre_stage_hook`` and ``_pre_swap_hook`` test seams are the
+    commit driver's (_commit_version)."""
+    import functools
     import os
-    import shutil
-    import uuid
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from ..config import (incremental_commit_min_bytes,
-                          incremental_commits_enabled)
-    from ..fsutil import cas_backoff, try_commit
-    from .index import _input_vanished
 
     versions_root = target_dir + "_versions"
     os.makedirs(versions_root, exist_ok=True)
@@ -1177,189 +1338,117 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
     # scan's pruning filter and the journal entry's
     # ``touched_partitions`` claim other writers classify conflicts
     # against. One delta-sized collect, computed LAZILY on first use —
-    # full-rewrite commits (incremental off / tiny base / schema
-    # evolution) never need it and must not pay the extra job.
-    _scope_cache: list = []
+    # full-rewrite commits (tiny base / schema evolution) never need it
+    # and must not pay the extra job.
+    _scope = functools.cache(
+        lambda: _delta_partition_scope(batch_df, target_dir, key_cols))
+    # (kept, touched) of the current attempt's incremental stage when
+    # its scope is claimable — what the disjoint-writer rebase re-links
+    reuse = None
 
-    def _scope():
-        if not _scope_cache:
-            _scope_cache.append(
-                _delta_partition_scope(batch_df, target_dir, key_cols))
-        return _scope_cache[0]
-
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if batch_id in applied:
-            # replayed batch: exactly-once no-op — but repair the
-            # published view if a crash landed between CAS and publish
-            if commits:
-                _publish_commit(target_dir, versions_root, commits,
-                                keep_versions)
-            return "replayed"
+    def stage(commits, stage_dir):
+        nonlocal reuse
+        reuse = None
         base = commits[-1]["version_name"] if commits else None
-        seq = commits[-1]["seq"] + 1 if commits else 0
-
-        if _pre_stage_hook is not None:
-            _pre_stage_hook(_attempt, base)
-        # stage under a unique name BEFORE the CAS: the journal must
-        # only ever reference fully-written data (Delta's ordering)
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        reuse_stats = None
+        fields: dict = {}
         ident_hwm = None
         ident_carried: list[str] = []   # hard-linked files the hwm scan skips
-        try:
-            delta = keep_latest(batch_df)
-            if ident:
-                # allocation is CAS-serialized for free: the range base
-                # comes off the journal head we are about to CAS against
-                ident_hwm = _identity_high_water(commits, ident)
-            # the schema gate compares the delta AS IT WILL BE STAGED —
-            # with the identity column it doesn't have yet (assignment
-            # happens inside the branches so existing keys can inherit
-            # their ids from the rows the branch reads anyway)
-            delta_schema = (delta.withColumn(
-                ident["name"], F.lit(None).cast("bigint")).schema
-                if ident else delta.schema)
-            base_dir = (os.path.join(versions_root, base)
-                        if base is not None else None)
-            snapshot = (_snapshot_read(spark, target_dir, base_dir)
-                        if base is not None else None)
-            if (snapshot is not None
-                    and incremental_commits_enabled()
-                    and _data_file_bytes(base_dir)
-                    >= _min_bytes_cutoff(incremental_min_bytes)
-                    and _schemas_match(snapshot.schema, delta_schema)):
-                # file-granular copy-on-write: rewrite only the files
-                # holding keys the delta touches; hard-link the rest
-                touched = _touched_files_by_keys(
-                    spark, base_dir, delta, key_cols, target_dir,
-                    part_tuples=_scope()[0])
-                kept = [f for f in _snapshot_data_files(base_dir)
-                        if f not in touched]
-                if touched:
-                    sub = _snapshot_read(spark, target_dir, base_dir,
-                                         files=sorted(touched))
-                    if ident:
-                        # touched files hold every key the delta can
-                        # match — inheritance stays change-sized
-                        delta = _inherit_or_assign_identity(
-                            delta, sub, ident, ident_hwm, key_cols)
-                    merged = keep_latest_merge(sub, delta)
-                else:
-                    if ident:
-                        delta = _assign_identity(delta, ident,
-                                                 ident_hwm)
-                    merged = delta
-                _stage_with_reuse(base_dir,
-                                  os.path.join(versions_root, stage),
-                                  kept, merged, target_dir=target_dir)
-                reuse_stats = (len(touched), len(kept))
-                ident_carried = kept
+        delta = keep_latest(batch_df)
+        if ident:
+            # allocation is CAS-serialized for free: the range base
+            # comes off the journal head we are about to CAS against
+            ident_hwm = _identity_high_water(commits, ident)
+        # the schema gate compares the delta AS IT WILL BE STAGED —
+        # with the identity column it doesn't have yet (assignment
+        # happens inside the branches so existing keys can inherit
+        # their ids from the rows the branch reads anyway)
+        delta_schema = (delta.withColumn(
+            ident["name"], F.lit(None).cast("bigint")).schema
+            if ident else delta.schema)
+        base_dir = (os.path.join(versions_root, base)
+                    if base is not None else None)
+        snapshot = (_snapshot_read(spark, target_dir, base_dir)
+                    if base is not None else None)
+        if (snapshot is not None
+                and _data_file_bytes(base_dir)
+                >= _min_bytes_cutoff(incremental_min_bytes)
+                and _schemas_match(snapshot.schema, delta_schema)):
+            # file-granular copy-on-write: rewrite only the files
+            # holding keys the delta touches; hard-link the rest
+            touched, kept = _touched_files_by_keys(
+                spark, base_dir, delta, key_cols, target_dir,
+                part_tuples=_scope()[0])
+            if touched:
+                sub = _snapshot_read(spark, target_dir, base_dir,
+                                     files=sorted(touched))
+                if ident:
+                    # touched files hold every key the delta can
+                    # match — inheritance stays change-sized
+                    delta = _inherit_or_assign_identity(
+                        delta, sub, ident, ident_hwm, key_cols)
+                merged = keep_latest_merge(sub, delta)
             else:
-                if snapshot is not None:
-                    if ident:
-                        delta = _inherit_or_assign_identity(
-                            delta, snapshot, ident, ident_hwm,
-                            key_cols)
-                    # schema evolution (VERDICT r5 item 3): a batch may
-                    # ADD columns vs the current snapshot (or arrive
-                    # without columns the snapshot has) — union to the
-                    # merged schema with nulls, Delta mergeSchema
-                    # semantics, not an error. Evolution forces a full
-                    # rewrite: linked files can't change schema.
-                    merged = keep_latest_merge(snapshot, delta)
-                else:
-                    if ident:
-                        delta = _assign_identity(delta, ident,
-                                                 ident_hwm)
-                    merged = delta
-                # full rewrite over a known base: size the staging
-                # shuffle to its bytes (first commits have no base and
-                # an unknown batch size — keep the session width)
-                _staged_write(merged, target_dir,
-                              os.path.join(versions_root, stage),
-                              input_bytes_hint=(
-                                  2 * _data_file_bytes(base_dir)
-                                  if snapshot is not None else None))
-        except Exception as exc:
-            # The merge scans the base snapshot lazily; if concurrent
-            # writers advance the journal by keep_versions commits while
-            # we stage, their publish prunes our base UNDER the running
-            # scan (FAILED_READ_FILE). That is a lost CAS race observed
-            # one step early — journal moved past our base means discard
-            # and retry against the new head; journal UNMOVED means a
-            # real error (corrupt input) and propagates.
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            base_seq = commits[-1]["seq"] if commits else -1
-            # vanished-base signature: a Spark scan error on the
-            # pruned layout, OR a Python ENOENT from the hard-link pass
-            # (_stage_with_reuse links base files by absolute path; a
-            # concurrent publish can retire them mid-link). Either is a
-            # lost race IFF the journal moved; journal unmoved means a
-            # real error and propagates.
-            if now_seq != base_seq and (
-                    _input_vanished(exc)
-                    or isinstance(exc, FileNotFoundError)):
-                retried = True
-                continue
-            raise
-        # snapshot dirs keep the public v{version} name when free (the
-        # common single-writer case); a racing same-version writer gets
-        # a unique suffix — readers resolve through the journal anyway
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        if _race_hook is not None:
-            _race_hook(_attempt)
-        entry = {"op": "upsert", "version": batch_id,
-                 "version_name": perm, "writer": writer}
-        if reuse_stats is not None:
-            entry["files_rewritten"], entry["files_reused"] = reuse_stats
+                if ident:
+                    delta = _assign_identity(delta, ident, ident_hwm)
+                merged = delta
+            _stage_with_reuse(base_dir, stage_dir, kept, merged,
+                              target_dir=target_dir)
+            fields["files_rewritten"] = len(touched)
+            fields["files_reused"] = len(kept)
             if _scope()[1] is not None:
                 # scope claim for concurrent writers' conflict
                 # classification — only valid on the incremental path
                 # (a full rewrite touches everything)
-                entry["touched_partitions"] = _scope()[1]
+                fields["touched_partitions"] = _scope()[1]
+                if not ident:
+                    reuse = (kept, touched)
+            ident_carried = kept
+        else:
+            if snapshot is not None:
+                if ident:
+                    delta = _inherit_or_assign_identity(
+                        delta, snapshot, ident, ident_hwm, key_cols)
+                # schema evolution (VERDICT r5 item 3): a batch may
+                # ADD columns vs the current snapshot (or arrive
+                # without columns the snapshot has) — union to the
+                # merged schema with nulls, Delta mergeSchema
+                # semantics, not an error. Evolution forces a full
+                # rewrite: linked files can't change schema.
+                merged = keep_latest_merge(snapshot, delta)
+            else:
+                if ident:
+                    delta = _assign_identity(delta, ident, ident_hwm)
+                merged = delta
+            # full rewrite over a known base: size the staging
+            # shuffle to its bytes (first commits have no base and
+            # an unknown batch size — keep the session width)
+            _staged_write(merged, target_dir, stage_dir,
+                          input_bytes_hint=(
+                              2 * _data_file_bytes(base_dir)
+                              if snapshot is not None else None))
         if ident:
-            entry["identity_hwm"] = _staged_identity_hwm(
-                spark, os.path.join(versions_root, perm), ident,
-                ident_hwm, skip_files=ident_carried)
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions, _pre_swap_hook=_pre_swap_hook)
-            return "applied-after-retry" if retried else "applied"
-        # lost the race: our merge is based on a stale snapshot
-        retried = True
-        if (reuse_stats is not None and _scope()[1] is not None
-                and not ident):
-            # disjoint-writer fast path: if every commit that beat us
-            # is partition-disjoint, rebase the stage we already built
-            # (file moves + carries, no Spark) instead of re-merging
-            status = _rebase_disjoint_stage(
-                target_dir, versions_root, perm, kept, touched,
-                _scope()[1], commits[-1]["seq"] if commits else -1,
-                batch_id, writer, keep_versions, reuse_stats[0])
-            if status is not None:
-                return status
-        # conflict (or fast path inapplicable): discard and re-merge
-        # against the new journal head
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"upsert commit for version {batch_id} lost {max_retries} "
-        f"consecutive CAS races — livelocked writer set?")
+            fields["identity_hwm"] = _staged_identity_hwm(
+                spark, stage_dir, ident, ident_hwm,
+                skip_files=ident_carried)
+        return fields
+
+    def rebase(perm, base_seq):
+        # disjoint-writer fast path: if every commit that beat us is
+        # partition-disjoint, rebase the stage we already built (file
+        # moves + carries, no Spark) instead of re-merging
+        if reuse is None:
+            return None
+        kept, touched = reuse
+        return _rebase_disjoint_stage(
+            target_dir, versions_root, perm, kept, touched, _scope()[1],
+            base_seq, batch_id, writer, keep_versions, len(touched))
+
+    return _commit_version(
+        target_dir, "upsert", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        rebase=rebase, _pre_stage_hook=_pre_stage_hook,
+        _race_hook=_race_hook, _pre_swap_hook=_pre_swap_hook,
+        exhausted=_livelock("upsert", batch_id, max_retries))
 
 
 def upsert_delete_where(spark, target_dir: str, batch_id: int,
@@ -1383,16 +1472,7 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
     every untouched file carries into the new version by hard link —
     Delta's file-granular copy-on-write, so a selective DELETE costs
     the changed files, not the table."""
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import functions as F
-
-    from ..config import (incremental_commit_min_bytes,
-                          incremental_commits_enabled)
-    from ..fsutil import cas_backoff, try_commit
-    from .index import _input_vanished
 
     if isinstance(condition, str):
         condition = F.expr(condition)
@@ -1418,104 +1498,41 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
                 spark, target_dir, batch_id, condition,
                 keep_versions=keep_versions, writer=writer,
                 max_retries=max_retries)
-    versions_root = target_dir + "_versions"
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if not commits:
-            raise FileNotFoundError(f"no upsert table at {target_dir}")
-        if batch_id in applied:
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "replayed"
-        base = commits[-1]["version_name"]
-        seq = commits[-1]["seq"] + 1
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        reuse_stats = None
-        try:
-            base_dir = os.path.join(versions_root, base)
-            snapshot = _snapshot_read(spark, target_dir, base_dir)
-            if (incremental_commits_enabled()
-                    and _data_file_bytes(base_dir)
-                    >= _min_bytes_cutoff(incremental_min_bytes)):
-                # touched = files holding at least one row the predicate
-                # actually deletes (predicate pushed to the scan — a
-                # partition-column predicate prunes whole directories
-                # before any file opens); every other file carries into
-                # the new version as a hard link
-                rows = (_snapshot_read(spark, target_dir, base_dir,
-                                       file_col="_file")
-                        .filter(condition)
-                        .select("_file").distinct().collect())
-                touched = _file_paths_to_relpaths(rows, base_dir)
-                kept_files = [f for f in _snapshot_data_files(base_dir)
-                              if f not in touched]
-                rewritten = None
-                if touched:
-                    rewritten = (_snapshot_read(
-                        spark, target_dir, base_dir,
-                        files=sorted(touched))
-                        .filter(F.coalesce(~condition, F.lit(True))))
-                _stage_with_reuse(base_dir,
-                                  os.path.join(versions_root, stage),
-                                  kept_files, rewritten,
-                                  target_dir=target_dir)
-                reuse_stats = (len(touched), len(kept_files))
-            else:
-                kept = snapshot.filter(
-                    F.coalesce(~condition, F.lit(True)))
-                _staged_write(kept, target_dir,
-                              os.path.join(versions_root, stage),
-                              input_bytes_hint=_data_file_bytes(base_dir))
-        except Exception as exc:
-            # same stale-base window as the upsert merge: a concurrent
-            # publish can prune our base under the running scan
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            # vanished-base signature: a Spark scan error on the
-            # pruned layout, OR a Python ENOENT from the hard-link pass
-            # (_stage_with_reuse links base files by absolute path; a
-            # concurrent publish can retire them mid-link). Either is a
-            # lost race IFF the journal moved; journal unmoved means a
-            # real error and propagates.
-            if now_seq != commits[-1]["seq"] and (
-                    _input_vanished(exc)
-                    or isinstance(exc, FileNotFoundError)):
-                retried = True
-                continue
-            raise
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        entry = {"op": "delete", "version": batch_id,
-                 "version_name": perm, "writer": writer}
-        if reuse_stats is not None:
-            entry["files_rewritten"], entry["files_reused"] = reuse_stats
+
+    def stage(commits, stage_dir):
+        base_dir = _head_dir(target_dir, commits)
+        snapshot = _snapshot_read(spark, target_dir, base_dir)
+        if (_data_file_bytes(base_dir)
+                >= _min_bytes_cutoff(incremental_min_bytes)):
+            # touched = files holding at least one row the predicate
+            # actually deletes; every other file carries into the new
+            # version as a hard link
+            touched, kept_files = _touched_files_by_predicate(
+                spark, target_dir, base_dir, condition)
+            rewritten = None
+            if touched:
+                rewritten = (_snapshot_read(
+                    spark, target_dir, base_dir, files=sorted(touched))
+                    .filter(F.coalesce(~condition, F.lit(True))))
+            _stage_with_reuse(base_dir, stage_dir, kept_files, rewritten,
+                              target_dir=target_dir)
+            fields = {"files_rewritten": len(touched),
+                      "files_reused": len(kept_files)}
             # DELETE rows only vanish — rewrites stay in the touched
             # partitions, so the claim is exact
             claim = _touched_partition_claim(target_dir, touched)
             if claim is not None:
-                entry["touched_partitions"] = claim
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "applied-after-retry" if retried else "applied"
-        retried = True
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"delete commit for version {batch_id} lost {max_retries} "
-        f"consecutive CAS races — livelocked writer set?")
+                fields["touched_partitions"] = claim
+            return fields
+        kept = snapshot.filter(F.coalesce(~condition, F.lit(True)))
+        _staged_write(kept, target_dir, stage_dir,
+                      input_bytes_hint=_data_file_bytes(base_dir))
+        return {}
+
+    return _commit_version(
+        target_dir, "delete", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        exhausted=_livelock("delete", batch_id, max_retries))
 
 
 def upsert_update_where(spark, target_dir: str, batch_id: int,
@@ -1550,15 +1567,7 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
     as update_preimage/postimage pairs for rows the SET actually
     changed (a touched file's untouched rows diff equal and emit
     nothing)."""
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import functions as F
-
-    from ..config import incremental_commits_enabled
-    from ..fsutil import cas_backoff, try_commit
-    from .index import _input_vanished
 
     if isinstance(condition, str):
         condition = F.expr(condition)
@@ -1590,141 +1599,88 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
     from .partitioning import check_table_writable
     check_table_writable(target_dir)
     cons = table_check_constraints(target_dir)
-    versions_root = target_dir + "_versions"
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if not commits:
-            raise FileNotFoundError(f"no upsert table at {target_dir}")
-        if batch_id in applied:
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "replayed"
-        base = commits[-1]["version_name"]
-        seq = commits[-1]["seq"] + 1
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        reuse_stats = None
-        try:
-            base_dir = os.path.join(versions_root, base)
-            snapshot = _snapshot_read(spark, target_dir, base_dir)
-            missing = sorted(set(sets) - set(snapshot.columns))
-            if missing:
-                raise ValueError(
-                    f"UPDATE SET on column(s) {missing} absent from the "
-                    f"table (columns: {snapshot.columns}) — an UPDATE "
-                    f"never adds columns; evolve the schema with an "
-                    f"upsert or MERGE first")
-            types = dict(snapshot.dtypes)
 
-            def apply_update(df):
-                # SETs evaluate against the OLD row (select is
-                # simultaneous), cast back to the column's type;
-                # generated columns then recompute on the UPDATED row
-                # (their inputs may have just changed — Delta's
-                # recompute-on-update contract)
-                tagged = df.withColumn("_upd_hit", hit)
-                out = tagged.select(*[
-                    (F.when(F.col("_upd_hit"), sets[c].cast(types[c]))
-                     .otherwise(F.col(c)).alias(c)
-                     if c in sets else F.col(c))
-                    for c in df.columns], "_upd_hit")
-                for g, gexpr in gens.items():
-                    if g in out.columns:
-                        out = out.withColumn(
-                            g, F.when(F.col("_upd_hit"),
-                                      F.expr(gexpr).cast(types[g]))
-                            .otherwise(F.col(g)))
-                return out.drop("_upd_hit")
+    def stage(commits, stage_dir):
+        base_dir = _head_dir(target_dir, commits)
+        snapshot = _snapshot_read(spark, target_dir, base_dir)
+        missing = sorted(set(sets) - set(snapshot.columns))
+        if missing:
+            raise ValueError(
+                f"UPDATE SET on column(s) {missing} absent from the "
+                f"table (columns: {snapshot.columns}) — an UPDATE "
+                f"never adds columns; evolve the schema with an "
+                f"upsert or MERGE first")
+        types = dict(snapshot.dtypes)
 
-            if (incremental_commits_enabled()
-                    and _data_file_bytes(base_dir)
-                    >= _min_bytes_cutoff(incremental_min_bytes)):
-                rows = (_snapshot_read(spark, target_dir, base_dir,
-                                       file_col="_file")
-                        .filter(condition)
-                        .select("_file").distinct().collect())
-                touched = _file_paths_to_relpaths(rows, base_dir)
-                kept_files = [f for f in _snapshot_data_files(base_dir)
-                              if f not in touched]
-                rewritten = None
-                if touched:
-                    sub = _snapshot_read(spark, target_dir, base_dir,
-                                         files=sorted(touched))
-                    if cons:
-                        # post-image validation on the TOUCHED subset —
-                        # every predicate-matching row lives there by
-                        # construction, so this covers exactly what a
-                        # snapshot-wide pass would without the second
-                        # full-table scan (the delta-sized check
-                        # commit-time batch validation can't cover)
-                        _validate_constraints(
-                            apply_update(sub.filter(hit)), cons,
-                            "the UPDATE post-image")
-                    rewritten = apply_update(sub)
-                _stage_with_reuse(base_dir,
-                                  os.path.join(versions_root, stage),
-                                  kept_files, rewritten,
-                                  target_dir=target_dir)
-                reuse_stats = (len(touched), len(kept_files))
-            else:
-                if cons:
-                    # full-rewrite path: the snapshot scan is the
-                    # stage's own cost anyway
-                    _validate_constraints(
-                        apply_update(snapshot.filter(hit)), cons,
-                        "the UPDATE post-image")
-                _staged_write(apply_update(snapshot), target_dir,
-                              os.path.join(versions_root, stage),
-                              input_bytes_hint=_data_file_bytes(base_dir))
-        except Exception as exc:
-            # same stale-base window as the upsert merge: a concurrent
-            # publish can prune our base under the running scan
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            if now_seq != commits[-1]["seq"] and (
-                    _input_vanished(exc)
-                    or isinstance(exc, FileNotFoundError)):
-                retried = True
-                continue
-            raise
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        entry = {"op": "update", "version": batch_id,
-                 "version_name": perm, "writer": writer}
-        if reuse_stats is not None:
-            entry["files_rewritten"], entry["files_reused"] = reuse_stats
-            from .partitioning import table_partitioning as _tp
-            if not (set(sets) & set(_tp(target_dir))) and not (
-                    set(gens) & set(_tp(target_dir))):
-                # no SET targets a partition column AND no partition
-                # column is GENERATED (apply_update recomputes
-                # generated columns from SET inputs — a generated
-                # partition column could move rows out of the claimed
-                # dirs) → updated rows stay put, the claim is exact
-                claim = _touched_partition_claim(target_dir, touched)
-                if claim is not None:
-                    entry["touched_partitions"] = claim
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "applied-after-retry" if retried else "applied"
-        retried = True
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"update commit for version {batch_id} lost {max_retries} "
-        f"consecutive CAS races — livelocked writer set?")
+        def apply_update(df):
+            # SETs evaluate against the OLD row (select is
+            # simultaneous), cast back to the column's type;
+            # generated columns then recompute on the UPDATED row
+            # (their inputs may have just changed — Delta's
+            # recompute-on-update contract)
+            tagged = df.withColumn("_upd_hit", hit)
+            out = tagged.select(*[
+                (F.when(F.col("_upd_hit"), sets[c].cast(types[c]))
+                 .otherwise(F.col(c)).alias(c)
+                 if c in sets else F.col(c))
+                for c in df.columns], "_upd_hit")
+            for g, gexpr in gens.items():
+                if g in out.columns:
+                    out = out.withColumn(
+                        g, F.when(F.col("_upd_hit"),
+                                  F.expr(gexpr).cast(types[g]))
+                        .otherwise(F.col(g)))
+            return out.drop("_upd_hit")
+
+        if (_data_file_bytes(base_dir)
+                < _min_bytes_cutoff(incremental_min_bytes)):
+            if cons:
+                # full-rewrite path: the snapshot scan is the
+                # stage's own cost anyway
+                _validate_constraints(
+                    apply_update(snapshot.filter(hit)), cons,
+                    "the UPDATE post-image")
+            _staged_write(apply_update(snapshot), target_dir, stage_dir,
+                          input_bytes_hint=_data_file_bytes(base_dir))
+            return {}
+        touched, kept_files = _touched_files_by_predicate(
+            spark, target_dir, base_dir, condition)
+        rewritten = None
+        if touched:
+            sub = _snapshot_read(spark, target_dir, base_dir,
+                                 files=sorted(touched))
+            if cons:
+                # post-image validation on the TOUCHED subset —
+                # every predicate-matching row lives there by
+                # construction, so this covers exactly what a
+                # snapshot-wide pass would without the second
+                # full-table scan (the delta-sized check
+                # commit-time batch validation can't cover)
+                _validate_constraints(
+                    apply_update(sub.filter(hit)), cons,
+                    "the UPDATE post-image")
+            rewritten = apply_update(sub)
+        _stage_with_reuse(base_dir, stage_dir, kept_files, rewritten,
+                          target_dir=target_dir)
+        fields = {"files_rewritten": len(touched),
+                  "files_reused": len(kept_files)}
+        from .partitioning import table_partitioning as _tp
+        if not (set(sets) & set(_tp(target_dir))) and not (
+                set(gens) & set(_tp(target_dir))):
+            # no SET targets a partition column AND no partition
+            # column is GENERATED (apply_update recomputes
+            # generated columns from SET inputs — a generated
+            # partition column could move rows out of the claimed
+            # dirs) → updated rows stay put, the claim is exact
+            claim = _touched_partition_claim(target_dir, touched)
+            if claim is not None:
+                fields["touched_partitions"] = claim
+        return fields
+
+    return _commit_version(
+        target_dir, "update", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        exhausted=_livelock("update", batch_id, max_retries))
 
 
 def upsert_drop_partitions(spark, target_dir: str, batch_id: int,
@@ -1753,12 +1709,9 @@ def upsert_drop_partitions(spark, target_dir: str, batch_id: int,
     diffs the snapshots, so a metadata drop and a row-level delete are
     indistinguishable downstream, as they should be)."""
     import os
-    import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
-    from ..fsutil import cas_backoff, try_commit
     from .partitioning import list_partition_dirs, table_partitioning
 
     parts = table_partitioning(target_dir)
@@ -1770,92 +1723,50 @@ def upsert_drop_partitions(spark, target_dir: str, batch_id: int,
     from .partitioning import check_table_writable
     check_table_writable(target_dir)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    versions_root = target_dir + "_versions"
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if not commits:
-            raise FileNotFoundError(f"no upsert table at {target_dir}")
-        if batch_id in applied:
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "replayed"
-        base = commits[-1]["version_name"]
-        seq = commits[-1]["seq"] + 1
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
+
+    def stage(commits, stage_dir):
+        base_dir = _head_dir(target_dir, commits)
+        # one row per live partition tuple — bounded by the
+        # partition count, never the data; evaluating the predicate
+        # on THIS tiny frame is what guarantees it references only
+        # partition columns (anything else fails analysis)
+        pdirs = list_partition_dirs(base_dir, parts)
+        ddl = ", ".join(f"`{c}` {t}" for c, t in parts.items())
+        tuples = spark.createDataFrame(
+            [tuple(v[c] for c in parts) for v in pdirs.values()], ddl)
         try:
-            base_dir = os.path.join(versions_root, base)
-            # one row per live partition tuple — bounded by the
-            # partition count, never the data; evaluating the predicate
-            # on THIS tiny frame is what guarantees it references only
-            # partition columns (anything else fails analysis)
-            pdirs = list_partition_dirs(base_dir, parts)
-            ddl = ", ".join(f"`{c}` {t}" for c, t in parts.items())
-            tuples = spark.createDataFrame(
-                [tuple(v[c] for c in parts) for v in pdirs.values()],
-                ddl)
-            try:
-                dropped_vals = {
-                    tuple(r[c] for c in parts)
-                    for r in tuples.filter(cond).collect()}
-            except Exception as exc:
-                if "UNRESOLVED_COLUMN" in str(exc):
-                    raise ValueError(
-                        f"drop-partitions predicate {condition!r} "
-                        f"references a non-partition column (partition "
-                        f"columns: {list(parts)}) — use "
-                        f"upsert_delete_where for row predicates"
-                    ) from exc
-                raise
-            dropped_dirs = {
-                d for d, v in pdirs.items()
-                if tuple(v[c] for c in parts) in dropped_vals}
-            kept = [f for f in _snapshot_data_files(base_dir)
-                    if os.path.dirname(f) not in dropped_dirs]
-            # dropping EVERY partition leaves zero data files: stage an
-            # empty typed write so the snapshot keeps its schema (the
-            # _EMPTY marker path in _staged_write)
-            rewritten = (None if kept
-                         else _snapshot_read(spark, target_dir,
-                                             base_dir).limit(0))
-            _stage_with_reuse(base_dir,
-                              os.path.join(versions_root, stage),
-                              kept, rewritten, target_dir=target_dir)
+            dropped_vals = {
+                tuple(r[c] for c in parts)
+                for r in tuples.filter(cond).collect()}
         except Exception as exc:
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            if now_seq != commits[-1]["seq"] and isinstance(
-                    exc, FileNotFoundError):
-                retried = True      # base pruned mid-link: lost race
-                continue
+            if "UNRESOLVED_COLUMN" in str(exc):
+                raise ValueError(
+                    f"drop-partitions predicate {condition!r} "
+                    f"references a non-partition column (partition "
+                    f"columns: {list(parts)}) — use "
+                    f"upsert_delete_where for row predicates"
+                ) from exc
             raise
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        entry = {"op": "delete", "version": batch_id,
-                 "version_name": perm, "writer": writer,
-                 "files_rewritten": 0, "files_reused": len(kept),
-                 "dropped_partitions": sorted(dropped_dirs)}
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "applied-after-retry" if retried else "applied"
-        retried = True
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"drop-partitions commit for version {batch_id} lost "
-        f"{max_retries} consecutive CAS races — livelocked writer set?")
+        dropped_dirs = {
+            d for d, v in pdirs.items()
+            if tuple(v[c] for c in parts) in dropped_vals}
+        kept = [f for f in _snapshot_data_files(base_dir)
+                if os.path.dirname(f) not in dropped_dirs]
+        # dropping EVERY partition leaves zero data files: stage an
+        # empty typed write so the snapshot keeps its schema (the
+        # _EMPTY marker path in _staged_write)
+        rewritten = (None if kept
+                     else _snapshot_read(spark, target_dir,
+                                         base_dir).limit(0))
+        _stage_with_reuse(base_dir, stage_dir, kept, rewritten,
+                          target_dir=target_dir)
+        return {"files_rewritten": 0, "files_reused": len(kept),
+                "dropped_partitions": sorted(dropped_dirs)}
+
+    return _commit_version(
+        target_dir, "delete", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        exhausted=_livelock("drop-partitions", batch_id, max_retries))
 
 
 def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
@@ -1886,13 +1797,8 @@ def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
     matched/new distinction to inherit ids through — Delta's dynamic
     overwrite has the same restriction in spirit: it is a whole-
     partition replace, not a merge)."""
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import functions as F
 
-    from ..fsutil import cas_backoff, try_commit
     from .partitioning import table_partitioning
 
     parts = table_partitioning(target_dir)
@@ -1933,66 +1839,28 @@ def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
     if cons:
         _validate_constraints(batch_df, cons, "the overwrite batch")
 
-    versions_root = target_dir + "_versions"
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if not commits:
-            raise FileNotFoundError(
-                f"no upsert table at {target_dir} — dynamic overwrite "
-                f"needs an existing table (first write goes through "
-                f"upsert_commit_batch)")
-        if batch_id in applied:
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "replayed"
-        base = commits[-1]["version_name"]
-        seq = commits[-1]["seq"] + 1
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        try:
-            base_dir = os.path.join(versions_root, base)
-            # the batch's own partitions — delta-sized distinct
-            replaced = {
-                tuple(r[c] for c in parts)
-                for r in batch_df.select(*parts).dropDuplicates()
-                .collect()}
-            from .partitioning import partition_values_of
-            kept = []
-            touched_n = 0
-            for f in _snapshot_data_files(base_dir):
-                vals = partition_values_of(f, parts)
-                if tuple(vals[c] for c in parts) in replaced:
-                    touched_n += 1
-                else:
-                    kept.append(f)
-            _stage_with_reuse(base_dir,
-                              os.path.join(versions_root, stage),
-                              kept, batch_df, target_dir=target_dir)
-        except Exception as exc:
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            if now_seq != commits[-1]["seq"] and isinstance(
-                    exc, FileNotFoundError):
-                retried = True
-                continue
-            raise
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        entry = {"op": "overwrite", "version": batch_id,
-                 "version_name": perm, "writer": writer,
-                 "files_rewritten": touched_n,
-                 "files_reused": len(kept),
-                 "replaced_partitions": len(replaced)}
+    def stage(commits, stage_dir):
+        base_dir = _head_dir(
+            target_dir, commits,
+            " — dynamic overwrite needs an existing table (first write "
+            "goes through upsert_commit_batch)")
+        # the batch's own partitions — delta-sized distinct
+        replaced = {
+            tuple(r[c] for c in parts)
+            for r in batch_df.select(*parts).dropDuplicates().collect()}
+        from .partitioning import partition_values_of
+        kept = []
+        touched_n = 0
+        for f in _snapshot_data_files(base_dir):
+            vals = partition_values_of(f, parts)
+            if tuple(vals[c] for c in parts) in replaced:
+                touched_n += 1
+            else:
+                kept.append(f)
+        _stage_with_reuse(base_dir, stage_dir, kept, batch_df,
+                          target_dir=target_dir)
+        fields = {"files_rewritten": touched_n, "files_reused": len(kept),
+                  "replaced_partitions": len(replaced)}
         if len(replaced) <= PARTITION_PRUNE_CAP and _schemas_match(
                 _snapshot_read(spark, target_dir, base_dir).schema,
                 batch_df.schema):
@@ -2003,19 +1871,14 @@ def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
             # old-schema stage verbatim) — a schema-evolving overwrite
             # must stay unclassifiable. Lazy schema, no Spark job.
             from .partitioning import partition_dir_of
-            entry["touched_partitions"] = sorted(
+            fields["touched_partitions"] = sorted(
                 partition_dir_of(dict(zip(parts, t))) for t in replaced)
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "applied-after-retry" if retried else "applied"
-        retried = True
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"overwrite commit for version {batch_id} lost {max_retries} "
-        f"consecutive CAS races — livelocked writer set?")
+        return fields
+
+    return _commit_version(
+        target_dir, "overwrite", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        exhausted=_livelock("overwrite", batch_id, max_retries))
 
 
 def _merge_result(snapshot, source, key_cols: list[str],
@@ -2222,16 +2085,10 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
     hits 1 GB of keys rewrites ~1 GB, not the table. Schema-evolving
     merges (source-only or retyped columns) fall back to the full
     rewrite, since linked files can't be evolved in place."""
+    import functools
     import os
-    import shutil
-    import uuid
 
     from pyspark.sql import functions as F
-
-    from ..config import (incremental_commit_min_bytes,
-                          incremental_commits_enabled)
-    from ..fsutil import cas_backoff, try_commit
-    from .index import _input_vanished
 
     # ``source_unique=True`` is the caller's declaration that the
     # source has at most one row per key BY CONSTRUCTION (a keep-latest
@@ -2326,182 +2183,124 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
     # INSERTed row's partition (parts ⊆ key, and SET maps are refused
     # on key columns), so the claim is exact for the incremental path.
     # Lazy: full-rewrite merges never pay the collect.
-    _scope_cache: list = []
+    _scope = functools.cache(
+        lambda: _delta_partition_scope(source, target_dir, key_cols))
 
-    def _scope():
-        if not _scope_cache:
-            _scope_cache.append(
-                _delta_partition_scope(source, target_dir, key_cols))
-        return _scope_cache[0]
-
-    retried = False
-    for _attempt in range(max_retries):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if batch_id in applied:
-            if commits:
-                _publish_commit(target_dir, versions_root, commits,
-                                keep_versions)
-            return "replayed"
-        base = commits[-1]["version_name"] if commits else None
-        seq = commits[-1]["seq"] + 1 if commits else 0
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        reuse_stats = None
+    def stage(commits, stage_dir):
+        fields: dict = {}
         ident_hwm = None
         ident_carried: list[str] = []
-        try:
-            if base is None:
-                # MERGE into an empty table: only the INSERT clause
-                # can produce rows
-                ins = not_matched_insert
-                if ins is None or ins is False:
-                    merged = source.limit(0)
-                else:
-                    c = (F.expr(ins) if isinstance(ins, str)
-                         else F.lit(True) if ins is True else ins)
-                    merged = source.alias("s").filter(c)
-                merged = merged.drop(*source_meta_cols)
-                merged = _apply_defaults(merged, merge_defaults)
-                merged, ident_hwm = fill_identity(merged, commits)
-                _staged_write(merged, target_dir,
-                              os.path.join(versions_root, stage))
+        if not commits:
+            # MERGE into an empty table: only the INSERT clause
+            # can produce rows
+            ins = not_matched_insert
+            if ins is None or ins is False:
+                merged = source.limit(0)
             else:
-                base_dir = os.path.join(versions_root, base)
-                snapshot = _snapshot_read(spark, target_dir, base_dir)
-                t_types = {f.name: f.dataType
-                           for f in snapshot.schema.fields}
-                s_types = {f.name: f.dataType
-                           for f in source.schema.fields
-                           if f.name not in set(source_meta_cols)}
-                bad_set = sorted(set_cols - set(snapshot.columns))
-                if bad_set:
-                    raise ValueError(
-                        f"MERGE SET on column(s) {bad_set} absent from "
-                        f"the table (columns: {snapshot.columns}) — a "
-                        f"SET map never adds columns; evolve the "
-                        f"schema with UPDATE SET * or an upsert first")
-                # incremental reuse needs the merge to neither evolve
-                # the schema (source-only columns) nor widen a shared
-                # column's type — either would leave linked files on a
-                # schema the rewritten files no longer share; meta
-                # columns never reach the target, so they don't count.
-                # NOT MATCHED BY SOURCE clauses can hit ANY target row,
-                # so the touched-file fast path is semantically
-                # unavailable (Delta pays the same full-target scan).
-                ins_on = not (not_matched_insert is None
-                              or not_matched_insert is False)
-                if matched_update_set is not None and not ins_on:
-                    # SET-map assignments cast to target types and no
-                    # INSERT can land source columns: the staged schema
-                    # is provably the target schema
-                    no_evolution = True
-                else:
-                    no_evolution = all(
-                        c in t_types and t_types[c] == s_types[c]
-                        for c in s_types)
-                clause_kwargs = dict(
-                    source_meta_cols=source_meta_cols,
-                    insert_defaults=merge_defaults,
-                    matched_update_set=matched_update_set,
-                    not_matched_by_source_update=(
-                        not_matched_by_source_update),
-                    not_matched_by_source_set=not_matched_by_source_set,
-                    not_matched_by_source_delete=(
-                        not_matched_by_source_delete))
-                if (incremental_commits_enabled() and no_evolution
-                        and not has_nmbs
-                        and _data_file_bytes(base_dir)
-                        >= _min_bytes_cutoff(incremental_min_bytes)):
-                    touched = _touched_files_by_keys(
-                        spark, base_dir, source, key_cols, target_dir,
-                        part_tuples=_scope()[0])
-                    kept = [f for f in _snapshot_data_files(base_dir)
-                            if f not in touched]
-                    sub = (_snapshot_read(spark, target_dir, base_dir,
-                                          files=sorted(touched))
-                           if touched else snapshot.limit(0))
-                    merged = _merge_result(sub, source, key_cols,
-                                           matched_update, matched_delete,
-                                           not_matched_insert,
-                                           **clause_kwargs)
-                    if cons and (set_cols or nn_absent_defaulted):
-                        # SET maps (and defaulted NOT NULL columns the
-                        # source omits) produce post-images the
-                        # source-row validation can't see; the merged
-                        # frame is touched-data-sized here
-                        _validate_constraints(merged, cons,
-                                              "the MERGE post-image")
-                    merged, ident_hwm = fill_identity(merged, commits)
-                    _stage_with_reuse(base_dir,
-                                      os.path.join(versions_root, stage),
-                                      kept, merged,
-                                      target_dir=target_dir)
-                    reuse_stats = (len(touched), len(kept))
-                    ident_carried = kept
-                else:
-                    merged = _merge_result(snapshot, source, key_cols,
-                                           matched_update, matched_delete,
-                                           not_matched_insert,
-                                           **clause_kwargs)
-                    if cons and (set_cols or has_nmbs
-                                 or nn_absent_defaulted):
-                        _validate_constraints(merged, cons,
-                                              "the MERGE post-image")
-                    merged, ident_hwm = fill_identity(merged, commits)
-                    # full rewrite: output ≈ base snapshot — size the
-                    # staging shuffle to the base's known bytes
-                    _staged_write(merged, target_dir,
-                                  os.path.join(versions_root, stage),
-                                  input_bytes_hint=(
-                                      2 * _data_file_bytes(base_dir)))
-        except Exception as exc:
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            now_seq = now[-1]["seq"] if now else -1
-            base_seq = commits[-1]["seq"] if commits else -1
-            # vanished-base signature: a Spark scan error on the
-            # pruned layout, OR a Python ENOENT from the hard-link pass
-            # (_stage_with_reuse links base files by absolute path; a
-            # concurrent publish can retire them mid-link). Either is a
-            # lost race IFF the journal moved; journal unmoved means a
-            # real error and propagates.
-            if now_seq != base_seq and (
-                    _input_vanished(exc)
-                    or isinstance(exc, FileNotFoundError)):
-                retried = True
-                continue
-            raise
-        perm = f"v{batch_id}"
-        try:
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        except OSError:
-            perm = f"v{batch_id}_{writer}_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(versions_root, stage),
-                      os.path.join(versions_root, perm))
-        entry = {"op": "merge", "version": batch_id,
-                 "version_name": perm, "writer": writer}
-        if reuse_stats is not None:
-            entry["files_rewritten"], entry["files_reused"] = reuse_stats
-            if _scope()[1] is not None:
-                entry["touched_partitions"] = _scope()[1]
+                c = (F.expr(ins) if isinstance(ins, str)
+                     else F.lit(True) if ins is True else ins)
+                merged = source.alias("s").filter(c)
+            merged = merged.drop(*source_meta_cols)
+            merged = _apply_defaults(merged, merge_defaults)
+            merged, ident_hwm = fill_identity(merged, commits)
+            _staged_write(merged, target_dir, stage_dir)
+        else:
+            base_dir = os.path.join(versions_root,
+                                    commits[-1]["version_name"])
+            snapshot = _snapshot_read(spark, target_dir, base_dir)
+            t_types = {f.name: f.dataType
+                       for f in snapshot.schema.fields}
+            s_types = {f.name: f.dataType
+                       for f in source.schema.fields
+                       if f.name not in set(source_meta_cols)}
+            bad_set = sorted(set_cols - set(snapshot.columns))
+            if bad_set:
+                raise ValueError(
+                    f"MERGE SET on column(s) {bad_set} absent from "
+                    f"the table (columns: {snapshot.columns}) — a "
+                    f"SET map never adds columns; evolve the "
+                    f"schema with UPDATE SET * or an upsert first")
+            # incremental reuse needs the merge to neither evolve
+            # the schema (source-only columns) nor widen a shared
+            # column's type — either would leave linked files on a
+            # schema the rewritten files no longer share; meta
+            # columns never reach the target, so they don't count.
+            # NOT MATCHED BY SOURCE clauses can hit ANY target row,
+            # so the touched-file fast path is semantically
+            # unavailable (Delta pays the same full-target scan).
+            ins_on = not (not_matched_insert is None
+                          or not_matched_insert is False)
+            if matched_update_set is not None and not ins_on:
+                # SET-map assignments cast to target types and no
+                # INSERT can land source columns: the staged schema
+                # is provably the target schema
+                no_evolution = True
+            else:
+                no_evolution = all(
+                    c in t_types and t_types[c] == s_types[c]
+                    for c in s_types)
+            clause_kwargs = dict(
+                source_meta_cols=source_meta_cols,
+                insert_defaults=merge_defaults,
+                matched_update_set=matched_update_set,
+                not_matched_by_source_update=(
+                    not_matched_by_source_update),
+                not_matched_by_source_set=not_matched_by_source_set,
+                not_matched_by_source_delete=(
+                    not_matched_by_source_delete))
+            if (no_evolution and not has_nmbs
+                    and _data_file_bytes(base_dir)
+                    >= _min_bytes_cutoff(incremental_min_bytes)):
+                touched, kept = _touched_files_by_keys(
+                    spark, base_dir, source, key_cols, target_dir,
+                    part_tuples=_scope()[0])
+                sub = (_snapshot_read(spark, target_dir, base_dir,
+                                      files=sorted(touched))
+                       if touched else snapshot.limit(0))
+                merged = _merge_result(sub, source, key_cols,
+                                       matched_update, matched_delete,
+                                       not_matched_insert,
+                                       **clause_kwargs)
+                if cons and (set_cols or nn_absent_defaulted):
+                    # SET maps (and defaulted NOT NULL columns the
+                    # source omits) produce post-images the
+                    # source-row validation can't see; the merged
+                    # frame is touched-data-sized here
+                    _validate_constraints(merged, cons,
+                                          "the MERGE post-image")
+                merged, ident_hwm = fill_identity(merged, commits)
+                _stage_with_reuse(base_dir, stage_dir, kept, merged,
+                                  target_dir=target_dir)
+                fields["files_rewritten"] = len(touched)
+                fields["files_reused"] = len(kept)
+                if _scope()[1] is not None:
+                    fields["touched_partitions"] = _scope()[1]
+                ident_carried = kept
+            else:
+                merged = _merge_result(snapshot, source, key_cols,
+                                       matched_update, matched_delete,
+                                       not_matched_insert,
+                                       **clause_kwargs)
+                if cons and (set_cols or has_nmbs
+                             or nn_absent_defaulted):
+                    _validate_constraints(merged, cons,
+                                          "the MERGE post-image")
+                merged, ident_hwm = fill_identity(merged, commits)
+                # full rewrite: output ≈ base snapshot — size the
+                # staging shuffle to the base's known bytes
+                _staged_write(merged, target_dir, stage_dir,
+                              input_bytes_hint=(
+                                  2 * _data_file_bytes(base_dir)))
         if ident:
-            entry["identity_hwm"] = _staged_identity_hwm(
-                spark, os.path.join(versions_root, perm), ident,
-                ident_hwm, skip_files=ident_carried)
-        if try_commit(_commits_dir(versions_root), seq, entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return "applied-after-retry" if retried else "applied"
-        retried = True
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"merge commit for version {batch_id} lost {max_retries} "
-        f"consecutive CAS races — livelocked writer set?")
+            fields["identity_hwm"] = _staged_identity_hwm(
+                spark, stage_dir, ident, ident_hwm,
+                skip_files=ident_carried)
+        return fields
+
+    return _commit_version(
+        target_dir, "merge", batch_id, stage, writer=writer,
+        keep_versions=keep_versions, max_retries=max_retries,
+        exhausted=_livelock("merge", batch_id, max_retries))
 
 
 # --- snapshot maintenance: OPTIMIZE / VACUUM / change feed -----------------
@@ -2606,19 +2405,23 @@ def _zorder_value(df, cols: list[str], bits: int):
     return _interleave_bits([bucket_rank(c) for c in cols], bits)
 
 
-def _data_file_bytes(path: str) -> int:
+def _data_file_bytes(path: str, skip=()) -> int:
     """Total bytes of a snapshot's LOGICAL data files (markers and
     hidden files excluded; manifest-carried files resolved to their
     physical owners) — the local-fs analog of the table format's
-    per-snapshot size statistics that drive OPTIMIZE target sizing."""
+    per-snapshot size statistics that drive OPTIMIZE target sizing.
+    ``skip`` names relative paths left out of the sum."""
     import os
 
     from .carry import read_carry, resolve_data_file, versions_root_of
 
     carry = read_carry(path)
     vroot = versions_root_of(path) if carry else None
+    skip = set(skip)
     total = 0
     for f in _snapshot_data_files(path):
+        if f in skip:
+            continue
         try:
             total += os.path.getsize(
                 resolve_data_file(path, f, carry, vroot))
@@ -2686,11 +2489,7 @@ def optimize_upsert_target(spark, target_dir: str,
     small-file debt to pay."""
     import math
     import os
-    import shutil
-    import uuid
 
-    from ..fsutil import cas_backoff, try_commit
-    from .index import _input_vanished
     from .partitioning import table_partitioning
 
     if min_file_bytes is not None and zorder_by:
@@ -2700,126 +2499,56 @@ def optimize_upsert_target(spark, target_dir: str,
             "zorder_by")
     from .partitioning import check_table_writable
     check_table_writable(target_dir)
-    versions_root = target_dir + "_versions"
-    for _attempt in range(24):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, _ = _journal_state(versions_root)
+
+    def stage(commits, stage_dir):
         if not commits:
             return None
-        head = commits[-1]
-        src = os.path.join(versions_root, head["version_name"])
-        if _pre_stage_hook is not None:
-            _pre_stage_hook(_attempt, head["version_name"])
-        stage = f"_stage_{writer}_{uuid.uuid4().hex[:8]}"
-        reuse_stats = None
-        try:
-            if min_file_bytes is not None:
-                # incremental compaction: bin-pack ONLY the small-file
-                # debt, per partition directory; carry the rest by link
-                from .carry import read_carry, resolve_data_file
-                src_carry = read_carry(src)
-                small_by_dir: dict[str, list[str]] = {}
-                sizes: dict[str, int] = {}
-                kept: list[str] = []
-                for f in _snapshot_data_files(src):
-                    try:
-                        sz = os.path.getsize(
-                            resolve_data_file(src, f, src_carry))
-                    except OSError:
-                        raise FileNotFoundError(src)  # pruned mid-walk
-                    if sz < min_file_bytes:
-                        small_by_dir.setdefault(
-                            os.path.dirname(f), []).append(f)
-                        sizes[f] = sz
-                    else:
-                        kept.append(f)
-                to_pack: list[str] = []
-                for fs in small_by_dir.values():
-                    if len(fs) >= 2:
-                        to_pack.extend(fs)
-                    else:
-                        kept.extend(fs)     # a lone small file: no bin
-                if not to_pack:
-                    return None             # no small-file debt
-                pack_bytes = sum(sizes[f] for f in to_pack)
-                n_parts = max(1, math.ceil(
-                    pack_bytes / max(target_file_bytes, 1)))
-                sub = _snapshot_read(spark, target_dir, src,
-                                     files=sorted(to_pack))
-                parts = table_partitioning(target_dir)
-                # hash-cluster on the partition columns so each Hive
-                # partition's small files collapse into ~one output
-                # file instead of splintering across every task
-                rewritten = (sub.repartition(n_parts, *parts)
-                             if parts else sub.repartition(n_parts))
-                _stage_with_reuse(src,
-                                  os.path.join(versions_root, stage),
-                                  kept, rewritten, target_dir=target_dir)
-                reuse_stats = (len(to_pack), len(kept))
-                manifest_cols = []          # incremental runs keep the
-                #                             layout; stats manifests
-                #                             are the full rewrite's job
-            else:
-                n_parts = max(1, math.ceil(
-                    _data_file_bytes(src) / max(target_file_bytes, 1)))
-                snap = _snapshot_read(spark, target_dir, src)
-                if zorder_by:
-                    # OPTIMIZE ZORDER: range-partition + sort on the
-                    # Morton z-value so every output file is narrow in
-                    # EVERY zorder dimension — parquet min/max stats
-                    # then prune scans filtered on ANY of them, where a
-                    # plain sort prunes only the leading key. Bit depth
-                    # scales with the rewrite width: granularity just
-                    # has to exceed the file count (2 extra bits of
-                    # headroom), capped at 8 bits/dim so the cuts array
-                    # stays tiny.
-                    bits = min(8, max(4, n_parts.bit_length() + 2))
-                    rewritten = (
-                        snap.withColumn("_z", _zorder_value(
-                            snap, zorder_by, bits))
-                        .repartitionByRange(n_parts, "_z")
-                        .sortWithinPartitions("_z")
-                        .drop("_z"))
+        src = os.path.join(target_dir + "_versions",
+                           commits[-1]["version_name"])
+        fields: dict = {"zorder": list(zorder_by)} if zorder_by else {}
+        if min_file_bytes is not None:
+            # incremental compaction: bin-pack ONLY the small-file
+            # debt, per partition directory; carry the rest by link
+            from .carry import read_carry, resolve_data_file
+            src_carry = read_carry(src)
+            small_by_dir: dict[str, list[str]] = {}
+            sizes: dict[str, int] = {}
+            kept: list[str] = []
+            for f in _snapshot_data_files(src):
+                try:
+                    sz = os.path.getsize(
+                        resolve_data_file(src, f, src_carry))
+                except OSError:
+                    raise FileNotFoundError(src)  # pruned mid-walk
+                if sz < min_file_bytes:
+                    small_by_dir.setdefault(
+                        os.path.dirname(f), []).append(f)
+                    sizes[f] = sz
                 else:
-                    rewritten = snap.repartition(n_parts)
-                _staged_write(rewritten, target_dir,
-                              os.path.join(versions_root, stage),
-                              max_records_per_file=max_records_per_file)
-                manifest_cols = (list(zorder_by or [])
-                                 if stats_cols is None
-                                 else list(stats_cols))
-            if manifest_cols:
-                from .skipping import write_stats_manifest
-                # partition columns in the manifest get exact stats
-                # from their Hive paths (min = max = value), so one
-                # manifest prunes on partition AND data columns
-                write_stats_manifest(
-                    os.path.join(versions_root, stage), manifest_cols,
-                    spark=spark, parts=table_partitioning(target_dir))
-        except Exception as exc:
-            # Same stale-input window as the upsert merge: concurrent
-            # commits can retire the head we are compacting and prune it
-            # under the running rewrite scan. Journal moved past our
-            # head → routine lost race, re-read and compact the new
-            # head; journal unmoved → real error, propagate.
-            shutil.rmtree(os.path.join(versions_root, stage),
-                          ignore_errors=True)
-            now, _ = _journal_state(versions_root)
-            if (now[-1]["seq"] if now else -1) != head["seq"] \
-                    and (_input_vanished(exc)
-                         or isinstance(exc, FileNotFoundError)):
-                continue
-            raise
-        perm = f"v{head['version']}_compact_{uuid.uuid4().hex[:8]}"
-        os.rename(os.path.join(versions_root, stage),
-                  os.path.join(versions_root, perm))
-        entry = {"op": "optimize", "version": head["version"],
-                 "version_name": perm, "writer": writer}
-        if zorder_by:
-            entry["zorder"] = list(zorder_by)
-        if reuse_stats is not None:
-            entry["files_rewritten"], entry["files_reused"] = reuse_stats
+                    kept.append(f)
+            to_pack: list[str] = []
+            for fs in small_by_dir.values():
+                if len(fs) >= 2:
+                    to_pack.extend(fs)
+                else:
+                    kept.extend(fs)     # a lone small file: no bin
+            if not to_pack:
+                return None             # no small-file debt
+            pack_bytes = sum(sizes[f] for f in to_pack)
+            n_parts = max(1, math.ceil(
+                pack_bytes / max(target_file_bytes, 1)))
+            sub = _snapshot_read(spark, target_dir, src,
+                                 files=sorted(to_pack))
+            parts = table_partitioning(target_dir)
+            # hash-cluster on the partition columns so each Hive
+            # partition's small files collapse into ~one output
+            # file instead of splintering across every task
+            rewritten = (sub.repartition(n_parts, *parts)
+                         if parts else sub.repartition(n_parts))
+            _stage_with_reuse(src, stage_dir, kept, rewritten,
+                              target_dir=target_dir)
+            fields["files_rewritten"] = len(to_pack)
+            fields["files_reused"] = len(kept)
             # incremental compaction packs per partition dir and the
             # repartition keys on the partition columns, so rewrites
             # never leave the packed partitions — exact scope claim for
@@ -2828,16 +2557,52 @@ def optimize_upsert_target(spark, target_dir: str,
             # re-merging)
             claim = _touched_partition_claim(target_dir, to_pack)
             if claim is not None:
-                entry["touched_partitions"] = claim
-        if try_commit(_commits_dir(versions_root), head["seq"] + 1,
-                      entry):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions=keep_versions)
-            return perm
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    return None
+                fields["touched_partitions"] = claim
+            # incremental runs keep the layout; stats manifests are
+            # the full rewrite's job
+            return fields
+        n_parts = max(1, math.ceil(
+            _data_file_bytes(src) / max(target_file_bytes, 1)))
+        snap = _snapshot_read(spark, target_dir, src)
+        if zorder_by:
+            # OPTIMIZE ZORDER: range-partition + sort on the
+            # Morton z-value so every output file is narrow in
+            # EVERY zorder dimension — parquet min/max stats
+            # then prune scans filtered on ANY of them, where a
+            # plain sort prunes only the leading key. Bit depth
+            # scales with the rewrite width: granularity just
+            # has to exceed the file count (2 extra bits of
+            # headroom), capped at 8 bits/dim so the cuts array
+            # stays tiny.
+            bits = min(8, max(4, n_parts.bit_length() + 2))
+            rewritten = (
+                snap.withColumn("_z", _zorder_value(
+                    snap, zorder_by, bits))
+                .repartitionByRange(n_parts, "_z")
+                .sortWithinPartitions("_z")
+                .drop("_z"))
+        else:
+            rewritten = snap.repartition(n_parts)
+        _staged_write(rewritten, target_dir, stage_dir,
+                      max_records_per_file=max_records_per_file)
+        manifest_cols = (list(zorder_by or []) if stats_cols is None
+                         else list(stats_cols))
+        if manifest_cols:
+            from .skipping import write_stats_manifest
+            # partition columns in the manifest get exact stats
+            # from their Hive paths (min = max = value), so one
+            # manifest prunes on partition AND data columns
+            write_stats_manifest(
+                stage_dir, manifest_cols,
+                spark=spark, parts=table_partitioning(target_dir))
+        return fields
+
+    # claims the head's version; a lost race re-reads the journal and
+    # compacts the new head — the stale compaction is simply discarded
+    return _commit_version(
+        target_dir, "optimize", None, stage, writer=writer,
+        keep_versions=keep_versions, tag="compact", exhausted=None,
+        _pre_stage_hook=_pre_stage_hook)
 
 
 # Default VACUUM retention: a staged-but-not-yet-committed snapshot is
@@ -2903,37 +2668,32 @@ def restore_upsert_target(spark, target_dir: str, version: int,
     ``version`` is no longer retained (same contract as time-travel
     reads: VACUUM'd history cannot be restored) or if ``as_version``
     is already applied (restore ids are exactly-once like batch ids)."""
-    import os
     import shutil
-    import uuid
-
-    from ..fsutil import cas_backoff, try_commit
 
     from .partitioning import check_table_writable
     check_table_writable(target_dir)
     versions_root = target_dir + "_versions"
-    for _attempt in range(24):
-        if _attempt:
-            cas_backoff(_attempt)
-        commits, applied = _journal_state(versions_root)
-        if as_version in applied:
-            # A racing restore of the SAME (version, as_version) that
-            # just won the CAS is an exactly-once replay, not a
-            # conflict — the table already sits in exactly the
-            # requested state, so mirror upsert_commit_batch's
-            # "replayed" no-op (repairing publication if the winner
-            # crashed pre-publish). Only an as_version claimed by a
-            # DIFFERENT source commit is a genuine id conflict.
-            same = [c for c in commits
-                    if c.get("version") == as_version
-                    and c.get("restored_from") == version]
-            if same:
-                _publish_commit(target_dir, versions_root, commits,
-                                keep_versions)
-                return same[-1]["version_name"]
-            raise ValueError(
-                f"as_version {as_version} already applied by a "
-                f"different commit (applied={sorted(applied)})")
+
+    def replay(commits, applied):
+        # A racing restore of the SAME (version, as_version) that just
+        # won the CAS is an exactly-once replay, not a conflict — the
+        # table already sits in exactly the requested state, so mirror
+        # upsert_commit_batch's "replayed" no-op (the driver repairs
+        # publication if the winner crashed pre-publish). Only an
+        # as_version claimed by a DIFFERENT source commit is a genuine
+        # id conflict.
+        if as_version not in applied:
+            return None
+        same = [c for c in commits
+                if c.get("version") == as_version
+                and c.get("restored_from") == version]
+        if same:
+            return same[-1]["version_name"]
+        raise ValueError(
+            f"as_version {as_version} already applied by a "
+            f"different commit (applied={sorted(applied)})")
+
+    def stage(commits, stage_dir):
         src = _resolve_version_dir(versions_root, version)
         if src is None:
             raise FileNotFoundError(
@@ -2978,30 +2738,16 @@ def restore_upsert_target(spark, target_dir: str, version: int,
                         f"AS {gexpr}: first offending row "
                         f"{bad[0].asDict()!r} (pass "
                         f"enforce_constraints=False to restore anyway)")
-        seq = commits[-1]["seq"] + 1 if commits else 0
-        stage = os.path.join(versions_root,
-                             f"_stage_{writer}_{uuid.uuid4().hex[:8]}")
-        try:
-            shutil.copytree(src, stage)
-        except (FileNotFoundError, shutil.Error):
-            # source pruned mid-copy by a concurrent publish: re-check
-            # retention on the next attempt (raises cleanly if gone)
-            shutil.rmtree(stage, ignore_errors=True)
-            continue
-        perm = f"v{as_version}_restore_{uuid.uuid4().hex[:8]}"
-        os.rename(stage, os.path.join(versions_root, perm))
-        if try_commit(_commits_dir(versions_root), seq,
-                      {"op": "upsert", "version": as_version,
-                       "version_name": perm, "writer": writer,
-                       "restored_from": version}):
-            commits, _ = _journal_state(versions_root)
-            _publish_commit(target_dir, versions_root, commits,
-                            keep_versions)
-            return perm
-        shutil.rmtree(os.path.join(versions_root, perm),
-                      ignore_errors=True)
-    raise RuntimeError(
-        f"restore of version {version} lost 24 consecutive CAS races")
+        # a source pruned mid-copy by a concurrent publish is a lost
+        # race (the driver re-checks retention on the next attempt)
+        shutil.copytree(src, stage_dir)
+        return {"restored_from": version}
+
+    return _commit_version(
+        target_dir, "upsert", as_version, stage, writer=writer,
+        keep_versions=keep_versions, tag="restore", replay=replay,
+        exhausted=f"restore of version {version} lost 24 consecutive "
+                  f"CAS races")
 
 
 VACUUM_RETENTION_FLOOR_S = 300.0
@@ -3997,10 +3743,7 @@ def clone_upsert_table(src_target: str, dst_target: str,
             dst_f = os.path.join(stage, f) if rel == "." \
                 else os.path.join(stage, rel, f)
             os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-            try:
-                os.link(src_f, dst_f)
-            except OSError:
-                shutil.copy2(src_f, dst_f)
+            _link_or_copy(src_f, dst_f)
     for relname in src_carry:
         # manifest-carried files of the source head: cross-table
         # pointers can't work (separate versions roots + retention
@@ -4011,11 +3754,8 @@ def clone_upsert_table(src_target: str, dst_target: str,
             continue                     # physically present too
         if os.path.dirname(relname):
             os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-        src_f = resolve_data_file(src_dir, relname, src_carry)
-        try:
-            os.link(src_f, dst_f)
-        except OSError:
-            shutil.copy2(src_f, dst_f)
+        _link_or_copy(resolve_data_file(src_dir, relname, src_carry),
+                      dst_f)
     perm = f"v{head['version']}_clone_{uuid.uuid4().hex[:8]}"
     os.rename(stage, os.path.join(dst_root, perm))
     entry = {"op": "upsert", "version": head["version"],
@@ -4032,37 +3772,23 @@ def clone_upsert_table(src_target: str, dst_target: str,
         shutil.rmtree(os.path.join(dst_root, perm), ignore_errors=True)
         raise FileExistsError(
             f"clone destination {dst_target} was created concurrently")
-    src_cons = table_check_constraints(src_target)
-    if src_cons:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_constraints_path(dst_target), src_cons)
-    src_gens = table_generated_columns(src_target)
-    if src_gens:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_generated_path(dst_target), src_gens)
-    src_ident = table_identity_column(src_target)
-    if src_ident:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_identity_path(dst_target), src_ident)
-    from .partitioning import _partitioning_path, table_partitioning
-    src_parts = table_partitioning(src_target)
-    if src_parts:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_partitioning_path(dst_target), src_parts)
+    from ..fsutil import atomic_write_json
     from .colmap import _colmap_path, _has_mapping, table_column_mapping
+    from .partitioning import (_partitioning_path, _protocol_path,
+                               _read_protocol, table_partitioning)
     src_map = table_column_mapping(src_target)
-    if _has_mapping(src_map):
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_colmap_path(dst_target), src_map)
-    src_defaults = table_column_defaults(src_target)
-    if src_defaults:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_defaults_path(dst_target), src_defaults)
-    from .partitioning import _protocol_path, _read_protocol
     src_proto = _read_protocol(src_target)
-    if src_proto["features"] or src_proto["writer_features"]:
-        from ..fsutil import atomic_write_json
-        atomic_write_json(_protocol_path(dst_target), src_proto)
+    for meta, path_of in (
+            (table_check_constraints(src_target), _constraints_path),
+            (table_generated_columns(src_target), _generated_path),
+            (table_identity_column(src_target), _identity_path),
+            (table_partitioning(src_target), _partitioning_path),
+            (_has_mapping(src_map) and src_map, _colmap_path),
+            (table_column_defaults(src_target), _defaults_path),
+            ((src_proto["features"] or src_proto["writer_features"])
+             and src_proto, _protocol_path)):
+        if meta:
+            atomic_write_json(path_of(dst_target), meta)
     cms, _ = _journal_state(dst_root)
     _publish_commit(dst_target, dst_root, cms, keep_versions=2)
     return perm

@@ -82,14 +82,11 @@ def test_protobuf_sdk_path_env_extendable(monkeypatch, tmp_path):
 
 
 def test_incremental_commit_knobs(monkeypatch):
-    from house_price_etl_pipeline_spark.config import (
-        incremental_commit_min_bytes, incremental_commits_enabled)
+    from house_price_etl_pipeline_spark.config import \
+        incremental_commit_min_bytes
 
-    assert incremental_commits_enabled() is True
     assert incremental_commit_min_bytes() == 64 * 1024 * 1024
-    monkeypatch.setenv("SPARK_GRAFT_INCREMENTAL_COMMITS", "0")
     monkeypatch.setenv("SPARK_GRAFT_INCREMENTAL_MIN_BYTES", "1024")
-    assert incremental_commits_enabled() is False
     assert incremental_commit_min_bytes() == 1024
 
 
@@ -109,3 +106,23 @@ def test_stage_width_scales_with_input_bytes(monkeypatch, spark):
     assert _stage_width(spark, 10 << 40) == cap
     monkeypatch.setenv("SPARK_GRAFT_STAGE_PARTITION_BYTES", "1024")
     assert _stage_width(spark, 4096) == min(4, cap)
+
+
+def test_staging_conf_unsets_a_width_the_session_never_set(spark):
+    """A session that never set ``spark.sql.shuffle.partitions`` must
+    read it as unset again after a staged write: restoring "nothing"
+    by skipping the restore would leave the delta-scaled width (1 for a
+    tiny input) in the session for every later query."""
+    from house_price_etl_pipeline_spark.streaming.ingest import \
+        _staging_conf
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        assert spark.conf.get(key, None) is None
+        with _staging_conf(spark, input_bytes_hint=1):
+            assert spark.conf.get(key) == "1"
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, width)

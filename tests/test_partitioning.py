@@ -1345,3 +1345,102 @@ def test_string_partition_pruning_survives_sentinel_decode(spark,
                         keep_versions=8, incremental_min_bytes=0)
     got = {r.k: r.tag for r in read_upsert_version(spark, s).collect()}
     assert got == {0: HIVE_DEFAULT_PARTITION, 1: "plain", 2: None}
+
+
+# Each commit op below, run against the same 40-row table; ``expect``
+# maps the pre-op rows {(k, bucket): v} to the op's serial result.
+_LOST_CAS_OPS = {
+    "delete": (
+        lambda spark, t: upsert_delete_where(
+            spark, t, 60, "k < 5", keep_versions=16,
+            incremental_min_bytes=0),
+        lambda rows: {kb: v for kb, v in rows.items() if kb[0] >= 5}),
+    "update": (
+        lambda spark, t: upsert_update_where(
+            spark, t, 60, "k < 5", {"v": "-1"}, key_cols=["k", "bucket"],
+            keep_versions=16, incremental_min_bytes=0),
+        lambda rows: {kb: (-1 if kb[0] < 5 else v)
+                      for kb, v in rows.items()}),
+    "merge": (
+        lambda spark, t: upsert_merge_into(
+            spark, t, 60, spark.createDataFrame(
+                [(5, 1, 777), (200, 0, 777)],
+                "k bigint, bucket bigint, v bigint"),
+            ["k", "bucket"], keep_versions=16, incremental_min_bytes=0),
+        lambda rows: {**rows, (5, 1): 777, (200, 0): 777}),
+    "drop": (
+        lambda spark, t: upsert_drop_partitions(
+            spark, t, 60, "bucket = 3", keep_versions=16),
+        lambda rows: {kb: v for kb, v in rows.items() if kb[1] != 3}),
+    "overwrite": (
+        lambda spark, t: upsert_overwrite_partitions(
+            spark, t, 60, spark.createDataFrame(
+                [(2, 2, 555), (6, 2, 555)],
+                "k bigint, bucket bigint, v bigint"),
+            ["k", "bucket"], keep_versions=16),
+        lambda rows: {**{kb: v for kb, v in rows.items() if kb[1] != 2},
+                      (2, 2): 555, (6, 2): 555}),
+    "optimize": (
+        lambda spark, t: optimize_upsert_target(spark, t, keep_versions=16),
+        lambda rows: rows),
+    "restore": (
+        lambda spark, t: restore_upsert_target(spark, t, 0, 60,
+                                               keep_versions=16),
+        lambda rows: {(k, k % 4): k * 10 for k in range(40)}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOST_CAS_OPS))
+def test_every_commit_op_survives_a_lost_cas(spark, tmp_path, monkeypatch,
+                                             op):
+    """Every commit op retries a lost journal race: on the op's FIRST
+    CAS a competing upsert of other keys claims the slot, so the op
+    must re-read the journal, re-stage on the new head and land after
+    it — journal seqs gapless, head equal to the serial result, and no
+    staged or unjournaled snapshot dir left in ``_versions``."""
+    from house_price_etl_pipeline_spark import fsutil
+
+    t = _mk(spark, tmp_path, n=40)
+    rival = spark.createDataFrame([(100, 0, 5000), (101, 1, 5010)],
+                                  "k bigint, bucket bigint, v bigint")
+    real = fsutil.cas_put_if_absent
+    fired = []
+
+    def rival_first(path, data):
+        if not fired:
+            fired.append(path)   # recursion guard: the rival's own CAS
+            #                      goes straight to the real primitive
+            assert upsert_commit_batch(
+                rival, t, 50, key_cols=["k", "bucket"], order_col="v",
+                keep_versions=16, incremental_min_bytes=0) == "applied"
+        return real(path, data)
+
+    monkeypatch.setattr(fsutil, "cas_put_if_absent", rival_first)
+    run, expect = _LOST_CAS_OPS[op]
+    out = run(spark, t)
+    monkeypatch.setattr(fsutil, "cas_put_if_absent", real)
+
+    assert fired
+    vr = t + "_versions"
+    commits, _ = _journal_state(vr)
+    assert [c["seq"] for c in commits] == list(range(len(commits)))
+    # the rival landed in the op's first slot; the op landed after it
+    assert [c["version"] for c in commits[1:]] == [
+        50, 50 if op == "optimize" else 60]
+    if op == "optimize":
+        assert "_compact_" in out and commits[-1]["version_name"] == out
+    elif op == "restore":
+        assert "_restore_" in out and commits[-1]["version_name"] == out
+    else:
+        assert out == "applied-after-retry"
+
+    rows = {(k, k % 4): k * 10 for k in range(40)}
+    rows.update({(100, 0): 5000, (101, 1): 5010})
+    got = {(r.k, r.bucket): r.v
+           for r in read_upsert_version(spark, t).collect()}
+    assert got == expect(rows)
+
+    names = {c["version_name"] for c in commits}
+    left = os.listdir(vr)
+    assert not [d for d in left if d.startswith("_stage_")]
+    assert {d for d in left if d.startswith("v")} <= names

@@ -1441,12 +1441,13 @@ def test_upsert_optimize_parallel_rewrite(spark, tmp_path):
     ``target_file_bytes`` compacts across >1 task/file, never through a
     single coalesce(1) task; a tiny snapshot still compacts to one."""
     import glob as _glob
+    import math
     import os
 
     from pyspark.sql import functions as F
 
     from house_price_etl_pipeline_spark.streaming.ingest import (
-        optimize_upsert_target, upsert_commit_batch)
+        _data_file_bytes, optimize_upsert_target, upsert_commit_batch)
 
     target = str(tmp_path / "popt_target")
     batch = (spark.range(2000)
@@ -1456,13 +1457,17 @@ def test_upsert_optimize_parallel_rewrite(spark, tmp_path):
     upsert_commit_batch(batch, target, 0, key_cols=["user_id"],
                         order_col="event_id", keep_versions=4)
 
-    # snapshot bytes >> 1-byte target -> many partitions, many files
+    # a target of a quarter of the snapshot's bytes -> one task and one
+    # file per quarter (a 1-byte target would ask for a task per byte)
+    nbytes = _data_file_bytes(os.path.realpath(target))
+    target_file_bytes = nbytes // 4
     perm = optimize_upsert_target(spark, target, keep_versions=4,
-                                  target_file_bytes=1)
+                                  target_file_bytes=target_file_bytes)
     assert perm is not None
     files = _glob.glob(os.path.join(os.path.realpath(target),
                                     "part-*.parquet"))
     assert len(files) > 1
+    assert len(files) == math.ceil(nbytes / target_file_bytes)
     assert spark.read.parquet(target).count() == 500
 
     # huge target -> exactly one output file (small-table case intact)
@@ -3387,23 +3392,25 @@ def test_incremental_schema_evolution_falls_back(spark, tmp_path, monkeypatch):
     assert got == {1: (1, None), 2: (2, None), 3: (3, "x")}
 
 
-def test_incremental_disabled_by_env(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_INCREMENTAL_COMMITS=0 restores the full-rewrite
-    path: same results, no reuse stats, no shared inodes."""
+def test_incremental_disabled_below_size_cutover(spark, tmp_path,
+                                                 monkeypatch):
+    """A base snapshot below the incremental size cutover (here an
+    ``incremental_min_bytes`` no table reaches, overriding an env of 0)
+    takes the full-rewrite path: same results, no reuse stats, no
+    shared inodes."""
     monkeypatch.setenv("SPARK_GRAFT_INCREMENTAL_MIN_BYTES", "0")
     from house_price_etl_pipeline_spark.streaming.ingest import \
         upsert_commit_batch
 
-    monkeypatch.setenv("SPARK_GRAFT_INCREMENTAL_COMMITS", "0")
     target = str(tmp_path / "tbl")
     b0 = spark.createDataFrame(
         [(i, 0, i) for i in range(20)], "k long, ord long, v long")
     b1 = spark.createDataFrame(
         [(i, 1, i + 100) for i in range(5)], "k long, ord long, v long")
     upsert_commit_batch(b0, target, 0, key_cols=["k"], order_col="ord",
-                        keep_versions=8)
+                        keep_versions=8, incremental_min_bytes=1 << 62)
     upsert_commit_batch(b1, target, 1, key_cols=["k"], order_col="ord",
-                        keep_versions=8)
+                        keep_versions=8, incremental_min_bytes=1 << 62)
     ops = {c["version"]: c for c in _journal_entries(target)}
     assert "files_rewritten" not in ops[1]
     assert not _shares_inode(_version_dir(target, 0),
