@@ -36,47 +36,6 @@ def exact_twin_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_EXACT_TWIN", "1") != "0"
 
 
-def carry_mode() -> str:
-    """SPARK_GRAFT_CARRY_MODE (default "link"): how incremental commits
-    carry a base snapshot's untouched data files into the new version.
-    "link" — hard links (copy fallback): every published version dir
-    stays plain-``spark.read.parquet`` readable; the local-FS posture.
-    "manifest" — a ``_CARRY.json`` pointer manifest per version
-    (streaming/carry.py): zero link/copy syscalls per carried file, the
-    object-store posture where reuse is a file-list reference, as in
-    Delta/Iceberg; reads resolve through the engine's snapshot reader.
-    Reading is always mode-independent — the flag governs writes only,
-    so tables survive the flag flipping either way mid-history."""
-    mode = os.environ.get("SPARK_GRAFT_CARRY_MODE", "link")
-    if mode not in ("link", "manifest"):
-        raise ValueError(
-            f"SPARK_GRAFT_CARRY_MODE={mode!r} — expected 'link' or "
-            f"'manifest'")
-    return mode
-
-
-def publish_mode() -> str:
-    """SPARK_GRAFT_PUBLISH_MODE (default "symlink"): how a won commit is
-    published as the table's readable head.
-    "symlink" — atomically re-point a ``target_dir`` symlink at the head
-    snapshot: the local-FS posture, where ``spark.read.parquet(target)``
-    works without the engine.
-    "pointer" — no symlink syscalls at all (object stores have none):
-    publication writes the ``_LATEST.json`` pointer file (Delta's
-    ``_last_checkpoint`` pattern) and engine reads resolve the commit
-    journal's head — Delta's readers-resolve-the-log rule, so a stale
-    or missing pointer can never regress a read.
-    Reading is mode-independent (ingest.resolve_published_snapshot):
-    the link is followed when present, the journal resolves otherwise —
-    tables survive the flag flipping mid-history."""
-    mode = os.environ.get("SPARK_GRAFT_PUBLISH_MODE", "symlink")
-    if mode not in ("symlink", "pointer"):
-        raise ValueError(
-            f"SPARK_GRAFT_PUBLISH_MODE={mode!r} — expected 'symlink' "
-            f"or 'pointer'")
-    return mode
-
-
 def cdf_split_bytes() -> int:
     """SPARK_GRAFT_CDF_SPLIT_BYTES (default 32 MiB): the change-feed
     stream reader sizes each version transition's partition count as

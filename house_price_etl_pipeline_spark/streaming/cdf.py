@@ -74,8 +74,7 @@ CHANGE_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
 # the changed-file name set-difference works identically on flat and
 # PARTITIONED BY tables — a carried hard link keeps its full relative
 # path across versions.
-from .carry import resolve_data_files  # noqa: E402
-from .carry import snapshot_files as _data_files  # noqa: E402
+from .partitioning import _walk_data_files as _data_files  # noqa: E402
 from .partitioning import arrow_to_ddl_type as _arrow_to_ddl_type  # noqa: E402
 from .partitioning import partition_values_of, table_partitioning  # noqa: E402
 
@@ -129,8 +128,7 @@ def _table_columns(target_dir: str) -> list[tuple[str, str]]:
         # schema (partition columns already appended at stage time)
         return [(phys_to_log.get(n, n), t) for n, t in marker
                 if n not in dropped]
-    from .carry import resolve_data_file
-    sch = pq.ParquetFile(resolve_data_file(snap, files[0])).schema_arrow
+    sch = pq.ParquetFile(os.path.join(snap, files[0])).schema_arrow
     cols = [(phys_to_log.get(f.name, f.name), _arrow_to_ddl_type(f.type))
             for f in sch if f.name not in parts and f.name not in dropped]
     cols += list(parts.items())
@@ -156,7 +154,7 @@ def _vals_equal(a, b) -> bool:
 class _VersionDiff(InputPartition):
     def __init__(self, prev_dir, cur_dir, version, key_cols, columns,
                  split, n_splits, old_files=(), new_files=(),
-                 parts=None, phys_of=None, old_paths=(), new_paths=()):
+                 parts=None, phys_of=None):
         self.prev_dir = prev_dir        # None for the initial commit
         self.cur_dir = cur_dir
         self.version = version
@@ -168,12 +166,6 @@ class _VersionDiff(InputPartition):
         self.new_files = list(new_files)   # changed files, cur side
         self.parts = dict(parts or {})  # PARTITIONED BY {col: ddl}
         self.phys_of = dict(phys_of or {})  # column mapping log→phys
-        # absolute physical paths aligned with old/new_files — resolved
-        # DRIVER-side through each snapshot's carry manifest so the
-        # executor read never re-walks manifests (and a manifest-
-        # carried changed file is readable at all)
-        self.old_paths = list(old_paths)
-        self.new_paths = list(new_paths)
 
 
 class UpsertChangesStreamReader(DataSourceStreamReader):
@@ -316,37 +308,34 @@ class UpsertChangesStreamReader(DataSourceStreamReader):
 
         from ..config import cdf_split_bytes
 
-        from .carry import is_pruned_remnant
         for d in (prev_dir, cur_dir):
-            # a partially-pruned retired dir (manifest-carry tombstone)
-            # holds only the files newer versions still pin — diffing
-            # it would fabricate change rows from a PARTIAL file set;
-            # fail like any other past-retention read (Delta's CDC lag
-            # contract: raise, never silently skip or misreport)
-            if d and is_pruned_remnant(d):
+            # a journaled version whose dir retention already removed
+            # would walk as an EMPTY file list — diffing it would
+            # fabricate or drop change rows; fail like any other
+            # past-retention read (Delta's CDC lag contract: raise,
+            # never silently skip or misreport)
+            if d and not os.path.isdir(d):
                 raise RuntimeError(
                     f"change-feed version dir {d} was pruned past "
-                    f"retention (only pinned carry targets remain) — "
-                    f"raise keep_versions on the source to cover this "
-                    f"consumer's lag")
+                    f"retention — raise keep_versions on the source "
+                    f"to cover this consumer's lag")
         prev_files = set(_data_files(prev_dir)) if prev_dir else set()
         cur_files = set(_data_files(cur_dir))
         old_only = sorted(prev_files - cur_files)
         new_only = sorted(cur_files - prev_files)
-        old_paths = (resolve_data_files(prev_dir, old_only)
-                     if prev_dir else [])
-        new_paths = resolve_data_files(cur_dir, new_only)
         if self.n_splits is not None:
             n = self.n_splits
         else:
-            changed = sum(os.path.getsize(p)
-                          for p in old_paths + new_paths)
+            changed = (
+                sum(os.path.getsize(os.path.join(prev_dir, f))
+                    for f in old_only)
+                + sum(os.path.getsize(os.path.join(cur_dir, f))
+                      for f in new_only))
             n = max(1, math.ceil(changed / max(cdf_split_bytes(), 1)))
         return [
             _VersionDiff(prev_dir, cur_dir, version, self.key_cols,
                          self.columns, s, n, old_only, new_only,
-                         parts=self.parts, phys_of=self.phys_of,
-                         old_paths=old_paths, new_paths=new_paths)
+                         parts=self.parts, phys_of=self.phys_of)
             for s in range(n)]
 
     def partitions(self, start: dict, end: dict):
@@ -400,15 +389,9 @@ class UpsertChangesStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def load(d, files, paths):
+        def load(d, files):
             rows = {}
-            # `paths` (absolute, driver-resolved) align with `files`
-            # (snapshot-relative names — the partition-value source);
-            # older checkpointed partitions may predate the paths
-            # fields, so fall back to the in-dir join
-            if len(paths) != len(files):
-                paths = [os.path.join(d, f) for f in files]
-            for f, fpath in zip(files, paths):
+            for f in files:
                 # partition-column values live in the file's relative
                 # path, not its footer — typed from the declaration,
                 # constant per file (the Hive layout contract)
@@ -424,7 +407,7 @@ class UpsertChangesStreamReader(DataSourceStreamReader):
                         return [pvals[c]] * rb.num_rows
                     return [None] * rb.num_rows
 
-                pf = pq.ParquetFile(fpath)
+                pf = pq.ParquetFile(os.path.join(d, f))
                 for rb in pf.iter_batches():
                     names = rb.schema.names
                     kcols = [colvals(rb, names, k) for k in p.key_cols]
@@ -444,9 +427,8 @@ class UpsertChangesStreamReader(DataSourceStreamReader):
                         rows[key] = tuple(cols[c][i] for c in p.columns)
             return rows
 
-        old = (load(p.prev_dir, p.old_files, p.old_paths)
-               if p.prev_dir else {})
-        new = load(p.cur_dir, p.new_files, p.new_paths)
+        old = load(p.prev_dir, p.old_files) if p.prev_dir else {}
+        new = load(p.cur_dir, p.new_files)
         for key, row in new.items():
             if key not in old:
                 yield row + ("insert", p.version)

@@ -87,36 +87,23 @@ def _resolve_version_dir(versions_root: str, version: int) -> str | None:
 
     from ..fsutil import read_commit_journal
 
-    from .carry import is_pruned_remnant
-
     commits = read_commit_journal(_commits_dir(versions_root))
     for c in reversed(commits):
         if c.get("version") == version:
             d = os.path.join(versions_root, c["version_name"])
-            # a partially-pruned remnant (retired dir still holding
-            # files pinned by retained carries) is NOT a snapshot —
-            # resolving it would time-travel into partial data
-            return d if (os.path.isdir(d)
-                         and not is_pruned_remnant(d)) else None
+            return d if os.path.isdir(d) else None
     legacy = os.path.join(versions_root, f"v{version}")
-    return legacy if (os.path.isdir(legacy)
-                      and not is_pruned_remnant(legacy)) else None
+    return legacy if os.path.isdir(legacy) else None
 
 
 def resolve_published_snapshot(target_dir: str) -> str:
     """THE head resolver: the path of the table's published snapshot.
 
-    Symlink publish mode leaves a ``target_dir`` link — follow it (one
+    Publication leaves a ``target_dir`` link — follow it (one
     readlink, the local fast path, and what plain
-    ``spark.read.parquet(target)`` users rely on). Pointer mode (or a
-    link lost to an object-store migration) resolves the COMMIT
-    JOURNAL's head instead — Delta's readers-resolve-the-log rule, so
-    publication lag or a stale pointer can never regress a read; the
-    journal read is O(tail) through its checkpoints. The
-    ``_LATEST.json`` pointer file written at publish (Delta's
-    ``_last_checkpoint`` pattern — on an object store it turns the
-    journal LIST into one GET) is only the last resort here, for
-    journal-less layouts.
+    ``spark.read.parquet(target)`` users rely on). A dangling link
+    (its target pruned or moved away) resolves the COMMIT JOURNAL's
+    head instead — Delta's readers-resolve-the-log rule.
 
     Returns ``target_dir`` unchanged when nothing resolves, preserving
     legacy flat-directory reads and downstream FileNotFound behavior."""
@@ -134,23 +121,14 @@ def resolve_published_snapshot(target_dir: str) -> str:
     # SCALE.md §head-resolution)
     from ..fsutil import journal_head
 
-    from .carry import is_pruned_remnant
     head = journal_head(_commits_dir(versions_root))
     if head is not None:
         # the head entry carries its own version_name: no journal scan
         # (the version->name mapping _resolve_version_dir does is for
         # TIME-TRAVEL reads, where the number is all the caller has)
         d = os.path.join(versions_root, head["version_name"])
-        if os.path.isdir(d) and not is_pruned_remnant(d):
+        if os.path.isdir(d):
             return d
-    try:
-        with open(os.path.join(versions_root, "_LATEST.json")) as f:
-            name = json.load(f)["version_name"]
-        cand = os.path.join(versions_root, name)
-        if os.path.isdir(cand):
-            return cand
-    except (OSError, json.JSONDecodeError, KeyError):
-        pass
     return target_dir
 
 
@@ -172,15 +150,12 @@ def read_upsert_version(spark, target_dir: str,
     versions_root = target_dir + "_versions"
     vdir = _resolve_version_dir(versions_root, version)
     if vdir is None:
-        from ..fsutil import read_commit_journal
-        with open(os.path.join(versions_root, "_POINTER.json")) as f:
-            ptr = json.load(f)
+        commits, applied = _journal_state(versions_root)
         retained = sorted(
-            c["version"]
-            for c in read_commit_journal(_commits_dir(versions_root))
+            c["version"] for c in commits
             if _resolve_version_dir(versions_root, c["version"]) is not None)
         raise FileNotFoundError(
-            f"version {version} not retained (applied={ptr['applied']}, "
+            f"version {version} not retained (applied={sorted(applied)}, "
             f"retained={retained}); raise keep_versions to retain more")
     return _snapshot_read(spark, target_dir, vdir)
 
@@ -254,11 +229,9 @@ def stream_upsert_foreach_batch(stream_df, spark, target_dir: str,
       a ``target_dir`` symlink at it (fsutil.atomic_symlink_swap), so
       ``spark.read.parquet(target_dir)`` always sees one complete
       snapshot — a crash mid-write never corrupts the readable table;
-    - replays are exactly-once: applied batch ids are journaled in an
-      atomically-written pointer file AFTER the flip; a re-delivered
-      batch id is a no-op, and the crash window between flip and journal
-      is closed by detecting that the current snapshot already is
-      ``v{batch_id}``.
+    - replays are exactly-once: applied batch ids are read from the
+      commit journal; a re-delivered batch id is a no-op that also
+      repairs the link if a crash landed between commit and flip.
 
     Multi-writer safety (VERDICT r4 item 2): the commit itself is an
     optimistic CAS on a sequence-numbered journal (``_commits/``,
@@ -287,7 +260,7 @@ def stream_upsert_foreach_batch(stream_df, spark, target_dir: str,
 
 # journal ops that introduce a NEW table version (OPTIMIZE rewrites an
 # existing version in place and shares its number, so it is excluded
-# from exactly-once replay detection and the applied-versions pointer)
+# from exactly-once replay detection)
 _VERSIONING_OPS = ("upsert", "delete", "update", "merge", "overwrite")
 
 
@@ -343,9 +316,8 @@ def _publish_commit(target_dir: str, versions_root: str,
                     commits: list[dict], keep_versions: int,
                     _pre_swap_hook=None) -> None:
     """Derived state after a won CAS (or repair after a crash between
-    commit and publication): point the symlink at the journal head,
-    refresh the compat pointer file, prune snapshots beyond retention
-    plus any staging/orphan dirs no retained commit references.
+    commit and publication): point the symlink at the journal head and
+    prune snapshots beyond retention.
 
     Publication itself races (stale-publish regression): a writer that
     won seq N can be preempted between its post-CAS journal re-read and
@@ -358,7 +330,7 @@ def _publish_commit(target_dir: str, versions_root: str,
     journaled head — any commit landing after our final check has its
     own live writer responsible for publishing it. (Delta sidesteps
     this class entirely because its readers resolve the log, not a
-    pointer; the loop is the pointer-file analog of that property.)
+    pointer; the loop is the symlink analog of that property.)
     ``_pre_swap_hook`` is a test seam invoked once per loop iteration
     before the swap so a conflicting publisher can be interleaved
     deterministically."""
@@ -366,8 +338,7 @@ def _publish_commit(target_dir: str, versions_root: str,
     import os
     import shutil
 
-    from ..fsutil import (atomic_symlink_swap, atomic_write_json,
-                          read_commit_journal)
+    from ..fsutil import atomic_symlink_swap, read_commit_journal
 
     log = logging.getLogger(__name__)
     max_rounds = PUBLISH_CONVERGE_MAX_ROUNDS
@@ -380,33 +351,8 @@ def _publish_commit(target_dir: str, versions_root: str,
                         _round, head["seq"], target_dir)
         if _pre_swap_hook is not None:
             _pre_swap_hook(head)
-        from ..config import publish_mode
-        if publish_mode() == "symlink":
-            atomic_symlink_swap(
-                target_dir,
-                os.path.join(versions_root, head["version_name"]))
-        else:
-            # pointer publication: zero symlink syscalls (object stores
-            # have none) — the _LATEST pointer below and the journal
-            # itself ARE the publication. Drop any stale link left by
-            # an earlier symlink-mode publish so the head resolver
-            # can't regress to it after the mode flip.
-            if os.path.islink(target_dir):
-                try:
-                    os.unlink(target_dir)
-                except OSError:
-                    pass
-        applied = sorted(c["version"] for c in commits
-                         if c.get("op") in _VERSIONING_OPS)
-        # the pointer file (Delta's _last_checkpoint pattern): written
-        # in BOTH modes — derived data, one GET instead of a journal
-        # LIST for object-store readers; the journal stays authoritative
-        atomic_write_json(os.path.join(versions_root, "_LATEST.json"),
-                          {"version": head["version"],
-                           "version_name": head["version_name"],
-                           "seq": head["seq"], "ts": head.get("ts")})
-        atomic_write_json(os.path.join(versions_root, "_POINTER.json"),
-                          {"version": head["version"], "applied": applied})
+        atomic_symlink_swap(
+            target_dir, os.path.join(versions_root, head["version_name"]))
         # Prune ONLY snapshots referenced by commits now outside the
         # retention window — provably retired. Unreferenced dirs are NOT
         # touched here: one may be a concurrent writer's staged snapshot
@@ -414,17 +360,14 @@ def _publish_commit(target_dir: str, versions_root: str,
         # job, behind an age threshold (vacuum_upsert_target). The
         # window counts distinct VERSIONS, not commits (_retained_names)
         # so OPTIMIZE runs never shrink time travel.
+        # rmtree unlinks names only: a carried file's inode lives on
+        # in every retained version that links it
         retained = _retained_names(commits, keep_versions)
-        # a retired dir may still physically own files that RETAINED
-        # versions' carry manifests reference (manifest carry mode) —
-        # prune file-granularly, never a pinned byte (carry.py);
-        # link-mode tables pin nothing and this stays the old rmtree
-        from .carry import pinned_targets, prune_version_dir
-        pinned = pinned_targets(versions_root, retained)
         for c in commits:
             if c["version_name"] not in retained:
-                prune_version_dir(versions_root, c["version_name"],
-                                  pinned)
+                shutil.rmtree(
+                    os.path.join(versions_root, c["version_name"]),
+                    ignore_errors=True)
         latest = read_commit_journal(_commits_dir(versions_root))
         if not latest or latest[-1]["seq"] == head["seq"]:
             # journal checkpoint ride-along (Delta's log checkpoints):
@@ -463,15 +406,10 @@ def _publish_commit(target_dir: str, versions_root: str,
 # to the CHANGED data, not the table — is in the plan shape, not the
 # link.
 
-def _snapshot_data_files(snapshot_dir: str) -> list[str]:
-    """Relative paths of a snapshot's LOGICAL data files — physically
-    present files plus manifest-carried ones (carry.snapshot_files);
-    basenames for flat snapshots, ``part=value/…`` paths for
-    partitioned ones. Carried files keep their original names, so
-    name-set diffs (the change feed, read_upsert_changes) are valid
-    across carry modes."""
-    from .carry import snapshot_files
-    return snapshot_files(snapshot_dir)
+# Relative paths of a snapshot's data files: basenames for flat
+# snapshots, ``part=value/…`` paths for partitioned ones. Carried links
+# keep their names, so name-set diffs (the change feed) stay valid.
+from .partitioning import _walk_data_files as _snapshot_data_files  # noqa: E402
 
 
 def _file_paths_to_relpaths(rows, base_dir: str) -> set[str]:
@@ -480,17 +418,12 @@ def _file_paths_to_relpaths(rows, base_dir: str) -> set[str]:
     ``_snapshot_data_files`` — relative (not basename) so a partitioned
     snapshot's ``part=value/part-….parquet`` names compare correctly.
     Spark reports the path as given to the reader, but tolerate a
-    canonicalized (symlink-resolved) form too. A manifest-carried
-    file's scan path lives in ANOTHER version dir under the same
-    ``_versions`` root — its owner-relative path IS its logical name
-    (carries never rename), so strip the root plus one dir segment. A
-    path under none of these falls back to its basename (the flat
-    pre-partitioning behavior)."""
+    canonicalized (symlink-resolved) form too. A path under neither
+    falls back to its basename (the flat pre-partitioning behavior)."""
     import os
     from urllib.parse import unquote, urlparse
 
     bases = {os.path.abspath(base_dir), os.path.realpath(base_dir)}
-    vroot = os.path.dirname(os.path.realpath(base_dir))
     out = set()
     for r in rows:
         p = unquote(urlparse(r[0]).path)
@@ -500,12 +433,7 @@ def _file_paths_to_relpaths(rows, base_dir: str) -> set[str]:
                 out.add(p[len(pre):])
                 break
         else:
-            vpre = vroot.rstrip(os.sep) + os.sep
-            rest = p[len(vpre):] if p.startswith(vpre) else ""
-            if os.sep in rest:
-                out.add(rest.split(os.sep, 1)[1])
-            else:
-                out.add(os.path.basename(p))
+            out.add(os.path.basename(p))
     return out
 
 
@@ -563,12 +491,9 @@ def _snapshot_read(spark, target_dir: str, snap_dir: str,
     Spark's per-scan inference (partitioning.read_snapshot), with
     ``basePath`` anchoring so changed-file-subset reads keep their
     partition columns. ``files`` are relative to ``snap_dir``.
-    ``file_col`` names a column to fill with ``_metadata.file_path`` —
-    it must be attached INSIDE each scan (``_metadata`` is a per-scan
-    pseudo-column that does not exist above the union a manifest-
-    carried snapshot's read builds), so callers that need the
-    touched-file constant request it here instead of withColumn-ing
-    on the result."""
+    ``file_col`` names a column to fill with ``_metadata.file_path``
+    (the touched-file constant), attached on the scan before the
+    column-mapping projection."""
     import os
 
     from .colmap import table_column_mapping, to_logical
@@ -579,54 +504,16 @@ def _snapshot_read(spark, target_dir: str, snap_dir: str,
     # than silently misreading (Delta's reader-version contract)
     check_table_readable(target_dir)
     parts = table_partitioning(target_dir)
-    from .carry import owner_groups, read_carry, snapshot_files
-    carry = read_carry(snap_dir)
-    if carry:
-        # manifest-carried snapshot: the version dir is a file LIST,
-        # not a directory of bytes — group the logical files by the
-        # dir that physically owns them and union the per-owner scans
-        # (Spark's partition discovery needs one basePath per scan;
-        # owner count is bounded by the retention window, so this is
-        # a handful of branches at any table size, each with its own
-        # pushdown/pruning)
-        rels = files if files is not None else snapshot_files(snap_dir)
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        groups = owner_groups(snap_dir, rels, carry)
-        if not parts:
-            # FLAT table: no basePath anchoring needed, so every owner
-            # group collapses into ONE multi-path scan — the read
-            # fan-out at deep retention (r12 VERDICT item 4 probe: 26
-            # owner dirs -> 16x read wall as a union) simply does not
-            # apply; one scan keeps whole-stage codegen, pushdown and
-            # _metadata.file_path intact at any owner count
-            paths = [os.path.join(owner, f)
-                     for owner, g in sorted(groups.items()) for f in g]
-            df = _flat_parquet_read(spark, snap_dir, paths)
-            if file_col is not None:
-                df = df.withColumn(file_col,
-                                   F.col("_metadata.file_path"))
-            return to_logical(df, table_column_mapping(target_dir))
-        dfs = [read_snapshot(spark, owner, parts, g)
-               for owner, g in sorted(groups.items())]
-        if file_col is not None:
-            dfs = [b.withColumn(file_col, F.col("_metadata.file_path"))
-                   for b in dfs]
-        df = reduce(lambda a, b: a.unionByName(b), dfs)
+    if parts:
+        df = read_snapshot(spark, snap_dir, parts, files)
+    elif files is not None:
+        df = _flat_parquet_read(
+            spark, snap_dir, [os.path.join(snap_dir, f) for f in files])
     else:
-        if parts:
-            df = read_snapshot(spark, snap_dir, parts, files)
-        elif files is not None:
-            df = _flat_parquet_read(
-                spark, snap_dir,
-                [os.path.join(snap_dir, f) for f in files])
-        else:
-            df = _flat_parquet_read(spark, snap_dir, [snap_dir])
-        if file_col is not None:
-            from pyspark.sql import functions as F
-            df = df.withColumn(file_col, F.col("_metadata.file_path"))
+        df = _flat_parquet_read(spark, snap_dir, [snap_dir])
+    if file_col is not None:
+        from pyspark.sql import functions as F
+        df = df.withColumn(file_col, F.col("_metadata.file_path"))
     # column mapping: physical file names → the table's logical schema
     # (renames applied, dropped columns hidden) — no-op without mapping
     return to_logical(df, table_column_mapping(target_dir))
@@ -847,30 +734,26 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
                       kept_files: list[str], rewritten_df,
                       target_dir: str | None = None) -> None:
     """Materialize a staged snapshot as ``rewritten_df``'s output plus
-    the base snapshot's untouched data files, carried either as hard
-    links (copy fallback — the local-FS default) or, under
-    SPARK_GRAFT_CARRY_MODE=manifest, as ``_CARRY.json`` pointer
-    entries with zero per-file syscalls (carry.py — the object-store
-    posture). The Spark write runs FIRST (mode=overwrite clears the
-    dir), carries after. ``kept_files`` are snapshot-relative paths —
-    for a partitioned table they carry their ``part=value/``
-    directories, recreated in the stage (link mode) so the carried
-    files land in the same Hive layout."""
+    the base snapshot's untouched data files, carried as hard links
+    (copy fallback). The Spark write runs FIRST (mode=overwrite clears
+    the dir), carries after. ``kept_files`` are snapshot-relative paths
+    — for a partitioned table they carry their ``part=value/``
+    directories, recreated in the stage so the carried files land in
+    the same Hive layout."""
     import os
     import shutil
-
-    from .carry import (manifest_carry_enabled, read_carry,
-                        resolve_data_file, versions_root_of,
-                        write_carry_manifest)
 
     if rewritten_df is not None:
         # the rewrite's input is the TOUCHED subset of the base (plus a
         # delta of comparable size): size the staging shuffle to it —
         # a tiny copy-on-write commit gets a 1-2 task write, a big one
-        # keeps the session width (_stage_width)
+        # keeps the session width (_stage_width). An insert-only
+        # commit touches no base file: its input is the whole delta,
+        # of unknown size, so it keeps the session width too
         touched_bytes = _data_file_bytes(snapshot_dir, skip=kept_files)
         _staged_write(rewritten_df, target_dir or snapshot_dir,
-                      stage_dir, input_bytes_hint=2 * touched_bytes)
+                      stage_dir, input_bytes_hint=(
+                          2 * touched_bytes if touched_bytes else None))
     else:
         os.makedirs(stage_dir, exist_ok=True)
         if not kept_files:
@@ -882,36 +765,14 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
             if os.path.exists(src_marker):
                 shutil.copy2(src_marker,
                              os.path.join(stage_dir, _EMPTY_MARKER))
-    if kept_files and manifest_carry_enabled():
-        # link-less carry: record pointers, move no bytes, touch no
-        # inodes — collisions are impossible (nothing lands in the
-        # stage), dangling bases raise FileNotFoundError inside (the
-        # callers' lost-race retry signal). Gate the table FIRST: a
-        # build without carry support would silently read only the
-        # physical subset of a carried snapshot
-        if target_dir is not None:
-            from .partitioning import register_table_feature
-            register_table_feature(target_dir, "carry_manifest")
-        write_carry_manifest(stage_dir, snapshot_dir, kept_files)
-    else:
-        base_carry = read_carry(snapshot_dir)
-        vroot = versions_root_of(snapshot_dir) if base_carry else None
-        for name in kept_files:
-            # resolve through the base's own carry manifest so a
-            # link-mode commit on a manifest-carried base materializes
-            # the real bytes, not a missing path
-            try:
-                src = resolve_data_file(snapshot_dir, name, base_carry,
-                                        vroot)
-            except FileNotFoundError:
-                src = os.path.join(snapshot_dir, name)  # classic ENOENT
-            dst = os.path.join(stage_dir, name)
-            if os.path.dirname(name):        # partition subdirectory
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.exists(dst):          # freak part-name collision
-                root, ext = os.path.splitext(name)
-                dst = os.path.join(stage_dir, f"{root}-linked{ext}")
-            _link_or_copy(src, dst)
+    for name in kept_files:
+        dst = os.path.join(stage_dir, name)
+        if os.path.dirname(name):        # partition subdirectory
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+        if os.path.exists(dst):          # freak part-name collision
+            root, ext = os.path.splitext(name)
+            dst = os.path.join(stage_dir, f"{root}-linked{ext}")
+        _link_or_copy(os.path.join(snapshot_dir, name), dst)
     if target_dir is not None:
         # keep data skipping alive across incremental commits: carry
         # kept files' manifest entries, footer-read only the rewritten
@@ -1006,8 +867,8 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
     could collide).
 
     The rebase: move OUR rewritten files out of the dead stage, carry
-    the new head's files minus our touched set (same link/manifest
-    mechanism as any stage — stats manifests carry along), CAS at the
+    the new head's files minus our touched set (hard links, as in any
+    stage — stats manifests carry along), CAS at the
     new sequence; a further lost race re-checks and re-rebases against
     the newer head, bounded by ``max_rounds``. Returns the journal
     status string on success, None when the caller must re-stage."""
@@ -1369,9 +1230,10 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                     if base is not None else None)
         snapshot = (_snapshot_read(spark, target_dir, base_dir)
                     if base is not None else None)
+        base_bytes = (_data_file_bytes(base_dir)
+                      if base is not None else None)
         if (snapshot is not None
-                and _data_file_bytes(base_dir)
-                >= _min_bytes_cutoff(incremental_min_bytes)
+                and base_bytes >= _min_bytes_cutoff(incremental_min_bytes)
                 and _schemas_match(snapshot.schema, delta_schema)):
             # file-granular copy-on-write: rewrite only the files
             # holding keys the delta touches; hard-link the rest
@@ -1424,7 +1286,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
             # an unknown batch size — keep the session width)
             _staged_write(merged, target_dir, stage_dir,
                           input_bytes_hint=(
-                              2 * _data_file_bytes(base_dir)
+                              2 * base_bytes
                               if snapshot is not None else None))
         if ident:
             fields["identity_hwm"] = _staged_identity_hwm(
@@ -1501,9 +1363,8 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
 
     def stage(commits, stage_dir):
         base_dir = _head_dir(target_dir, commits)
-        snapshot = _snapshot_read(spark, target_dir, base_dir)
-        if (_data_file_bytes(base_dir)
-                >= _min_bytes_cutoff(incremental_min_bytes)):
+        base_bytes = _data_file_bytes(base_dir)
+        if base_bytes >= _min_bytes_cutoff(incremental_min_bytes):
             # touched = files holding at least one row the predicate
             # actually deletes; every other file carries into the new
             # version as a hard link
@@ -1524,9 +1385,10 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
             if claim is not None:
                 fields["touched_partitions"] = claim
             return fields
-        kept = snapshot.filter(F.coalesce(~condition, F.lit(True)))
+        kept = (_snapshot_read(spark, target_dir, base_dir)
+                .filter(F.coalesce(~condition, F.lit(True))))
         _staged_write(kept, target_dir, stage_dir,
-                      input_bytes_hint=_data_file_bytes(base_dir))
+                      input_bytes_hint=base_bytes)
         return {}
 
     return _commit_version(
@@ -1632,8 +1494,8 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
                         .otherwise(F.col(g)))
             return out.drop("_upd_hit")
 
-        if (_data_file_bytes(base_dir)
-                < _min_bytes_cutoff(incremental_min_bytes)):
+        base_bytes = _data_file_bytes(base_dir)
+        if base_bytes < _min_bytes_cutoff(incremental_min_bytes):
             if cons:
                 # full-rewrite path: the snapshot scan is the
                 # stage's own cost anyway
@@ -1641,7 +1503,7 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
                     apply_update(snapshot.filter(hit)), cons,
                     "the UPDATE post-image")
             _staged_write(apply_update(snapshot), target_dir, stage_dir,
-                          input_bytes_hint=_data_file_bytes(base_dir))
+                          input_bytes_hint=base_bytes)
             return {}
         touched, kept_files = _touched_files_by_predicate(
             spark, target_dir, base_dir, condition)
@@ -2248,8 +2110,9 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                 not_matched_by_source_set=not_matched_by_source_set,
                 not_matched_by_source_delete=(
                     not_matched_by_source_delete))
+            base_bytes = _data_file_bytes(base_dir)
             if (no_evolution and not has_nmbs
-                    and _data_file_bytes(base_dir)
+                    and base_bytes
                     >= _min_bytes_cutoff(incremental_min_bytes)):
                 touched, kept = _touched_files_by_keys(
                     spark, base_dir, source, key_cols, target_dir,
@@ -2289,8 +2152,7 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                 # full rewrite: output ≈ base snapshot — size the
                 # staging shuffle to the base's known bytes
                 _staged_write(merged, target_dir, stage_dir,
-                              input_bytes_hint=(
-                                  2 * _data_file_bytes(base_dir)))
+                              input_bytes_hint=2 * base_bytes)
         if ident:
             fields["identity_hwm"] = _staged_identity_hwm(
                 spark, stage_dir, ident, ident_hwm,
@@ -2406,25 +2268,19 @@ def _zorder_value(df, cols: list[str], bits: int):
 
 
 def _data_file_bytes(path: str, skip=()) -> int:
-    """Total bytes of a snapshot's LOGICAL data files (markers and
-    hidden files excluded; manifest-carried files resolved to their
-    physical owners) — the local-fs analog of the table format's
-    per-snapshot size statistics that drive OPTIMIZE target sizing.
-    ``skip`` names relative paths left out of the sum."""
+    """Total bytes of a snapshot's data files (markers and hidden files
+    excluded) — the local-fs analog of the table format's per-snapshot
+    size statistics that drive OPTIMIZE target sizing. ``skip`` names
+    relative paths left out of the sum."""
     import os
 
-    from .carry import read_carry, resolve_data_file, versions_root_of
-
-    carry = read_carry(path)
-    vroot = versions_root_of(path) if carry else None
     skip = set(skip)
     total = 0
     for f in _snapshot_data_files(path):
         if f in skip:
             continue
         try:
-            total += os.path.getsize(
-                resolve_data_file(path, f, carry, vroot))
+            total += os.path.getsize(os.path.join(path, f))
         except OSError:
             # a concurrent publish pruned the snapshot mid-walk
             # (Python-side ENOENT, not a Spark error signature):
@@ -2509,15 +2365,12 @@ def optimize_upsert_target(spark, target_dir: str,
         if min_file_bytes is not None:
             # incremental compaction: bin-pack ONLY the small-file
             # debt, per partition directory; carry the rest by link
-            from .carry import read_carry, resolve_data_file
-            src_carry = read_carry(src)
             small_by_dir: dict[str, list[str]] = {}
             sizes: dict[str, int] = {}
             kept: list[str] = []
             for f in _snapshot_data_files(src):
                 try:
-                    sz = os.path.getsize(
-                        resolve_data_file(src, f, src_carry))
+                    sz = os.path.getsize(os.path.join(src, f))
                 except OSError:
                     raise FileNotFoundError(src)  # pruned mid-walk
                 if sz < min_file_bytes:
@@ -2792,28 +2645,19 @@ def vacuum_upsert_target(target_dir: str,
             f"{VACUUM_RETENTION_FLOOR_S:.0f}s floor — a concurrent "
             f"writer's just-staged snapshot could be reclaimed mid-"
             f"commit; pass force=True to override deliberately")
-    from .carry import pinned_targets, prune_version_dir
-
     versions_root = target_dir + "_versions"
     commits, _ = _journal_state(versions_root)
     referenced = _retained_names(commits, keep_versions)
     journaled = {c["version_name"] for c in commits}
-    # published head: resolver handles both publish modes (symlink or
-    # pointer/journal); only a head INSIDE the versions root pins a
-    # dir. realpath BOTH sides — the resolver returns a fully-resolved
-    # path in symlink mode, and a symlinked parent (e.g. /tmp on some
-    # systems) would otherwise silently unpin the live head
+    # published head (the link, or the journal head when it dangles);
+    # only a head INSIDE the versions root pins a dir. realpath BOTH
+    # sides — the resolver returns a fully-resolved path, and a
+    # symlinked parent (e.g. /tmp on some systems) would otherwise
+    # silently unpin the live head
     _pub = resolve_published_snapshot(target_dir)
     published = os.path.basename(_pub) \
         if os.path.realpath(os.path.dirname(os.path.abspath(_pub))) == \
         os.path.realpath(versions_root) else None
-    # manifest-carry reachability (Delta VACUUM's rule): a retired
-    # dir's physical file stays as long as any retained version's (or
-    # the published head's) carry manifest references it — deleting it
-    # would corrupt live snapshots, not just history
-    pinned = pinned_targets(
-        versions_root,
-        referenced | ({published} if published else set()))
     removed = []
     now = time.time()
     for name in sorted(os.listdir(versions_root)):
@@ -2832,9 +2676,9 @@ def vacuum_upsert_target(target_dir: str,
             continue
         if name not in journaled and age < VACUUM_RETENTION_FLOOR_S:
             continue          # possibly in-flight — see docstring
-        if prune_version_dir(versions_root, name, pinned,
-                             dry_run=dry_run):
-            removed.append(name)
+        if not dry_run:
+            shutil.rmtree(path, ignore_errors=True)
+        removed.append(name)
     return removed
 
 
@@ -3726,36 +3570,18 @@ def clone_upsert_table(src_target: str, dst_target: str,
     os.makedirs(dst_root, exist_ok=True)
     stage = os.path.join(dst_root, f"_stage_{writer}_{uuid.uuid4().hex[:8]}")
     os.makedirs(stage)
-    from .carry import CARRY_MANIFEST, read_carry, resolve_data_file
-    src_carry = read_carry(src_dir)
     for root, dirs, files in os.walk(src_dir):
         # descend into partition subdirectories; skip hidden/marker dirs
         dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         rel = os.path.relpath(root, src_dir)
         for f in files:
-            if f.startswith(".") or f in ("_SUCCESS", CARRY_MANIFEST):
-                # data files + stats manifest travel; the carry
-                # manifest must NOT — its targets are relative to the
-                # SOURCE table's versions root (carried data files are
-                # materialized below instead)
-                continue
+            if f.startswith(".") or f == "_SUCCESS":
+                continue        # data files + stats manifest travel
             src_f = os.path.join(root, f)
             dst_f = os.path.join(stage, f) if rel == "." \
                 else os.path.join(stage, rel, f)
             os.makedirs(os.path.dirname(dst_f), exist_ok=True)
             _link_or_copy(src_f, dst_f)
-    for relname in src_carry:
-        # manifest-carried files of the source head: cross-table
-        # pointers can't work (separate versions roots + retention
-        # domains), so the clone materializes them — link, copy on
-        # link-less filesystems
-        dst_f = os.path.join(stage, relname)
-        if os.path.exists(dst_f):
-            continue                     # physically present too
-        if os.path.dirname(relname):
-            os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-        _link_or_copy(resolve_data_file(src_dir, relname, src_carry),
-                      dst_f)
     perm = f"v{head['version']}_clone_{uuid.uuid4().hex[:8]}"
     os.rename(stage, os.path.join(dst_root, perm))
     entry = {"op": "upsert", "version": head["version"],
@@ -4295,8 +4121,6 @@ def _staged_identity_hwm(spark, staged_dir: str, ident: dict,
 
     from pyspark.sql import functions as F
 
-    from .carry import resolve_data_files
-
     skip = set(skip_files)
     files = [f for f in _snapshot_data_files(staged_dir)
              if f not in skip]
@@ -4304,7 +4128,7 @@ def _staged_identity_hwm(spark, staged_dir: str, ident: dict,
         return hwm
     name, start, step = ident["name"], ident["start"], ident["step"]
     top = (spark.read.parquet(
-        *resolve_data_files(staged_dir, files))
+        *(os.path.join(staged_dir, f) for f in files))
         .agg(F.max(F.expr(
             f"CAST((`{name}` - {start}) DIV {step} AS BIGINT)")))
         .first()[0])
@@ -4401,8 +4225,8 @@ def maintenance_clone_constraint(spark: SparkSession,
         enforced = True
 
     def agg(path: str, tag: str) -> DataFrame:
-        # head resolver, not a bare path read: works in pointer publish
-        # mode and reads carried files in manifest mode
+        # head resolver, not a bare path read: applies the table's
+        # column mapping and partition typing
         return (read_upsert_version(spark, path)
                 .agg(F.count("*").cast("bigint").alias("n_customers"),
                      F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
@@ -4771,14 +4595,11 @@ def describe_upsert_detail(spark, target_dir: str) -> DataFrame:
         T.StructField("protocol_features",
                       T.ArrayType(T.StringType())),
     ])
-    from .carry import is_pruned_remnant
     retained = len({
         c["version"] for c in commits
         if c.get("op") in _VERSIONING_OPS
         and os.path.isdir(os.path.join(versions_root,
-                                       c.get("version_name") or ""))
-        and not is_pruned_remnant(os.path.join(
-            versions_root, c.get("version_name") or ""))})
+                                       c.get("version_name") or ""))})
     cons_str = {n: (f"NOT NULL ({e['col']})" if isinstance(e, dict)
                     else e)
                 for n, e in table_check_constraints(target_dir).items()}
@@ -4817,19 +4638,15 @@ def show_upsert_partitions(spark, target_dir: str) -> DataFrame:
         [T.StructField(c, _ddl[t]) for c, t in parts.items()]
         + [T.StructField("num_files", T.LongType()),
            T.StructField("size_in_bytes", T.LongType())])
-    # the LOGICAL file list (manifest-carried files included), grouped
-    # by partition dir — still a pure listing plus one carry-manifest
-    # read, no file opens
-    from .carry import read_carry, resolve_data_file
-    carry = read_carry(head)
+    # the file list grouped by partition dir — a pure listing, no
+    # file opens
     by_dir: dict[str, list[str]] = {}
     for f in _snapshot_data_files(head):
         by_dir.setdefault(os.path.dirname(f), []).append(f)
     rows = []
     for d, fs in sorted(by_dir.items()):
         vals = partition_values_of(fs[0], parts)
-        size = sum(os.path.getsize(resolve_data_file(head, f, carry))
-                   for f in fs)
+        size = sum(os.path.getsize(os.path.join(head, f)) for f in fs)
         rows.append(tuple(vals[c] for c in parts) + (len(fs), size))
     return spark.createDataFrame(rows, schema)
 
@@ -4839,46 +4656,21 @@ def auto_compact_upsert_target(spark, target_dir: str,
                                min_file_bytes: int = 16 * 1024 * 1024,
                                target_file_bytes: int = 128 * 1024 * 1024,
                                keep_versions: int = 2,
-                               writer: str = "auto-compact",
-                               max_owner_dirs: int = 16) -> str | None:
+                               writer: str = "auto-compact") -> str | None:
     """Delta's autoCompact contract: check the head's small-file debt
     with one listing, and run an INCREMENTAL OPTIMIZE only when at
     least ``min_small_files`` files sit under ``min_file_bytes`` —
     otherwise do nothing (None). Call it after commit bursts (e.g.
     from a foreachBatch sink every N batches); the check costs a
     directory walk, the compaction costs O(debt), and a quiet table
-    pays nothing.
-
-    ``max_owner_dirs`` additionally triggers when a PARTITIONED
-    manifest-carried head's ownership has spread across more than that
-    many version dirs (carry.owner_groups — the r12 item 4 fan-out
-    probe: a partitioned carried read costs one scan branch per owner,
-    so deep-retention single-key commit chains degrade reads until an
-    OPTIMIZE collapses ownership back to one dir; flat tables collapse
-    to a single multi-path scan and never trigger this)."""
+    pays nothing."""
     import os
 
-    from .carry import owner_groups, read_carry, resolve_data_file
-    from .partitioning import table_partitioning
-
     head = resolve_published_snapshot(target_dir)
-    carry = read_carry(head)
-    if carry and table_partitioning(target_dir):
-        if len(owner_groups(head, _snapshot_data_files(head),
-                            carry)) > max_owner_dirs:
-            # FULL rewrite (min_file_bytes=None), deliberately: an
-            # incremental OPTIMIZE carries well-sized files under
-            # their ORIGINAL owners, so it can never collapse
-            # ownership — the whole point of this trigger
-            return optimize_upsert_target(
-                spark, target_dir, keep_versions=keep_versions,
-                writer=writer, target_file_bytes=target_file_bytes,
-                stats_cols=[])
     small = 0
     for f in _snapshot_data_files(head):
         try:
-            if os.path.getsize(
-                    resolve_data_file(head, f, carry)) < min_file_bytes:
+            if os.path.getsize(os.path.join(head, f)) < min_file_bytes:
                 small += 1
         except OSError:
             continue        # concurrent publish pruned the head mid-walk

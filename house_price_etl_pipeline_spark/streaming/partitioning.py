@@ -205,9 +205,7 @@ def snapshot_schema_ddl(snapshot_dir: str, parts: dict[str, str]) -> str:
     partition contract."""
     import pyarrow.parquet as pq
 
-    from .carry import resolve_data_file, snapshot_files
-
-    files = snapshot_files(snapshot_dir)
+    files = _walk_data_files(snapshot_dir)
     if not files:
         marker = read_empty_marker(snapshot_dir)
         if marker is not None:
@@ -215,7 +213,7 @@ def snapshot_schema_ddl(snapshot_dir: str, parts: dict[str, str]) -> str:
         raise FileNotFoundError(
             f"no data files under snapshot {snapshot_dir}")
     sch = pq.ParquetFile(
-        resolve_data_file(snapshot_dir, files[0])).schema_arrow
+        os.path.join(snapshot_dir, files[0])).schema_arrow
     cols = [f"`{f.name}` {arrow_to_ddl_type(f.type)}" for f in sch
             if f.name not in parts]
     cols += [f"`{c}` {t}" for c, t in parts.items()]
@@ -248,11 +246,8 @@ def read_snapshot(spark, snapshot_dir: str, parts: dict[str, str],
     str_cols = [c for c, t in parts.items() if t.lower() == "string"]
     if str_cols:
         esc = _escape_hive(HIVE_DEFAULT_PARTITION)
-        if files is not None:
-            probe = files
-        else:
-            from .carry import snapshot_files
-            probe = snapshot_files(snapshot_dir)
+        probe = files if files is not None \
+            else _walk_data_files(snapshot_dir)
         if any(esc in f for f in probe):
             df = decode_partition_sentinels(df, parts)
     return df
@@ -391,14 +386,10 @@ def partition_values_of(relpath: str, parts: dict[str, str]) -> dict:
 def list_partition_dirs(snapshot_dir: str,
                         parts: dict[str, str]) -> dict[str, dict]:
     """{relative partition dir: typed values} for every partition that
-    holds at least one LOGICAL data file (manifest-carried included) —
-    a pure listing plus at most one carry-manifest read, no file
-    opens; this is the metadata partition-drop path's entire read
-    cost."""
-    from .carry import snapshot_files
-
+    holds at least one data file — a pure listing, no file opens; this
+    is the metadata partition-drop path's entire read cost."""
     out: dict[str, dict] = {}
-    for f in snapshot_files(snapshot_dir):
+    for f in _walk_data_files(snapshot_dir):
         d = os.path.dirname(f)
         if d not in out:
             out[d] = partition_values_of(f, parts)
@@ -440,12 +431,6 @@ _PROTOCOL_FILE = "_PROTOCOL.json"
 SUPPORTED_FEATURES = frozenset({
     "partitioning", "column_mapping", "check_constraints",
     "generated_columns", "identity_columns",
-    # carry_manifest: version dirs may carry data files as _CARRY.json
-    # pointer entries instead of physical bytes (streaming/carry.py) —
-    # a reader unaware of it would silently see only the physical
-    # subset of a snapshot (rows missing, no error), the exact failure
-    # mode the reader gate exists for
-    "carry_manifest",
 })
 
 
@@ -503,51 +488,6 @@ def register_table_feature(target_dir: str, feature: str,
     os.makedirs(target_dir + "_versions", exist_ok=True)
     d[key] = sorted(set(d[key]) | {feature})
     atomic_write_json(_protocol_path(target_dir), d)
-
-
-def drop_table_feature(target_dir: str, feature: str) -> bool:
-    """Delta's ``ALTER TABLE ... DROP FEATURE`` analog: remove a
-    protocol feature flag after verifying NO retained data depends on
-    it, so builds without the feature can read the table again.
-    Returns True if the flag was removed, False if it wasn't set.
-
-    Currently implemented for ``carry_manifest`` only — registration
-    happens at stage time (the gate must exist before a manifest can
-    become reachable through the journal), so a writer that staged in
-    manifest mode but lost every CAS race (or crashed) leaves the flag
-    on a table whose committed snapshots are all physical. The drop
-    scans EVERY directory under the versions root (in-flight stages
-    included) for carry manifests and pruned-remnant tombstones and
-    refuses if any exist. Like Delta's reader-feature drops, it must
-    not race concurrent manifest-mode writers — run it quiesced."""
-    from .carry import CARRY_MANIFEST, PRUNED_MARKER
-
-    if feature != "carry_manifest":
-        raise ValueError(
-            f"DROP FEATURE supports only 'carry_manifest' (got "
-            f"{feature!r}) — other features are load-bearing for "
-            f"retained bytes and never droppable")
-    d = _read_protocol(target_dir)
-    if feature not in d["features"] and feature not in d["writer_features"]:
-        return False
-    vroot = target_dir + "_versions"
-    for name in os.listdir(vroot) if os.path.isdir(vroot) else []:
-        p = os.path.join(vroot, name)
-        if not os.path.isdir(p) or name.startswith("_commits"):
-            continue
-        for marker in (CARRY_MANIFEST, PRUNED_MARKER):
-            if os.path.exists(os.path.join(p, marker)):
-                raise ValueError(
-                    f"cannot drop feature 'carry_manifest': snapshot "
-                    f"dir {name} still contains {marker} — rewrite the "
-                    f"table physical first (OPTIMIZE full rewrite, then "
-                    f"VACUUM past retention)")
-    from ..fsutil import atomic_write_json
-    d["features"] = [f for f in d["features"] if f != feature]
-    d["writer_features"] = [f for f in d["writer_features"]
-                            if f != feature]
-    atomic_write_json(_protocol_path(target_dir), d)
-    return True
 
 
 class UnsupportedTableFeature(RuntimeError):

@@ -166,12 +166,11 @@ def write_stats_manifest(snapshot_dir: str, cols: list[str],
     ``_DISTRIBUTE_STATS_MIN_FILES`` (the scale path — no O(files)
     driver loop); tiny snapshots and ad-hoc directories take the serial
     loop, which is cheaper than a job's fixed startup there."""
-    from .carry import resolve_data_files, snapshot_files
-    from .partitioning import partition_values_of
+    from .partitioning import _walk_data_files, partition_values_of
 
     cols = list(cols)
-    files = snapshot_files(snapshot_dir)   # manifest-carried included
-    paths = resolve_data_files(snapshot_dir, files)
+    files = _walk_data_files(snapshot_dir)
+    paths = [os.path.join(snapshot_dir, f) for f in files]
     if spark is not None and len(files) >= _DISTRIBUTE_STATS_MIN_FILES:
         entries = _collect_stats_distributed(spark, files, paths, cols)
     else:
@@ -215,9 +214,9 @@ def prune_files(snapshot_dir: str,
     (lo, hi) inclusive bounds; either bound may be None (half-open).
     Files without a manifest entry or without stats for a predicate
     column are kept (skipping never risks correctness)."""
-    from .carry import snapshot_files
+    from .partitioning import _walk_data_files
 
-    files = snapshot_files(snapshot_dir)   # manifest-carried included
+    files = _walk_data_files(snapshot_dir)
     manifest = read_stats_manifest(snapshot_dir)
     if manifest is None:
         return files, len(files)
@@ -381,9 +380,7 @@ def carry_stats_manifest(snapshot_dir: str, stage_dir: str,
     degrade to keep-everything until the next compaction. No-op
     (returns False) when the base has no manifest — stats remain
     opt-in via OPTIMIZE's stats_cols."""
-    from .partitioning import partition_values_of
-
-    from .carry import resolve_data_file, snapshot_files
+    from .partitioning import _walk_data_files, partition_values_of
 
     base = read_stats_manifest(snapshot_dir)
     if base is None:
@@ -391,15 +388,11 @@ def carry_stats_manifest(snapshot_dir: str, stage_dir: str,
     cols = base["columns"]
     kept = set(kept_files)
     entries = {}
-    # the staged snapshot's LOGICAL files: manifest-carried kept files
-    # have no bytes in the stage dir but still need their stats entries
-    # carried forward (snapshot_files unions physical walk + carries)
-    for f in snapshot_files(stage_dir):
+    for f in _walk_data_files(stage_dir):
         if f in kept and f in base["files"]:
             entries[f] = base["files"][f]
             continue
-        entries[f] = _file_column_stats(
-            resolve_data_file(stage_dir, f), cols)
+        entries[f] = _file_column_stats(os.path.join(stage_dir, f), cols)
         if parts:
             vals = partition_values_of(f, parts)
             for c in parts:

@@ -1051,3 +1051,41 @@ def test_stream_apply_changes_scd2_under_source_contention(spark,
                  .filter(F.col(SCD2_END).isNull()).collect()}
     assert open_rows == {(r.k, r.v) for r in
                          read_upsert_version(spark, s).collect()}
+
+
+def test_stream_cdf_refuses_versions_pruned_past_retention(spark, tmp_path):
+    """A change-feed stream starting at version 0 of a table whose
+    retention already removed versions 0 and 1 must fail loudly: a
+    removed version dir walks as an empty file list, so diffing it
+    would stamp v0's rows with a later version and drop v1's and v2's
+    real changes. Batch time travel refuses the same versions."""
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        _journal_state, read_upsert_version)
+
+    target = str(tmp_path / "tbl")
+    for b, (lo, hi) in enumerate([(0, 200), (200, 400)]):
+        df = spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+            F.lit(0).alias("ord"))
+        upsert_commit_batch(df, target, b, key_cols=["k"],
+                            order_col="ord", keep_versions=2,
+                            incremental_min_bytes=0, max_retries=4)
+    for b in (2, 3):
+        delta = spark.createDataFrame([(b, -b, b)],
+                                      "k bigint, v bigint, ord int")
+        upsert_commit_batch(delta, target, b, key_cols=["k"],
+                            order_col="ord", keep_versions=2,
+                            incremental_min_bytes=0, max_retries=4)
+    vroot = target + "_versions"
+    commits, _ = _journal_state(vroot)
+    assert not os.path.isdir(os.path.join(vroot, commits[0]["version_name"]))
+    q = (stream_upsert_changes(spark, target, ["k"])
+         .writeStream.format("memory").queryName("pruned_feed_probe")
+         .outputMode("append").trigger(availableNow=True).start())
+    try:
+        with pytest.raises(Exception, match="pruned past retention"):
+            q.awaitTermination()
+    finally:
+        q.stop()
+    with pytest.raises(FileNotFoundError, match="not retained"):
+        read_upsert_version(spark, target, 1).count()

@@ -724,6 +724,24 @@ def test_protocol_feature_gate(spark, tmp_path):
         read_upsert_version(spark, t).count()
 
 
+def test_carry_manifest_tables_are_refused(spark, tmp_path):
+    """A table whose protocol lists ``carry_manifest`` (version dirs
+    that carry data files as pointer entries rather than bytes) is
+    refused by reads and commits alike: this build reads only the
+    files physically in a version dir, which on such a table is a
+    silent subset of its rows."""
+    from house_price_etl_pipeline_spark.streaming.partitioning import (
+        UnsupportedTableFeature, check_table_writable,
+        register_table_feature)
+
+    t = _mk(spark, tmp_path)
+    register_table_feature(t, "carry_manifest")
+    with pytest.raises(UnsupportedTableFeature, match="carry_manifest"):
+        read_upsert_version(spark, t).count()
+    with pytest.raises(UnsupportedTableFeature, match="carry_manifest"):
+        check_table_writable(t)
+
+
 def test_delete_routes_partition_predicates_to_metadata_drop(
         spark, tmp_path):
     """Delta's partition-predicate DELETE fast path: a DELETE WHERE
@@ -945,22 +963,18 @@ def test_overlapping_writer_still_restages(spark, tmp_path):
     assert got[6] == 777
 
 
-@pytest.mark.parametrize("carry_mode", ["link", "manifest"])
 def test_disjoint_writer_stress_zero_restages(spark, tmp_path,
-                                              monkeypatch, carry_mode):
+                                              monkeypatch):
     """Two-writer disjoint-partition stress (VERDICT r11 item 5 'done'
     gate): writers A and B each land N commits confined to their own
     partition while racing live threads. Every lost CAS race must take
     the rebase fast path — total Spark staging writes == total commits
     (zero re-stages) — and the journal must be strictly sequenced with
-    the final state equal to serial keep-latest application. Runs in
-    both carry modes (the rebase re-links in link mode, re-points in
-    manifest mode)."""
+    the final state equal to serial keep-latest application."""
     import threading
 
     import house_price_etl_pipeline_spark.streaming.ingest as ing
 
-    monkeypatch.setenv("SPARK_GRAFT_CARRY_MODE", carry_mode)
     target = os.path.join(str(tmp_path), "tbl")
     set_table_partitioning(target, {"bucket": "bigint"})
     base = spark.range(30).select(
@@ -1024,23 +1038,21 @@ def test_disjoint_writer_stress_zero_restages(spark, tmp_path,
     assert got == model
 
 
-@pytest.mark.parametrize("carry_mode", ["link", "manifest"])
 def test_vacuum_honors_asof_readers_across_partition_drop(
-        spark, tmp_path, monkeypatch, carry_mode):
+        spark, tmp_path):
     """VACUUM × partition drop × time travel (VERDICT r11 item 7): a
     metadata partition drop makes the dropped files unreferenced at
-    HEAD while retained pre-drop versions still need them. Pins, in
-    both carry modes: (1) while the pre-drop version is retained, a
-    force-VACUUM at zero age must not break its AS-OF read of the
-    dropped partition; (2) once it retires, reclaim happens — but only
-    of files no retained version references (manifest pinning), with
-    every retained read still correct; (3) the retention floor refuses
+    HEAD while retained pre-drop versions still need them. Pins: (1)
+    while the pre-drop version is retained, a force-VACUUM at zero age
+    must not break its AS-OF read of the dropped partition; (2) once
+    it retires, reclaim happens — its bytes go, while the files the
+    retained versions link live on, with every retained read still
+    correct; (3) the retention floor refuses
     young reclaims by default, so an in-flight reader's window is
     never closed by a default VACUUM call."""
     from house_price_etl_pipeline_spark.streaming.ingest import (
         VACUUM_RETENTION_FLOOR_S, vacuum_upsert_target)
 
-    monkeypatch.setenv("SPARK_GRAFT_CARRY_MODE", carry_mode)
     t = os.path.join(str(tmp_path), "tbl")
     set_table_partitioning(t, {"bucket": "bigint"})
     base = spark.range(40).select(
@@ -1064,10 +1076,10 @@ def test_vacuum_honors_asof_readers_across_partition_drop(
     assert pre_drop.filter("bucket = 3").count() == 10
     assert read_upsert_version(spark, t).filter("bucket = 3").count() == 0
 
-    # v2 retires v0 (keep_versions=2 → retained {v2, v1}); in manifest
-    # mode v1/v2 still point at v0's PHYSICAL files for buckets 0-2 —
-    # those must survive both the publish prune and the vacuum, while
-    # bucket=3's files (referenced by nothing retained) are reclaimed
+    # v2 retires v0 (keep_versions=2 → retained {v2, v1}); v1/v2 still
+    # link v0's files for buckets 0-2 — those inodes must survive both
+    # the publish prune and the vacuum, while bucket=3's files
+    # (linked by nothing retained) are reclaimed
     delta = spark.createDataFrame([(0, 0, 999)],
                                   "k bigint, bucket bigint, v bigint")
     upsert_commit_batch(delta, t, 2, key_cols=["k", "bucket"],
@@ -1095,6 +1107,135 @@ def test_vacuum_honors_asof_readers_across_partition_drop(
         for f in fs
         if f.endswith(".parquet") and "bucket=3" in r]
     assert leftovers == []
+
+
+def test_incremental_partitioned_dml_and_feeds(spark, tmp_path):
+    """Incremental commits on a PARTITIONED table: the rewritten files
+    land only under the delta's partition while every other partition
+    carries by link, the typed read and SHOW PARTITIONS see the whole
+    snapshot, a metadata partition drop stages zero new files, and the
+    Python change-feed route diffs the carried versions."""
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        show_upsert_partitions)
+    from house_price_etl_pipeline_spark.streaming.partitioning import (
+        _walk_data_files)
+
+    t = _mk(spark, tmp_path, name="ptbl")
+    delta = spark.range(5).select(
+        (F.col("id") * 4 + 2).alias("k"),
+        F.lit(2).cast("bigint").alias("bucket"),
+        F.lit(999).cast("bigint").alias("v"))
+    upsert_commit_batch(delta, t, 1, key_cols=["k", "bucket"],
+                        order_col="v", keep_versions=8,
+                        incremental_min_bytes=0, max_retries=4)
+    commits, _ = _journal_state(t + "_versions")
+    base, cur = (os.path.join(t + "_versions", c["version_name"])
+                 for c in commits[-2:])
+    rewritten = set(_walk_data_files(cur)) - set(_walk_data_files(base))
+    assert rewritten
+    assert all(r.startswith("bucket=2" + os.sep) for r in rewritten)
+    snap = read_upsert_version(spark, t)
+    assert snap.count() == 80 and snap.filter("v = 999").count() == 5
+    assert dict(snap.dtypes)["bucket"] == "bigint"
+    assert snap.filter("bucket = 2").count() == 20
+    shown = {r["bucket"] for r in show_upsert_partitions(spark, t).collect()}
+    assert shown == {0, 1, 2, 3}
+    upsert_drop_partitions(spark, t, 2, "bucket = 3", keep_versions=8)
+    commits, _ = _journal_state(t + "_versions")
+    dropped = os.path.join(t + "_versions", commits[-1]["version_name"])
+    assert set(_walk_data_files(dropped)) == {
+        f for f in _walk_data_files(cur) if not f.startswith("bucket=3")}
+    snap2 = read_upsert_version(spark, t)
+    assert snap2.count() == 60
+    assert snap2.filter("bucket = 3").count() == 0
+    ch = read_changes_batch_pysource(
+        spark, t, key_cols=["k", "bucket"], starting_version=1,
+        ending_version=2)
+    got = {r["change_type"]: r["n"] for r in
+           ch.groupBy("change_type").agg(F.count("*").alias("n"))
+           .collect()}
+    assert got.get("delete") == 20
+    assert got.get("update_postimage", 0) + got.get("insert", 0) >= 5
+
+
+def test_rebase_fast_path_survives_concurrent_vacuum(spark, tmp_path):
+    """VERDICT r12 item 5: the disjoint-writer REBASE fast path racing
+    VACUUM. Two writers hammer disjoint partitions (losers rebase:
+    links re-made against the new head between a listing and a
+    publish) while a third thread force-VACUUMs at zero age with tight
+    retention — the window where a rebase's carry sources can vanish
+    mid-carry. Pins: every commit lands (rebase or graceful full
+    re-stage fallback), VACUUM never errors, the journal stays
+    gap-free, the final state equals serial application, and every
+    retained version dir (and the published head) still exists."""
+    import threading
+    import time
+
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        _retained_names, resolve_published_snapshot, vacuum_upsert_target)
+
+    t = os.path.join(str(tmp_path), "tbl")
+    set_table_partitioning(t, {"bucket": "bigint"})
+    base = spark.range(30).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("bucket"),
+        F.lit(0).cast("long").alias("payload"),
+        F.lit(0).cast("long").alias("ord"))
+    upsert_commit_batch(base, t, 0, key_cols=["k", "bucket"],
+                        order_col="ord", keep_versions=2,
+                        incremental_min_bytes=0)
+
+    errors, stop = [], threading.Event()
+
+    def writer(tag, bucket, ids):
+        try:
+            for bid in ids:
+                df = spark.createDataFrame(
+                    [(bucket * 100 + j, bucket, bid, bid)
+                     for j in range(3)],
+                    "k long, bucket long, payload long, ord long")
+                r = upsert_commit_batch(
+                    df, t, bid, key_cols=["k", "bucket"],
+                    order_col="ord", keep_versions=2, writer=tag,
+                    max_retries=16, incremental_min_bytes=0)
+                assert r in ("applied", "applied-after-retry"), r
+        except Exception as exc:  # pragma: no cover
+            errors.append((tag, exc))
+
+    def vacuumer():
+        try:
+            while not stop.is_set():
+                vacuum_upsert_target(t, older_than_seconds=0,
+                                     keep_versions=2, force=True)
+                time.sleep(0.005)
+        except Exception as exc:  # pragma: no cover
+            errors.append(("vacuum", exc))
+
+    ts = [threading.Thread(target=writer, args=("a", 1, [1, 3, 5, 7, 9])),
+          threading.Thread(target=writer, args=("b", 2, [2, 4, 6, 8, 10])),
+          threading.Thread(target=vacuumer)]
+    for th in ts:
+        th.start()
+    for th in ts[:2]:
+        th.join()
+    stop.set()
+    ts[2].join()
+    assert errors == []
+
+    commits, _ = _journal_state(t + "_versions")
+    assert [c["seq"] for c in commits] == list(range(len(commits)))
+    assert {c["version"] for c in commits} == set(range(11))
+    # final state == serial keep-latest application
+    got = {r.k: (r.bucket, r.payload) for r in
+           read_upsert_version(spark, t).collect()}
+    model = {i: (i % 3, 0) for i in range(30)}
+    model.update({100 + j: (1, 9) for j in range(3)})
+    model.update({200 + j: (2, 10) for j in range(3)})
+    assert got == model
+    reachable = _retained_names(commits, 2)
+    reachable.add(os.path.basename(resolve_published_snapshot(t)))
+    for name in sorted(reachable):
+        assert os.path.isdir(os.path.join(t + "_versions", name)), \
+            f"retained version dir missing: {name}"
 
 
 def test_rebase_classifies_delete_merge_overwrite_scopes(spark, tmp_path):

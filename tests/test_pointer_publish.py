@@ -1,17 +1,12 @@
-"""Pointer-file publication (SPARK_GRAFT_PUBLISH_MODE=pointer) + the
-abstracted CAS primitive — the object-store posture completed (VERDICT
-r12 item 2).
+"""Publication and the abstracted CAS primitive of the versioned table.
 
-Every test here runs with BOTH ``os.symlink`` and ``os.link``
-monkeypatched to raise, in manifest carry mode: the whole DML /
-OPTIMIZE / VACUUM / time-travel / change-feed surface must work on a
-filesystem with no links of any kind, which is exactly an object
-store. Publication is the ``_LATEST.json`` pointer file (Delta's
-``_last_checkpoint`` pattern); engine reads resolve the commit
-journal's head (Delta's readers-resolve-the-log rule), so a stale
-pointer can never regress a read. The commit CAS itself routes
-through ``fsutil.cas_put_if_absent`` — one swappable primitive shaped
-like an If-None-Match conditional PUT.
+The commit CAS routes through ``fsutil.cas_put_if_absent`` — one
+swappable primitive shaped like an If-None-Match conditional PUT — so
+the fault matrix below can serve the failure modes a conditional-write
+backend has (ambiguous PUTs, transient 5xx) and pin the commit
+protocol's invariants. Head resolution follows the published symlink
+and falls back to the commit journal's head when the link dangles
+(Delta's readers-resolve-the-log rule).
 """
 
 from __future__ import annotations
@@ -24,24 +19,8 @@ from pyspark.sql import functions as F
 
 from house_price_etl_pipeline_spark import fsutil
 from house_price_etl_pipeline_spark.streaming.ingest import (
-    _journal_state, optimize_upsert_target, read_upsert_as_of_timestamp,
-    read_upsert_changes, read_upsert_version, resolve_published_snapshot,
-    upsert_commit_batch, upsert_delete_where, upsert_merge_into,
-    upsert_update_where, vacuum_upsert_target)
-
-
-def _no_links_pointer_mode(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_MODE", "pointer")
-    monkeypatch.setenv("SPARK_GRAFT_CARRY_MODE", "manifest")
-
-    def no_link(*a, **k):
-        raise AssertionError("os.link called in pointer/manifest mode")
-
-    def no_symlink(*a, **k):
-        raise AssertionError("os.symlink called in pointer publish mode")
-
-    monkeypatch.setattr(os, "link", no_link)
-    monkeypatch.setattr(os, "symlink", no_symlink)
+    _journal_state, read_upsert_version, resolve_published_snapshot,
+    upsert_commit_batch)
 
 
 def _mk_flat(spark, tmp_path, n=400, keep_versions=8):
@@ -54,94 +33,6 @@ def _mk_flat(spark, tmp_path, n=400, keep_versions=8):
                             keep_versions=keep_versions,
                             incremental_min_bytes=0, max_retries=4)
     return t
-
-
-def _latest(t):
-    with open(os.path.join(t + "_versions", "_LATEST.json")) as f:
-        return json.load(f)
-
-
-def test_pointer_dml_sequence_no_symlink(spark, tmp_path, monkeypatch):
-    """Full DML chain with zero link/symlink syscalls: commits publish
-    the pointer file, reads resolve the journal head, the target path
-    itself never exists on disk."""
-    _no_links_pointer_mode(monkeypatch)
-    t = _mk_flat(spark, tmp_path)
-    assert not os.path.lexists(t)  # no symlink was ever created
-    assert read_upsert_version(spark, t).count() == 400
-
-    upsert_update_where(spark, t, 2, "k < 10", {"v": "-1"},
-                        key_cols=["k"], keep_versions=8,
-                        incremental_min_bytes=0, max_retries=4)
-    upsert_delete_where(spark, t, 3, "k >= 390", keep_versions=8,
-                        max_retries=4, incremental_min_bytes=0)
-    src = spark.createDataFrame([(10, 777, 1), (1000, 777, 1)],
-                                "k bigint, v bigint, ord int")
-    upsert_merge_into(spark, t, 4, src, ["k"], keep_versions=8,
-                      max_retries=4, incremental_min_bytes=0)
-    snap = read_upsert_version(spark, t)
-    assert snap.count() == 391  # 400 - 10 deleted + 1 inserted
-    assert snap.filter("v = -1").count() == 10
-    assert snap.filter("v = 777").count() == 2
-    # the pointer file tracks the journal head exactly
-    commits, _ = _journal_state(t + "_versions")
-    assert _latest(t)["seq"] == commits[-1]["seq"]
-    assert _latest(t)["version_name"] == commits[-1]["version_name"]
-    # resolver lands inside the versions root on the head snapshot
-    pub = resolve_published_snapshot(t)
-    assert os.path.dirname(pub) == t + "_versions"
-    assert os.path.basename(pub) == commits[-1]["version_name"]
-
-
-def test_pointer_optimize_and_time_travel(spark, tmp_path, monkeypatch):
-    _no_links_pointer_mode(monkeypatch)
-    t = _mk_flat(spark, tmp_path)
-    upsert_delete_where(spark, t, 2, "k % 2 = 1", keep_versions=8,
-                        max_retries=4, incremental_min_bytes=0)
-    optimize_upsert_target(spark, t, keep_versions=8)
-    assert read_upsert_version(spark, t).count() == 200
-    # VERSION AS OF across the OPTIMIZE (shares its version number)
-    assert read_upsert_version(spark, t, 1).count() == 400
-    assert read_upsert_version(spark, t, 2).count() == 200
-    # TIMESTAMP AS OF resolves through in-commit timestamps
-    commits, _ = _journal_state(t + "_versions")
-    ts1 = next(c["ts"] for c in commits if c["version"] == 1
-               and c["op"] == "upsert")
-    assert read_upsert_as_of_timestamp(spark, t, ts1).count() == 400
-
-
-def test_pointer_cdf_and_vacuum(spark, tmp_path, monkeypatch):
-    _no_links_pointer_mode(monkeypatch)
-    t = _mk_flat(spark, tmp_path, keep_versions=2)
-    upsert_delete_where(spark, t, 2, "k < 5", keep_versions=2,
-                        max_retries=4, incremental_min_bytes=0)
-    ch = read_upsert_changes(spark, t, 1, 2, ["k"])
-    assert ch.filter("change_type = 'delete'").count() == 5
-    # retention (keep_versions=2) + VACUUM: the published head and its
-    # carry-pinned files survive; version 0 is gone
-    removed = vacuum_upsert_target(t, older_than_seconds=0,
-                                   keep_versions=2, force=True)
-    assert isinstance(removed, list)
-    assert read_upsert_version(spark, t).count() == 395
-    with pytest.raises(FileNotFoundError):
-        read_upsert_version(spark, t, 0)
-
-
-def test_mode_interop_symlink_table_flips_to_pointer(spark, tmp_path,
-                                                     monkeypatch):
-    """A table born in symlink mode keeps working after the flag flips:
-    the pointer publish drops the stale link so the resolver can never
-    regress to an old snapshot through it."""
-    monkeypatch.setenv("SPARK_GRAFT_CARRY_MODE", "manifest")
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_MODE", "symlink")
-    t = _mk_flat(spark, tmp_path)
-    assert os.path.islink(t)
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_MODE", "pointer")
-    upsert_delete_where(spark, t, 2, "k < 100", keep_versions=8,
-                        max_retries=4, incremental_min_bytes=0)
-    assert not os.path.lexists(t)  # stale link removed at publish
-    assert read_upsert_version(spark, t).count() == 300
-    assert read_upsert_version(spark, t, 1).count() == 400
 
 
 def test_cas_backend_hook_is_the_one_commit_path(tmp_path, monkeypatch):
@@ -185,7 +76,7 @@ def test_cas_single_shot_content(tmp_path):
         assert json.load(f) == {"seq": 0}
 
 
-# --- CAS/pointer fault matrix (VERDICT r13 item 3) --------------------------
+# --- CAS fault matrix (VERDICT r13 item 3) --------------------------
 #
 # The happy path is proven above; these inject the conditional-PUT
 # failure modes an object store actually serves and assert the commit
@@ -202,7 +93,6 @@ def test_cas_ambiguous_put_recovers_exactly_once(spark, tmp_path,
     batch_id idempotence turns the re-invocation into a 'replayed'
     no-op (entry already present) that also repairs publication. One
     journal entry, correct final state, no duplicate version dirs."""
-    _no_links_pointer_mode(monkeypatch)
     t = _mk_flat(spark, tmp_path)   # versions 0, 1 committed cleanly
 
     real = fsutil.cas_put_if_absent
@@ -233,8 +123,9 @@ def test_cas_ambiguous_put_recovers_exactly_once(spark, tmp_path,
     assert read_upsert_version(spark, t).count() == 410
     assert read_upsert_version(spark, t).filter("v = 9").count() == 10
     # publication was repaired by the replay (crash landed between CAS
-    # and publish, so the pointer had lagged)
-    assert _latest(t)["seq"] == 2
+    # and publish, so the link had lagged)
+    assert os.path.basename(os.path.realpath(t)) \
+        == commits[2]["version_name"]
 
 
 def test_cas_ambiguous_put_not_applied_recovers(spark, tmp_path,
@@ -243,7 +134,6 @@ def test_cas_ambiguous_put_not_applied_recovers(spark, tmp_path,
     backend applied anything. The same recovery rule (re-invoke) must
     then take the normal commit path — ambiguity needs no special
     casing at the call site."""
-    _no_links_pointer_mode(monkeypatch)
     t = _mk_flat(spark, tmp_path)
 
     real = fsutil.cas_put_if_absent
@@ -275,7 +165,6 @@ def test_cas_transient_5xx_retrying_backend(spark, tmp_path,
     object-store SDK retries 500/503 internally) — a backend that
     fails twice then succeeds must be invisible to the protocol: one
     commit, one journal entry, monotonic ICT."""
-    _no_links_pointer_mode(monkeypatch)
     real = fsutil.cas_put_if_absent
     attempts = {"n": 0}
 
@@ -299,37 +188,6 @@ def test_cas_transient_5xx_retrying_backend(spark, tmp_path,
     assert attempts["n"] >= 6   # the shim really did absorb failures
 
 
-def test_pointer_read_lag_never_regresses_reads(spark, tmp_path,
-                                                monkeypatch):
-    """Pointer-read lag: an object store can serve a STALE _LATEST.json
-    (read-your-write lag on the pointer object) while the journal
-    already has newer commits. Readers resolve the JOURNAL head —
-    Delta's readers-resolve-the-log rule — so the lagging pointer can
-    never regress a read; the pointer is only a last resort for
-    journal-less layouts."""
-    _no_links_pointer_mode(monkeypatch)
-    t = _mk_flat(spark, tmp_path)
-    vr = t + "_versions"
-    stale = _latest(t)
-
-    upsert_delete_where(spark, t, 2, "k < 100", keep_versions=8,
-                        max_retries=4, incremental_min_bytes=0)
-    fresh = _latest(t)
-    assert fresh["seq"] > stale["seq"]
-
-    # simulate the lagging pointer object: overwrite with the stale one
-    with open(os.path.join(vr, "_LATEST.json"), "w") as f:
-        json.dump(stale, f)
-    commits, _ = _journal_state(vr)
-    pub = resolve_published_snapshot(t)
-    assert os.path.basename(pub) == commits[-1]["version_name"]
-    assert read_upsert_version(spark, t).count() == 300  # head, not stale
-
-    # pointer missing entirely: journal still resolves
-    os.unlink(os.path.join(vr, "_LATEST.json"))
-    assert read_upsert_version(spark, t).count() == 300
-
-
 def test_cas_fault_matrix_concurrent_writers_converge(spark, tmp_path,
                                                       monkeypatch):
     """Convergence under a deterministic fault mix: four writers race
@@ -339,7 +197,6 @@ def test_cas_fault_matrix_concurrent_writers_converge(spark, tmp_path,
     re-invoke on error, per the recovery rule). Invariants: journal
     seqs are gapless and strictly ordered, every batch applied exactly
     once, final row count exact."""
-    _no_links_pointer_mode(monkeypatch)
     import threading
 
     t = os.path.join(str(tmp_path), "tbl")
@@ -401,10 +258,13 @@ def test_head_resolution_never_reads_full_journal(spark, tmp_path,
     parses every entry — so the head resolver must go through
     fsutil.journal_head (one listdir + one small JSON, flat in
     history depth) and NEVER the full journal read. Structural pin:
-    resolving a journaled pointer-mode table with read_commit_journal
-    forbidden must still succeed."""
-    _no_links_pointer_mode(monkeypatch)
+    resolving a table whose link dangles (so resolution takes the
+    journal route) with read_commit_journal forbidden must still
+    succeed."""
     t = _mk_flat(spark, tmp_path)
+    commits_head = _journal_state(t + "_versions")[0][-1]["version_name"]
+    os.unlink(t)
+    os.symlink(os.path.join(t + "_versions", "does_not_exist"), t)
 
     def forbidden(commits_dir):
         raise AssertionError(
@@ -412,7 +272,6 @@ def test_head_resolution_never_reads_full_journal(spark, tmp_path,
             "resolution regressed to O(history)")
 
     monkeypatch.setattr(fsutil, "read_commit_journal", forbidden)
-    commits_head = _latest(t)["version_name"]
     pub = resolve_published_snapshot(t)
     assert os.path.basename(pub) == commits_head
 
@@ -436,12 +295,10 @@ def test_journal_head_steps_back_past_inflight_newest(tmp_path):
     assert fsutil.journal_head(str(tmp_path / "missing")) is None
 
 
-def test_dangling_symlink_falls_back_to_journal(spark, tmp_path,
-                                                monkeypatch):
+def test_dangling_symlink_falls_back_to_journal(spark, tmp_path):
     """A BROKEN published link (target pruned by an external cleanup or
     lost in a migration) must not win over the journal: the resolver
     falls through to the journal head and reads keep working."""
-    monkeypatch.setenv("SPARK_GRAFT_CARRY_MODE", "manifest")
     t = _mk_flat(spark, tmp_path)
     assert os.path.islink(t)
     os.unlink(t)

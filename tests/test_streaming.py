@@ -268,13 +268,12 @@ def test_foreach_batch_upsert_versioned_publication(spark, tmp_path):
     versions are pruned to current+prior, the readable path is always a
     complete snapshot, and re-delivered batch ids are exactly-once
     no-ops."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
     from house_price_etl_pipeline_spark.streaming.ingest import (
-        stream_upsert_foreach_batch)
+        _journal_state, stream_upsert_foreach_batch)
     from house_price_etl_pipeline_spark.streaming.windows import (
         EVENTS_RAW_SCHEMA)
 
@@ -292,9 +291,8 @@ def test_foreach_batch_upsert_versioned_publication(spark, tmp_path):
     q.awaitTermination()
 
     assert os.path.islink(target)
-    with open(target + "_versions/_POINTER.json") as f:
-        ptr = json.load(f)
-    assert ptr["applied"] == [0, 1, 2] and ptr["version"] == 2
+    commits, applied = _journal_state(target + "_versions")
+    assert sorted(applied) == [0, 1, 2] and commits[-1]["version"] == 2
     rows = {r.user_id: r.event_type
             for r in spark.read.parquet(target).collect()}
     assert rows == {1: "view", 2: "purchase"}
@@ -696,12 +694,9 @@ def test_upsert_stale_publish_never_regresses(spark, tmp_path):
     assert head["writer"] == "wB"
     # the readable table is B's head (both batches merged), NOT A's
     # regressed snapshot
-    import json as _json
     import os as _os
     assert _os.path.basename(_os.path.realpath(target)) \
         == head["version_name"]
-    with open(_os.path.join(target + "_versions", "_POINTER.json")) as f:
-        assert _json.load(f)["version"] == head["version"]
     assert {r.user_id for r in spark.read.parquet(target).collect()} \
         == {1, 2}
 
@@ -819,10 +814,10 @@ def test_upsert_concurrent_writers_optimize_stress(spark, tmp_path):
     the deterministic tests above model one window at a time. The
     band-index twin of this test caught a mid-scan swap crash the
     hook-driven tests missed; invariants, not timings: every commit
-    lands, journal strictly sequenced, the published symlink and
-    pointer end on the journal head, and the final table equals serial
-    keep-latest application of every batch."""
-    import json as _json
+    lands, journal strictly sequenced, the published symlink ends on
+    the journal head (which records every applied batch), and the
+    final table equals serial keep-latest application of every
+    batch."""
     import os as _os
     import threading
 
@@ -885,10 +880,9 @@ def test_upsert_concurrent_writers_optimize_stress(spark, tmp_path):
     head = commits[-1]
     assert _os.path.basename(_os.path.realpath(target)) \
         == head["version_name"]
-    with open(_os.path.join(target + "_versions", "_POINTER.json")) as f:
-        ptr = _json.load(f)
-    assert ptr["version"] == head["version"]
-    assert ptr["applied"] == applied
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        _journal_state)
+    assert sorted(_journal_state(target + "_versions")[1]) == applied
     # final table == serial keep-latest over every batch: each key won
     # by its highest covering batch id
     expected = {}
@@ -4103,3 +4097,116 @@ def test_flat_schema_cache_survives_concurrent_eviction(monkeypatch):
     assert not hit.is_alive() and not miss.is_alive()
     assert errors == []
     assert list(ingest._FLAT_SCHEMA_CACHE) == [("app", "d2")]
+
+
+def test_incremental_dml_sequence_and_time_travel(spark, tmp_path):
+    """Incremental UPDATE and DELETE on a two-file flat table, then the
+    surfaces that read across the link-carried versions: time travel,
+    the change feed between two versions, a full OPTIMIZE, and RESTORE
+    of a carried version."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        optimize_upsert_target, read_upsert_changes, read_upsert_version,
+        restore_upsert_target, upsert_commit_batch, upsert_delete_where,
+        upsert_update_where)
+
+    t = os.path.join(str(tmp_path), "tbl")
+    for b, (lo, hi) in enumerate([(0, 200), (200, 400)]):
+        df = spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+            F.lit(0).alias("ord"))
+        upsert_commit_batch(df, t, b, key_cols=["k"], order_col="ord",
+                            keep_versions=8, incremental_min_bytes=0,
+                            max_retries=4)
+    upsert_update_where(spark, t, 2, "k < 10", {"v": F.lit(-5)},
+                        keep_versions=8, incremental_min_bytes=0)
+    upsert_delete_where(spark, t, 3, "k >= 390", keep_versions=8,
+                        incremental_min_bytes=0)
+    head = read_upsert_version(spark, t)
+    assert head.count() == 390
+    assert head.filter("v = -5").count() == 10
+    v1 = read_upsert_version(spark, t, 1)
+    assert v1.count() == 400 and v1.filter("v = -5").count() == 0
+    # only real changes emit across the carried versions
+    ch = read_upsert_changes(spark, t, 1, 3, key_cols=["k"])
+    got = {r["change_type"]: r["n"] for r in
+           ch.groupBy("change_type").agg(F.count("*").alias("n"))
+           .collect()}
+    assert got == {"update_preimage": 10, "update_postimage": 10,
+                   "delete": 10}
+    optimize_upsert_target(spark, t, keep_versions=8)
+    assert read_upsert_version(spark, t).count() == 390
+    restore_upsert_target(spark, t, 2, 4, keep_versions=8)
+    restored = read_upsert_version(spark, t)
+    assert restored.count() == 400
+    assert restored.filter("v = -5").count() == 10
+
+
+def test_full_rewrite_stage_walks_the_base_once(spark, tmp_path,
+                                                monkeypatch):
+    """A full-rewrite upsert or DELETE sizes its base snapshot ONCE per
+    stage attempt: the same byte count decides the incremental cutover
+    and the staging width."""
+    import os
+
+    import house_price_etl_pipeline_spark.streaming.ingest as ing
+
+    t = os.path.join(str(tmp_path), "tbl")
+    df = spark.range(40).selectExpr("id as k", "id as v", "0 as ord")
+    ing.upsert_commit_batch(df, t, 0, key_cols=["k"], order_col="ord",
+                            keep_versions=4)
+    calls = []
+    real = ing._data_file_bytes
+
+    def counting(path, skip=()):
+        calls.append(path)
+        return real(path, skip)
+
+    monkeypatch.setattr(ing, "_data_file_bytes", counting)
+    full = 1 << 62          # every snapshot is below the cutover
+    delta = spark.range(5).selectExpr("id as k", "-1 as v", "1 as ord")
+    assert ing.upsert_commit_batch(
+        delta, t, 1, key_cols=["k"], order_col="ord", keep_versions=4,
+        incremental_min_bytes=full) == "applied"
+    assert len(calls) == 1
+    calls.clear()
+    assert ing.upsert_delete_where(
+        spark, t, 2, "k >= 30", keep_versions=4,
+        incremental_min_bytes=full) == "applied"
+    assert len(calls) == 1
+    assert ing.read_upsert_version(spark, t).count() == 30
+
+
+def test_insert_only_incremental_commit_keeps_session_width(
+        spark, tmp_path, monkeypatch):
+    """An incremental upsert whose keys touch no base file stages the
+    whole delta, whose size is unknown: it must keep the session's
+    staging width (hint None, as the first commit does) instead of a
+    zero-byte hint that narrows the write to one task."""
+    import os
+
+    import house_price_etl_pipeline_spark.streaming.ingest as ing
+
+    t = os.path.join(str(tmp_path), "tbl")
+    df = spark.range(40).selectExpr("id as k", "id as v", "0 as ord")
+    ing.upsert_commit_batch(df, t, 0, key_cols=["k"], order_col="ord",
+                            keep_versions=4, incremental_min_bytes=0)
+    hints = []
+    real = ing._staged_write
+
+    def capturing(*a, **k):
+        hints.append(k.get("input_bytes_hint"))
+        return real(*a, **k)
+
+    monkeypatch.setattr(ing, "_staged_write", capturing)
+    fresh = spark.range(100, 120).selectExpr("id as k", "id as v",
+                                             "1 as ord")
+    ing.upsert_commit_batch(fresh, t, 1, key_cols=["k"], order_col="ord",
+                            keep_versions=4, incremental_min_bytes=0)
+    entry = ing._journal_state(t + "_versions")[0][-1]
+    assert entry["files_rewritten"] == 0 and entry["files_reused"] >= 1
+    assert hints == [None]
+    assert ing.read_upsert_version(spark, t).count() == 60
