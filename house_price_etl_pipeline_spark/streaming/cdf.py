@@ -76,7 +76,7 @@ CHANGE_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
 # path across versions.
 from .partitioning import _walk_data_files as _data_files  # noqa: E402
 from .partitioning import arrow_to_ddl_type as _arrow_to_ddl_type  # noqa: E402
-from .partitioning import partition_values_of, table_partitioning  # noqa: E402
+from .partitioning import partition_values_of  # noqa: E402
 
 
 def _version_range_indexes(vc: list[dict], starting_version,
@@ -101,19 +101,24 @@ def _version_range_indexes(vc: list[dict], starting_version,
     return lo, max(lo, hi)
 
 
-def _table_columns(target_dir: str) -> list[tuple[str, str]]:
+def _table_columns(target_dir: str,
+                   meta: dict | None = None) -> list[tuple[str, str]]:
     """(name, ddl_type) pairs from the published snapshot's footer —
     driver-side, one footer read, no Spark job. A PARTITIONED BY
     table's partition columns live in directory names, not footers, so
     they are appended from the table's declaration (in declaration
     order, after the data columns — the same order the typed snapshot
-    reader uses)."""
+    reader uses). ``meta`` is the head's metadata document when the
+    caller already holds it."""
     import pyarrow.parquet as pq
 
-    from .colmap import table_column_mapping
+    from .colmap import _mapping_of
+    from .ingest import table_metadata
 
-    parts = table_partitioning(target_dir)
-    m = table_column_mapping(target_dir)
+    if meta is None:
+        meta = table_metadata(target_dir)
+    parts = meta.get("partitioning", {})
+    m = _mapping_of(meta)
     phys_to_log = {p: lg for lg, p in m["renames"].items()}
     dropped = set(m["dropped"])
     from .ingest import resolve_published_snapshot
@@ -223,12 +228,14 @@ class UpsertChangesStreamReader(DataSourceStreamReader):
         sv = options.get("starting_version")
         self.starting_version = int(sv) if sv is not None else None
         self._pos: int | None = None
-        from .partitioning import check_table_readable
-        check_table_readable(self.path)
-        self.parts = table_partitioning(self.path)
-        from .colmap import table_column_mapping
-        self.phys_of = dict(table_column_mapping(self.path)["renames"])
-        self.columns = [c for c, _ in _table_columns(self.path)]
+        from .colmap import _mapping_of
+        from .ingest import table_metadata
+        from .partitioning import _check_features
+        meta = table_metadata(self.path)
+        _check_features(meta, self.path, writer=False)
+        self.parts = meta.get("partitioning", {})
+        self.phys_of = _mapping_of(meta)["renames"]
+        self.columns = [c for c, _ in _table_columns(self.path, meta)]
         missing = [k for k in self.key_cols if k not in self.columns]
         if missing:
             raise ValueError(

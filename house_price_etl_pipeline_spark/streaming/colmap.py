@@ -3,8 +3,10 @@
 byte of data, Delta's columnMapping feature re-expressed on the mini
 format.
 
-The mapping lives in ``_COLUMN_MAPPING.json`` beside the commit
-journal (the same placement as constraints/partitioning metadata):
+The mapping is the ``column_mapping`` field of the metadata document
+every journal entry carries (``ingest.table_metadata`` — the same
+document as constraints and partitioning), and a rename or drop is a
+metadata commit serialized with the data commits:
 
     {"renames": {"logical_name": "physical_name", ...},
      "dropped": ["physical_name", ...]}
@@ -27,13 +29,13 @@ Like Delta with columnMapping enabled, a renamed/dropped table's raw
 parquet is no longer faithfully readable by naive external readers
 (they see physical names); the format's own readers are the contract.
 
-Documented divergence from Delta: this format's table metadata
-(mapping, constraints, partitioning) is table-level, not versioned
-per commit — a time-travel read of a PRE-rename version shows the
-CURRENT logical names (physical names are frozen, so the data is
-identical either way), where Delta would replay the schema as of that
-version. The same rule already applies to CHECK constraints here
-(RESTORE validates against the CURRENT set).
+Documented divergence from Delta: although every journal entry carries
+the metadata document as of that commit, reads apply the HEAD's
+document (mapping, constraints, partitioning) — a time-travel read of
+a PRE-rename version shows the CURRENT logical names (physical names
+are frozen, so the data is identical either way), where Delta would
+replay the schema as of that version. The same rule already applies to
+CHECK constraints here (RESTORE validates against the CURRENT set).
 
 Restrictions (all refused loudly, mirroring Delta's):
 - renaming/dropping a column referenced by a CHECK constraint, a
@@ -47,27 +49,20 @@ Restrictions (all refused loudly, mirroring Delta's):
 
 from __future__ import annotations
 
-import json
-import os
 
-_COLMAP_FILE = "_COLUMN_MAPPING.json"
-
-
-def _colmap_path(target_dir: str) -> str:
-    return os.path.join(target_dir + "_versions", _COLMAP_FILE)
+def _mapping_of(meta: dict) -> dict:
+    """{"renames": {logical: physical}, "dropped": [physical, ...]} of
+    a metadata document — empty structures when it has no mapping."""
+    m = meta.get("column_mapping", {})
+    return {"renames": dict(m.get("renames", {})),
+            "dropped": list(m.get("dropped", []))}
 
 
 def table_column_mapping(target_dir: str) -> dict:
-    """{"renames": {logical: physical}, "dropped": [physical, ...]} —
-    empty structures when the table has no mapping."""
-    p = _colmap_path(target_dir)
-    if not os.path.exists(p):
-        return {"renames": {}, "dropped": []}
-    with open(p) as f:
-        m = json.load(f)
-    m.setdefault("renames", {})
-    m.setdefault("dropped", [])
-    return m
+    """The table's column mapping (``_mapping_of``) — a view of the
+    journal head's metadata document."""
+    from .ingest import table_metadata
+    return _mapping_of(table_metadata(target_dir))
 
 
 def _has_mapping(m: dict) -> bool:
@@ -129,27 +124,23 @@ def to_physical(df, m: dict):
         F.col(f"`{c}`").alias(renames.get(c, c)) for c in df.columns])
 
 
-def _referenced_anywhere(target_dir: str, logical: str) -> str | None:
+def _referenced_anywhere(meta: dict, logical: str) -> str | None:
     """Why this column cannot be renamed/dropped, or None if free.
     Checks the same metadata surfaces Delta's ALTER TABLE guards do."""
-    from .ingest import (table_check_constraints, table_generated_columns,
-                         table_identity_column)
-    from .partitioning import table_partitioning
-
-    if logical in table_partitioning(target_dir):
+    if logical in meta.get("partitioning", {}):
         return "it is a PARTITIONED BY column (partition directories " \
                "carry its name)"
-    ident = table_identity_column(target_dir)
+    ident = meta.get("identity")
     if ident and ident["name"] == logical:
         return "it is the GENERATED ALWAYS AS IDENTITY column"
-    for name, expr in table_check_constraints(target_dir).items():
+    for name, expr in meta.get("constraints", {}).items():
         if isinstance(expr, dict):          # typed entry (NOT NULL)
             if expr.get("col") == logical:
                 return f"NOT NULL constraint {name!r} references it"
             continue
         if _expr_references(expr, logical):
             return f"CHECK constraint {name!r} ({expr}) references it"
-    for name, expr in table_generated_columns(target_dir).items():
+    for name, expr in meta.get("generated", {}).items():
         if name == logical:
             return f"it is generated column {name!r}"
         if _expr_references(expr, logical):
@@ -173,46 +164,57 @@ def _expr_references(expr: str, col: str) -> bool:
     return col in names
 
 
-def _table_logical_columns(spark, target_dir: str) -> list[str]:
-    from .ingest import read_upsert_version
-    return read_upsert_version(spark, target_dir).columns
+def _alter_column(spark, target_dir: str, name: str, verb: str,
+                  change) -> None:
+    """The shared ALTER TABLE RENAME/DROP COLUMN commit: validates
+    ``name`` against the attempt's head (its logical columns and its
+    metadata references) while ``change(m, cols)`` edits the mapping
+    ``m`` — one metadata commit, zero data movement."""
+    from .ingest import _commit_metadata, _head_dir, _snapshot_read
+    from .partitioning import _add_feature
+
+    def declare(commits, meta):
+        cols = _snapshot_read(spark, meta,
+                              _head_dir(target_dir, commits)).columns
+        if name not in cols:
+            raise ValueError(
+                f"cannot {verb} {name!r}: not a column of this table "
+                f"(columns: {cols})")
+        m = _mapping_of(meta)
+        change(m, cols)
+        why = _referenced_anywhere(meta, name)
+        if why:
+            raise ValueError(
+                f"cannot {verb} column {name!r}: {why} — drop/redeclare "
+                f"that first (Delta refuses the same way)")
+        meta["column_mapping"] = m
+        _add_feature(meta, "column_mapping")
+
+    _commit_metadata(target_dir, declare)
 
 
 def rename_table_column(spark, target_dir: str, old: str,
                         new: str) -> None:
-    """ALTER TABLE RENAME COLUMN old TO new — one metadata write, zero
+    """ALTER TABLE RENAME COLUMN old TO new — one metadata commit, zero
     data movement at any table size. The physical name in the files
     stays frozen (that is what keeps every retained snapshot's
     hard-linked files valid); readers and writers see ``new`` from the
     next operation on."""
-    from ..fsutil import atomic_write_json
+    def change(m, cols):
+        if new in cols:
+            raise ValueError(
+                f"cannot rename {old!r} to {new!r}: the target name "
+                f"already exists")
+        # physical name of `old` = its current mapping target, else itself
+        phys = m["renames"].pop(old, old)
+        if phys in m["dropped"]:
+            raise ValueError(
+                f"physical column {phys!r} was dropped — cannot rename "
+                f"onto it")
+        if new != phys:
+            m["renames"][new] = phys
 
-    m = table_column_mapping(target_dir)
-    cols = _table_logical_columns(spark, target_dir)
-    if old not in cols:
-        raise ValueError(
-            f"cannot rename {old!r}: not a column of this table "
-            f"(columns: {cols})")
-    if new in cols:
-        raise ValueError(
-            f"cannot rename {old!r} to {new!r}: the target name "
-            f"already exists")
-    why = _referenced_anywhere(target_dir, old)
-    if why:
-        raise ValueError(
-            f"cannot rename column {old!r}: {why} — drop/redeclare "
-            f"that first (Delta refuses the same way)")
-    # physical name of `old` = its current mapping target, else itself
-    phys = m["renames"].pop(old, old)
-    if phys in m["dropped"]:
-        raise ValueError(
-            f"physical column {phys!r} was dropped — cannot rename "
-            f"onto it")
-    if new != phys:
-        m["renames"][new] = phys
-    atomic_write_json(_colmap_path(target_dir), m)
-    from .partitioning import register_table_feature
-    register_table_feature(target_dir, "column_mapping")
+    _alter_column(spark, target_dir, old, "rename", change)
 
 
 def drop_table_column(spark, target_dir: str, name: str) -> None:
@@ -222,23 +224,9 @@ def drop_table_column(spark, target_dir: str, name: str) -> None:
     contract). Refused for key-metadata columns (partitioning,
     identity, constraint/generated references) and for the table's
     last column."""
-    from ..fsutil import atomic_write_json
+    def change(m, cols):
+        if len(cols) <= 1:
+            raise ValueError("cannot drop the table's last column")
+        m["dropped"].append(m["renames"].pop(name, name))
 
-    m = table_column_mapping(target_dir)
-    cols = _table_logical_columns(spark, target_dir)
-    if name not in cols:
-        raise ValueError(
-            f"cannot drop {name!r}: not a column of this table "
-            f"(columns: {cols})")
-    if len(cols) <= 1:
-        raise ValueError("cannot drop the table's last column")
-    why = _referenced_anywhere(target_dir, name)
-    if why:
-        raise ValueError(
-            f"cannot drop column {name!r}: {why} — drop/redeclare "
-            f"that first (Delta refuses the same way)")
-    phys = m["renames"].pop(name, name)
-    m["dropped"].append(phys)
-    atomic_write_json(_colmap_path(target_dir), m)
-    from .partitioning import register_table_feature
-    register_table_feature(target_dir, "column_mapping")
+    _alter_column(spark, target_dir, name, "drop", change)

@@ -79,21 +79,50 @@ def _commits_dir(versions_root: str) -> str:
     return os.path.join(versions_root, "_commits")
 
 
-def _resolve_version_dir(versions_root: str, version: int) -> str | None:
+def _resolve_version_dir(versions_root: str, version: int,
+                         commits: list[dict] | None = None) -> str | None:
     """Map a public version number (= upsert batch id) to its retained
-    snapshot directory via the commit journal; legacy layouts without a
-    journal fall back to the ``v{N}`` naming convention."""
+    snapshot directory via the commit journal (``commits``, when the
+    caller already holds it). Only journaled versions resolve: a
+    ``v{N}`` dir no entry names is a stage between its rename and its
+    CAS, or a crashed writer's leftover — never committed data."""
     import os
 
-    from ..fsutil import read_commit_journal
-
-    commits = read_commit_journal(_commits_dir(versions_root))
+    if commits is None:
+        from ..fsutil import read_commit_journal
+        commits = read_commit_journal(_commits_dir(versions_root))
     for c in reversed(commits):
         if c.get("version") == version:
             d = os.path.join(versions_root, c["version_name"])
             return d if os.path.isdir(d) else None
-    legacy = os.path.join(versions_root, f"v{version}")
-    return legacy if os.path.isdir(legacy) else None
+    return None
+
+
+def table_metadata(target_dir: str,
+                   commits: list[dict] | None = None) -> dict:
+    """THE table-metadata reader: the ``metadata`` document the journal
+    head carries — {"partitioning", "column_mapping", "constraints",
+    "defaults", "generated", "identity", "protocol"}, non-empty keys
+    only (Delta's ``metaData`` action). Every commit copies its base
+    head's document forward and a declaration commits a new one
+    (``_commit_metadata``), so the head always holds the current
+    document: one file read (``journal_head``), or none when the
+    caller already holds the journal (``commits`` — inside a commit
+    attempt, always its own, so a lost CAS re-validates under the
+    winner's metadata). Callers must not mutate the result."""
+    if commits is None:
+        from ..fsutil import journal_head
+        head = journal_head(_commits_dir(target_dir + "_versions"))
+    else:
+        head = commits[-1] if commits else None
+    return (head or {}).get("metadata", {})
+
+
+def _head_name(commits: list[dict]) -> str | None:
+    """The head's snapshot name; None while the table has no data (an
+    empty journal, or only metadata declared so far) — THE "has the
+    table data" question."""
+    return commits[-1]["version_name"] if commits else None
 
 
 def resolve_published_snapshot(target_dir: str) -> str:
@@ -122,7 +151,7 @@ def resolve_published_snapshot(target_dir: str) -> str:
     from ..fsutil import journal_head
 
     head = journal_head(_commits_dir(versions_root))
-    if head is not None:
+    if head is not None and head["version_name"] is not None:
         # the head entry carries its own version_name: no journal scan
         # (the version->name mapping _resolve_version_dir does is for
         # TIME-TRAVEL reads, where the number is all the caller has)
@@ -142,22 +171,21 @@ def read_upsert_version(spark, target_dir: str,
     applied version; retained version dirs are the readable subset —
     exactly the Delta/Iceberg time-travel contract scaled down to plain
     parquet + a commit log."""
-    import os
-
     if version is None:
-        return _snapshot_read(spark, target_dir,
+        return _snapshot_read(spark, table_metadata(target_dir),
                               resolve_published_snapshot(target_dir))
     versions_root = target_dir + "_versions"
-    vdir = _resolve_version_dir(versions_root, version)
+    commits, applied = _journal_state(versions_root)
+    vdir = _resolve_version_dir(versions_root, version, commits)
     if vdir is None:
-        commits, applied = _journal_state(versions_root)
         retained = sorted(
-            c["version"] for c in commits
-            if _resolve_version_dir(versions_root, c["version"]) is not None)
+            c["version"] for c in commits if c["op"] != "metadata"
+            and _resolve_version_dir(versions_root, c["version"],
+                                     commits) is not None)
         raise FileNotFoundError(
             f"version {version} not retained (applied={sorted(applied)}, "
             f"retained={retained}); raise keep_versions to retain more")
-    return _snapshot_read(spark, target_dir, vdir)
+    return _snapshot_read(spark, table_metadata(target_dir, commits), vdir)
 
 
 def _commit_mtimes(versions_root: str) -> list[tuple[dict, float]]:
@@ -295,6 +323,8 @@ def _retained_names(commits: list[dict], keep_versions: int) -> set[str]:
     names: set[str] = set()
     versions: list = []
     for c in reversed(commits):
+        if c["version_name"] is None:
+            continue            # metadata declared before any data
         if c["version"] not in versions:
             if len(versions) == keep:
                 break
@@ -317,7 +347,8 @@ def _publish_commit(target_dir: str, versions_root: str,
                     _pre_swap_hook=None) -> None:
     """Derived state after a won CAS (or repair after a crash between
     commit and publication): point the symlink at the journal head and
-    prune snapshots beyond retention.
+    prune snapshots beyond retention (``keep_versions`` None: no
+    pruning — a metadata commit carries no retention setting).
 
     Publication itself races (stale-publish regression): a writer that
     won seq N can be preempted between its post-CAS journal re-read and
@@ -351,8 +382,10 @@ def _publish_commit(target_dir: str, versions_root: str,
                         _round, head["seq"], target_dir)
         if _pre_swap_hook is not None:
             _pre_swap_hook(head)
-        atomic_symlink_swap(
-            target_dir, os.path.join(versions_root, head["version_name"]))
+        if head["version_name"] is not None:   # None: no data yet
+            atomic_symlink_swap(
+                target_dir,
+                os.path.join(versions_root, head["version_name"]))
         # Prune ONLY snapshots referenced by commits now outside the
         # retention window — provably retired. Unreferenced dirs are NOT
         # touched here: one may be a concurrent writer's staged snapshot
@@ -362,12 +395,13 @@ def _publish_commit(target_dir: str, versions_root: str,
         # so OPTIMIZE runs never shrink time travel.
         # rmtree unlinks names only: a carried file's inode lives on
         # in every retained version that links it
-        retained = _retained_names(commits, keep_versions)
-        for c in commits:
-            if c["version_name"] not in retained:
-                shutil.rmtree(
-                    os.path.join(versions_root, c["version_name"]),
-                    ignore_errors=True)
+        if keep_versions is not None:
+            retained = _retained_names(commits, keep_versions)
+            for c in commits:
+                if c["version_name"] and c["version_name"] not in retained:
+                    shutil.rmtree(
+                        os.path.join(versions_root, c["version_name"]),
+                        ignore_errors=True)
         latest = read_commit_journal(_commits_dir(versions_root))
         if not latest or latest[-1]["seq"] == head["seq"]:
             # journal checkpoint ride-along (Delta's log checkpoints):
@@ -482,10 +516,11 @@ def _flat_parquet_read(spark, snap_dir: str, paths: list[str]):
     return df
 
 
-def _snapshot_read(spark, target_dir: str, snap_dir: str,
+def _snapshot_read(spark, meta: dict, snap_dir: str,
                    files: list[str] | None = None,
                    file_col: str | None = None):
-    """THE snapshot read path: plain ``spark.read.parquet`` for flat
+    """THE snapshot read path under the table's metadata document
+    ``meta`` (``table_metadata``): plain ``spark.read.parquet`` for flat
     tables; for partitioned tables an explicit-schema read that types
     the partition columns from the table's declaration instead of
     Spark's per-scan inference (partitioning.read_snapshot), with
@@ -496,14 +531,13 @@ def _snapshot_read(spark, target_dir: str, snap_dir: str,
     column-mapping projection."""
     import os
 
-    from .colmap import table_column_mapping, to_logical
-    from .partitioning import (check_table_readable, read_snapshot,
-                               table_partitioning)
+    from .colmap import _mapping_of, to_logical
+    from .partitioning import _check_features, read_snapshot
 
     # protocol gate: refuse features this build can't interpret rather
     # than silently misreading (Delta's reader-version contract)
-    check_table_readable(target_dir)
-    parts = table_partitioning(target_dir)
+    _check_features(meta, snap_dir, writer=False)
+    parts = meta.get("partitioning", {})
     if parts:
         df = read_snapshot(spark, snap_dir, parts, files)
     elif files is not None:
@@ -516,7 +550,7 @@ def _snapshot_read(spark, target_dir: str, snap_dir: str,
         df = df.withColumn(file_col, F.col("_metadata.file_path"))
     # column mapping: physical file names → the table's logical schema
     # (renames applied, dropped columns hidden) — no-op without mapping
-    return to_logical(df, table_column_mapping(target_dir))
+    return to_logical(df, _mapping_of(meta))
 
 
 def _stage_partition_bytes() -> int:
@@ -585,21 +619,21 @@ def _staging_conf(spark, input_bytes_hint: int | None):
                                    prev_width)
 
 
-def _staged_write(df, target_dir: str, stage_path: str,
+def _staged_write(df, meta: dict, stage_path: str,
                   max_records_per_file: int | None = None,
                   input_bytes_hint: int | None = None) -> None:
-    """Staged snapshot write honoring the table's PARTITIONED BY spec
-    (Hive layout via ``partitionBy``) and its column mapping (logical →
+    """Staged snapshot write honoring the PARTITIONED BY spec of the
+    metadata document ``meta`` (Hive layout via ``partitionBy``) and
+    its column mapping (logical →
     physical names, so renames never change the on-disk schema and
     hard-link carries stay valid); the one write path every full
     rewrite shares. ``input_bytes_hint`` — the staging computation's
     known input size (compressed bytes) — scales the shuffle width to
     the delta instead of the session's compute width (_stage_width)."""
-    from .colmap import table_column_mapping, to_physical
-    from .partitioning import table_partitioning
+    from .colmap import _mapping_of, to_physical
 
-    df = to_physical(df, table_column_mapping(target_dir))
-    parts = table_partitioning(target_dir)
+    df = to_physical(df, _mapping_of(meta))
+    parts = meta.get("partitioning", {})
     if parts:
         missing = [c for c in parts if c not in df.columns]
         if missing:
@@ -652,9 +686,8 @@ def _staged_write(df, target_dir: str, stage_path: str,
 PARTITION_PRUNE_CAP = 1024
 
 
-def _touched_files_by_keys(spark, base_dir: str, keys_df,
+def _touched_files_by_keys(spark, meta: dict, base_dir: str, keys_df,
                            key_cols: list[str],
-                           target_dir: str | None = None,
                            part_tuples: list[dict] | None = None
                            ) -> tuple[set[str], list[str]]:
     """(touched, kept) relative paths of the base snapshot's data
@@ -678,13 +711,12 @@ def _touched_files_by_keys(spark, base_dir: str, keys_df,
     the whole table to find it."""
     from pyspark.sql import functions as F
 
-    from .partitioning import (partition_tuple_filter, table_partitioning)
+    from .partitioning import partition_tuple_filter
 
-    snap = (_snapshot_read(spark, target_dir or base_dir, base_dir,
-                           file_col="_file")
+    snap = (_snapshot_read(spark, meta, base_dir, file_col="_file")
             .select(*key_cols, "_file")
             .alias("t"))
-    parts = table_partitioning(target_dir) if target_dir else {}
+    parts = meta.get("partitioning", {})
     if parts and set(parts) <= set(key_cols):
         tuples = part_tuples if part_tuples is not None else [
             r.asDict() for r in
@@ -704,14 +736,14 @@ def _touched_files_by_keys(spark, base_dir: str, keys_df,
                      if f not in touched]
 
 
-def _touched_files_by_predicate(spark, target_dir: str, base_dir: str,
+def _touched_files_by_predicate(spark, meta: dict, base_dir: str,
                                 condition) -> tuple[set[str], list[str]]:
     """(touched, kept) relative paths of the base snapshot's data files:
     those holding at least one row ``condition`` is TRUE for, and every
     other file — the DELETE/UPDATE touched-file scan. The predicate is
     pushed to the scan, so a partition-column predicate prunes whole
     directories before any file opens."""
-    rows = (_snapshot_read(spark, target_dir, base_dir, file_col="_file")
+    rows = (_snapshot_read(spark, meta, base_dir, file_col="_file")
             .filter(condition)
             .select("_file").distinct().collect())
     touched = _file_paths_to_relpaths(rows, base_dir)
@@ -731,8 +763,8 @@ def _link_or_copy(src: str, dst: str) -> None:
 
 
 def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
-                      kept_files: list[str], rewritten_df,
-                      target_dir: str | None = None) -> None:
+                      kept_files: list[str], rewritten_df, *,
+                      meta: dict) -> None:
     """Materialize a staged snapshot as ``rewritten_df``'s output plus
     the base snapshot's untouched data files, carried as hard links
     (copy fallback). The Spark write runs FIRST (mode=overwrite clears
@@ -751,8 +783,7 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
         # commit touches no base file: its input is the whole delta,
         # of unknown size, so it keeps the session width too
         touched_bytes = _data_file_bytes(snapshot_dir, skip=kept_files)
-        _staged_write(rewritten_df, target_dir or snapshot_dir,
-                      stage_dir, input_bytes_hint=(
+        _staged_write(rewritten_df, meta, stage_dir, input_bytes_hint=(
                           2 * touched_bytes if touched_bytes else None))
     else:
         os.makedirs(stage_dir, exist_ok=True)
@@ -773,15 +804,13 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
             root, ext = os.path.splitext(name)
             dst = os.path.join(stage_dir, f"{root}-linked{ext}")
         _link_or_copy(os.path.join(snapshot_dir, name), dst)
-    if target_dir is not None:
-        # keep data skipping alive across incremental commits: carry
-        # kept files' manifest entries, footer-read only the rewritten
-        # files — O(changed data), Delta's per-commit add.stats cost.
-        # No-op when the base never had a manifest.
-        from .partitioning import table_partitioning
-        from .skipping import carry_stats_manifest
-        carry_stats_manifest(snapshot_dir, stage_dir, kept_files,
-                             parts=table_partitioning(target_dir))
+    # keep data skipping alive across incremental commits: carry kept
+    # files' manifest entries, footer-read only the rewritten files —
+    # O(changed data), Delta's per-commit add.stats cost. No-op when
+    # the base never had a manifest.
+    from .skipping import carry_stats_manifest
+    carry_stats_manifest(snapshot_dir, stage_dir, kept_files,
+                         parts=meta.get("partitioning", {}))
 
 
 def _schemas_match(a, b) -> bool:
@@ -793,7 +822,7 @@ def _schemas_match(a, b) -> bool:
             == {(f.name, f.dataType) for f in b.fields})
 
 
-def _touched_partition_claim(target_dir: str,
+def _touched_partition_claim(parts: dict,
                              touched) -> list[str] | None:
     """Partition-dir scope claim from a touched-file set, recorded in
     the journal entry for the disjoint-writer classifier
@@ -807,8 +836,7 @@ def _touched_partition_claim(target_dir: str,
     instead). An EMPTY claim is valid: the op touched nothing."""
     import os
 
-    from .partitioning import table_partitioning
-    if not table_partitioning(target_dir):
+    if not parts:
         return None
     dirs = {os.path.dirname(f) for f in touched}
     if "" in dirs or len(dirs) > PARTITION_PRUNE_CAP:
@@ -816,7 +844,7 @@ def _touched_partition_claim(target_dir: str,
     return sorted(dirs)
 
 
-def _delta_partition_scope(df, target_dir: str, key_cols: list[str]):
+def _delta_partition_scope(df, parts: dict, key_cols: list[str]):
     """(partition tuples, partition dirs) of a delta/source frame —
     the one delta-sized distinct+collect that feeds BOTH the
     touched-file scan's pruning filter and the journal entry's
@@ -824,9 +852,8 @@ def _delta_partition_scope(df, target_dir: str, key_cols: list[str]):
     (None, None) when the table is flat, the partition columns aren't
     a key subset, or the delta spans more than PARTITION_PRUNE_CAP
     partitions (unrecorded scope = conflicting, the safe default)."""
-    from .partitioning import partition_dir_of, table_partitioning
+    from .partitioning import partition_dir_of
 
-    parts = table_partitioning(target_dir)
     if not parts or not set(parts) <= set(key_cols):
         return None, None
     tuples = [r.asDict() for r in
@@ -904,6 +931,7 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
                 if not claimable or tp is None or ours & set(tp):
                     return None            # logical conflict: re-stage
             head = commits[-1]
+            meta = table_metadata(target_dir, commits)
             new_base = os.path.join(versions_root, head["version_name"])
             try:
                 new_kept = [f for f in _snapshot_data_files(new_base)
@@ -922,7 +950,7 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
                         os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.rename(os.path.join(cur_dir, f), dst)
                 _stage_with_reuse(new_base, fresh, new_kept, None,
-                                  target_dir=target_dir)
+                                  meta=meta)
             except FileNotFoundError:
                 # new head pruned under us mid-carry. Our rewritten
                 # files were already MOVED into `fresh`, so another
@@ -942,6 +970,8 @@ def _rebase_disjoint_stage(target_dir: str, versions_root: str,
                      "files_reused": len(new_kept),
                      "touched_partitions": sorted(delta_pdirs),
                      "rebased": True}
+            if meta:
+                entry["metadata"] = meta
             if try_commit(_commits_dir(versions_root), head["seq"] + 1,
                           entry):
                 commits, _ = _journal_state(versions_root)
@@ -968,10 +998,10 @@ def _head_dir(target_dir: str, commits: list[dict],
     error raised when there is none."""
     import os
 
-    if not commits:
+    name = _head_name(commits)
+    if name is None:
         raise FileNotFoundError(f"no upsert table at {target_dir}{missing}")
-    return os.path.join(target_dir + "_versions",
-                        commits[-1]["version_name"])
+    return os.path.join(target_dir + "_versions", name)
 
 
 def _livelock(what: str, version: int, max_retries: int) -> str:
@@ -995,9 +1025,14 @@ def _commit_version(target_dir: str, op: str, version: int | None,
     ``stage(commits, stage_dir)`` is the op: it writes the new snapshot
     into ``stage_dir`` — a unique ``_stage_<writer>_<uuid>`` name, so
     the journal only ever references fully-written data (Delta's
-    ordering) — from the base ``commits[-1]``, and returns the journal
-    entry's op-specific fields, or None when there is nothing to commit
-    (the driver then returns None).
+    ordering) — from the base ``commits[-1]``, validating against that
+    base's metadata document (``table_metadata(target_dir, commits)``),
+    and returns the journal entry's op-specific fields, or None when
+    there is nothing to commit (the driver then returns None). The
+    entry carries the base's metadata document forward unless the
+    fields hold a new one: op ``metadata`` (``_commit_metadata``)
+    stages no snapshot — its entry reuses the head's version and
+    snapshot name — and returns only ``{"metadata": document}``.
 
     - ``version``: the version the commit claims; None claims the
       head's (OPTIMIZE rewrites the head in place, so it can never be
@@ -1072,8 +1107,11 @@ def _commit_version(target_dir: str, op: str, version: int | None,
             raise
         if fields is None:
             return None
-        claimed = head["version"] if version is None else version
-        if tag is None:
+        claimed = (head["version"] if head else None) \
+            if version is None else version
+        if op == "metadata":
+            perm = head["version_name"] if head else None
+        elif tag is None:
             # snapshot dirs keep the public v{version} name when free
             # (the common single-writer case); a racing same-version
             # writer gets a unique suffix — readers resolve through the
@@ -1091,6 +1129,9 @@ def _commit_version(target_dir: str, op: str, version: int | None,
             _race_hook(_attempt)
         entry = {"op": op, "version": claimed, "version_name": perm,
                  "writer": writer, **fields}
+        meta = entry.pop("metadata", table_metadata(target_dir, commits))
+        if meta:
+            entry["metadata"] = meta
         if try_commit(_commits_dir(versions_root), base_seq + 1, entry):
             commits, _ = _journal_state(versions_root)
             _publish_commit(target_dir, versions_root, commits,
@@ -1104,7 +1145,9 @@ def _commit_version(target_dir: str, op: str, version: int | None,
             status = rebase(perm, base_seq)
             if status is not None:
                 return status
-        shutil.rmtree(os.path.join(versions_root, perm), ignore_errors=True)
+        if op != "metadata":        # never the head's own snapshot
+            shutil.rmtree(os.path.join(versions_root, perm),
+                          ignore_errors=True)
     if exhausted is None:
         return None
     raise RuntimeError(exhausted)
@@ -1147,31 +1190,6 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
     os.makedirs(versions_root, exist_ok=True)
     spark = batch_df.sparkSession
 
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
-    defaults = table_column_defaults(target_dir)
-    if defaults:
-        # DEFAULT before generated: a generated expression may
-        # reference a defaulted input
-        batch_df = _apply_defaults(batch_df, defaults,
-                                   _current_table_types(spark, target_dir))
-    gens = table_generated_columns(target_dir)
-    if gens:
-        # generated columns first (a CHECK may reference one): omitted
-        # columns computed, supplied ones validated
-        batch_df = _apply_generated(batch_df, gens, "the incoming batch")
-    ident = table_identity_column(target_dir)
-    if ident and ident["name"] in batch_df.columns:
-        raise ValueError(
-            f"column {ident['name']!r} is GENERATED ALWAYS AS IDENTITY "
-            f"— it cannot be supplied by a batch (Delta's contract); "
-            f"drop it from the batch and let allocation assign it")
-    cons = table_check_constraints(target_dir)
-    if cons:
-        # CHECK enforcement on the INCOMING rows (one delta-sized pass,
-        # never the table) — before any staging work is spent
-        _validate_constraints(batch_df, cons, "the incoming batch")
-
     def keep_latest(df):
         w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
         return (df.withColumn("_rn", F.row_number().over(w))
@@ -1194,27 +1212,44 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
         return (u.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn", "__kl_src"))
 
-    # Commit-scope classification for the disjoint-writer fast path:
-    # the batch's distinct partition tuples are BOTH the touched-file
-    # scan's pruning filter and the journal entry's
-    # ``touched_partitions`` claim other writers classify conflicts
-    # against. One delta-sized collect, computed LAZILY on first use —
-    # full-rewrite commits (tiny base / schema evolution) never need it
-    # and must not pay the extra job.
-    _scope = functools.cache(
-        lambda: _delta_partition_scope(batch_df, target_dir, key_cols))
-    # (kept, touched) of the current attempt's incremental stage when
-    # its scope is claimable — what the disjoint-writer rebase re-links
+    # (kept, touched, partition dirs) of the current attempt's
+    # incremental stage when its scope is claimable — what the
+    # disjoint-writer rebase re-links
     reuse = None
 
     def stage(commits, stage_dir):
         nonlocal reuse
         reuse = None
-        base = commits[-1]["version_name"] if commits else None
+        meta = table_metadata(target_dir, commits)
+        base = _head_name(commits)
         fields: dict = {}
         ident_hwm = None
         ident_carried: list[str] = []   # hard-linked files the hwm scan skips
-        delta = keep_latest(batch_df)
+        base_dir = (os.path.join(versions_root, base)
+                    if base is not None else None)
+        snapshot = (_snapshot_read(spark, meta, base_dir)
+                    if base is not None else None)
+        ident = meta.get("identity")
+        if ident and ident["name"] in batch_df.columns:
+            raise ValueError(
+                f"column {ident['name']!r} is GENERATED ALWAYS AS "
+                f"IDENTITY — it cannot be supplied by a batch (Delta's "
+                f"contract); drop it from the batch and let allocation "
+                f"assign it")
+        # the write contract is checked against THIS attempt's
+        # metadata: a lost CAS to a declaration re-validates under it
+        batch = _incoming_rows(batch_df, meta, target_dir, snapshot,
+                               "the incoming batch")
+        # Commit-scope classification for the disjoint-writer fast
+        # path: the batch's distinct partition tuples are BOTH the
+        # touched-file scan's pruning filter and the journal entry's
+        # ``touched_partitions`` claim other writers classify conflicts
+        # against. One delta-sized collect, computed LAZILY on first
+        # use — full-rewrite commits (tiny base / schema evolution)
+        # never need it and must not pay the extra job.
+        _scope = functools.cache(lambda: _delta_partition_scope(
+            batch, meta.get("partitioning", {}), key_cols))
+        delta = keep_latest(batch)
         if ident:
             # allocation is CAS-serialized for free: the range base
             # comes off the journal head we are about to CAS against
@@ -1226,10 +1261,6 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
         delta_schema = (delta.withColumn(
             ident["name"], F.lit(None).cast("bigint")).schema
             if ident else delta.schema)
-        base_dir = (os.path.join(versions_root, base)
-                    if base is not None else None)
-        snapshot = (_snapshot_read(spark, target_dir, base_dir)
-                    if base is not None else None)
         base_bytes = (_data_file_bytes(base_dir)
                       if base is not None else None)
         if (snapshot is not None
@@ -1238,10 +1269,10 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
             # file-granular copy-on-write: rewrite only the files
             # holding keys the delta touches; hard-link the rest
             touched, kept = _touched_files_by_keys(
-                spark, base_dir, delta, key_cols, target_dir,
+                spark, meta, base_dir, delta, key_cols,
                 part_tuples=_scope()[0])
             if touched:
-                sub = _snapshot_read(spark, target_dir, base_dir,
+                sub = _snapshot_read(spark, meta, base_dir,
                                      files=sorted(touched))
                 if ident:
                     # touched files hold every key the delta can
@@ -1254,7 +1285,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                     delta = _assign_identity(delta, ident, ident_hwm)
                 merged = delta
             _stage_with_reuse(base_dir, stage_dir, kept, merged,
-                              target_dir=target_dir)
+                              meta=meta)
             fields["files_rewritten"] = len(touched)
             fields["files_reused"] = len(kept)
             if _scope()[1] is not None:
@@ -1263,7 +1294,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                 # (a full rewrite touches everything)
                 fields["touched_partitions"] = _scope()[1]
                 if not ident:
-                    reuse = (kept, touched)
+                    reuse = (kept, touched, _scope()[1])
             ident_carried = kept
         else:
             if snapshot is not None:
@@ -1284,7 +1315,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
             # full rewrite over a known base: size the staging
             # shuffle to its bytes (first commits have no base and
             # an unknown batch size — keep the session width)
-            _staged_write(merged, target_dir, stage_dir,
+            _staged_write(merged, meta, stage_dir,
                           input_bytes_hint=(
                               2 * base_bytes
                               if snapshot is not None else None))
@@ -1300,9 +1331,9 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
         # moves + carries, no Spark) instead of re-merging
         if reuse is None:
             return None
-        kept, touched = reuse
+        kept, touched, pdirs = reuse
         return _rebase_disjoint_stage(
-            target_dir, versions_root, perm, kept, touched, _scope()[1],
+            target_dir, versions_root, perm, kept, touched, pdirs,
             base_seq, batch_id, writer, keep_versions, len(touched))
 
     return _commit_version(
@@ -1338,12 +1369,12 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
 
     if isinstance(condition, str):
         condition = F.expr(condition)
-    from .partitioning import check_table_writable, table_partitioning
-    check_table_writable(target_dir)
+    from .partitioning import _check_features, table_partitioning
     # Delta's partition-predicate DELETE fast path: a predicate whose
     # references are ALL partition columns never needs to read a row —
     # route to the metadata-only drop (same journal op, same 3VL, same
-    # exactly-once domain), zero data I/O at any table size
+    # exactly-once domain), zero data I/O at any table size. The spec
+    # is fixed once the table has data, so one head read decides.
     _parts = table_partitioning(target_dir)
     if _parts:
         # a predicate that ANALYZES against a partition-columns-only
@@ -1363,31 +1394,34 @@ def upsert_delete_where(spark, target_dir: str, batch_id: int,
 
     def stage(commits, stage_dir):
         base_dir = _head_dir(target_dir, commits)
+        meta = table_metadata(target_dir, commits)
+        _check_features(meta, target_dir, writer=True)
         base_bytes = _data_file_bytes(base_dir)
         if base_bytes >= _min_bytes_cutoff(incremental_min_bytes):
             # touched = files holding at least one row the predicate
             # actually deletes; every other file carries into the new
             # version as a hard link
             touched, kept_files = _touched_files_by_predicate(
-                spark, target_dir, base_dir, condition)
+                spark, meta, base_dir, condition)
             rewritten = None
             if touched:
                 rewritten = (_snapshot_read(
-                    spark, target_dir, base_dir, files=sorted(touched))
+                    spark, meta, base_dir, files=sorted(touched))
                     .filter(F.coalesce(~condition, F.lit(True))))
             _stage_with_reuse(base_dir, stage_dir, kept_files, rewritten,
-                              target_dir=target_dir)
+                              meta=meta)
             fields = {"files_rewritten": len(touched),
                       "files_reused": len(kept_files)}
             # DELETE rows only vanish — rewrites stay in the touched
             # partitions, so the claim is exact
-            claim = _touched_partition_claim(target_dir, touched)
+            claim = _touched_partition_claim(
+                meta.get("partitioning", {}), touched)
             if claim is not None:
                 fields["touched_partitions"] = claim
             return fields
-        kept = (_snapshot_read(spark, target_dir, base_dir)
+        kept = (_snapshot_read(spark, meta, base_dir)
                 .filter(F.coalesce(~condition, F.lit(True))))
-        _staged_write(kept, target_dir, stage_dir,
+        _staged_write(kept, meta, stage_dir,
                       input_bytes_hint=base_bytes)
         return {}
 
@@ -1443,28 +1477,30 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
             f"UPDATE SET on key column(s) {bad_keys} refused — "
             f"rewriting merge keys breaks the unique-keys invariant; "
             f"re-key with DELETE + upsert or MERGE INTO")
-    gens = table_generated_columns(target_dir)
-    bad_gen = sorted(set(sets) & set(gens))
-    if bad_gen:
-        raise ValueError(
-            f"UPDATE SET on generated column(s) {bad_gen} refused — "
-            f"GENERATED ALWAYS AS columns recompute from their "
-            f"expression when an UPDATE touches their inputs (Delta's "
-            f"contract); SET the inputs instead")
-    ident = table_identity_column(target_dir)
-    if ident and ident["name"] in sets:
-        raise ValueError(
-            f"UPDATE SET on identity column {ident['name']!r} refused "
-            f"— GENERATED ALWAYS AS IDENTITY values are "
-            f"allocation-owned")
     hit = F.coalesce(condition, F.lit(False))
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
-    cons = table_check_constraints(target_dir)
+    from .partitioning import _check_features
 
     def stage(commits, stage_dir):
+        meta = table_metadata(target_dir, commits)
+        gens = meta.get("generated", {})
+        bad_gen = sorted(set(sets) & set(gens))
+        if bad_gen:
+            raise ValueError(
+                f"UPDATE SET on generated column(s) {bad_gen} refused — "
+                f"GENERATED ALWAYS AS columns recompute from their "
+                f"expression when an UPDATE touches their inputs "
+                f"(Delta's contract); SET the inputs instead")
+        ident = meta.get("identity")
+        if ident and ident["name"] in sets:
+            raise ValueError(
+                f"UPDATE SET on identity column {ident['name']!r} "
+                f"refused — GENERATED ALWAYS AS IDENTITY values are "
+                f"allocation-owned")
+        _check_features(meta, target_dir, writer=True)
+        cons = meta.get("constraints", {})
+        parts = meta.get("partitioning", {})
         base_dir = _head_dir(target_dir, commits)
-        snapshot = _snapshot_read(spark, target_dir, base_dir)
+        snapshot = _snapshot_read(spark, meta, base_dir)
         missing = sorted(set(sets) - set(snapshot.columns))
         if missing:
             raise ValueError(
@@ -1502,14 +1538,14 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
                 _validate_constraints(
                     apply_update(snapshot.filter(hit)), cons,
                     "the UPDATE post-image")
-            _staged_write(apply_update(snapshot), target_dir, stage_dir,
+            _staged_write(apply_update(snapshot), meta, stage_dir,
                           input_bytes_hint=base_bytes)
             return {}
         touched, kept_files = _touched_files_by_predicate(
-            spark, target_dir, base_dir, condition)
+            spark, meta, base_dir, condition)
         rewritten = None
         if touched:
-            sub = _snapshot_read(spark, target_dir, base_dir,
+            sub = _snapshot_read(spark, meta, base_dir,
                                  files=sorted(touched))
             if cons:
                 # post-image validation on the TOUCHED subset —
@@ -1523,18 +1559,16 @@ def upsert_update_where(spark, target_dir: str, batch_id: int,
                     "the UPDATE post-image")
             rewritten = apply_update(sub)
         _stage_with_reuse(base_dir, stage_dir, kept_files, rewritten,
-                          target_dir=target_dir)
+                          meta=meta)
         fields = {"files_rewritten": len(touched),
                   "files_reused": len(kept_files)}
-        from .partitioning import table_partitioning as _tp
-        if not (set(sets) & set(_tp(target_dir))) and not (
-                set(gens) & set(_tp(target_dir))):
+        if not (set(sets) & set(parts)) and not (set(gens) & set(parts)):
             # no SET targets a partition column AND no partition
             # column is GENERATED (apply_update recomputes
             # generated columns from SET inputs — a generated
             # partition column could move rows out of the claimed
             # dirs) → updated rows stay put, the claim is exact
-            claim = _touched_partition_claim(target_dir, touched)
+            claim = _touched_partition_claim(parts, touched)
             if claim is not None:
                 fields["touched_partitions"] = claim
         return fields
@@ -1574,19 +1608,19 @@ def upsert_drop_partitions(spark, target_dir: str, batch_id: int,
 
     from pyspark.sql import functions as F
 
-    from .partitioning import list_partition_dirs, table_partitioning
+    from .partitioning import _check_features, list_partition_dirs
 
-    parts = table_partitioning(target_dir)
-    if not parts:
-        raise ValueError(
-            f"{target_dir} is not PARTITIONED BY — "
-            f"upsert_drop_partitions needs partition columns; use "
-            f"upsert_delete_where for row-level deletes")
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
     cond = F.expr(condition) if isinstance(condition, str) else condition
 
     def stage(commits, stage_dir):
+        meta = table_metadata(target_dir, commits)
+        parts = meta.get("partitioning", {})
+        if not parts:
+            raise ValueError(
+                f"{target_dir} is not PARTITIONED BY — "
+                f"upsert_drop_partitions needs partition columns; use "
+                f"upsert_delete_where for row-level deletes")
+        _check_features(meta, target_dir, writer=True)
         base_dir = _head_dir(target_dir, commits)
         # one row per live partition tuple — bounded by the
         # partition count, never the data; evaluating the predicate
@@ -1618,10 +1652,8 @@ def upsert_drop_partitions(spark, target_dir: str, batch_id: int,
         # empty typed write so the snapshot keeps its schema (the
         # _EMPTY marker path in _staged_write)
         rewritten = (None if kept
-                     else _snapshot_read(spark, target_dir,
-                                         base_dir).limit(0))
-        _stage_with_reuse(base_dir, stage_dir, kept, rewritten,
-                          target_dir=target_dir)
+                     else _snapshot_read(spark, meta, base_dir).limit(0))
+        _stage_with_reuse(base_dir, stage_dir, kept, rewritten, meta=meta)
         return {"files_rewritten": 0, "files_reused": len(kept),
                 "dropped_partitions": sorted(dropped_dirs)}
 
@@ -1661,55 +1693,41 @@ def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
     partition replace, not a merge)."""
     from pyspark.sql import functions as F
 
-    from .partitioning import table_partitioning
-
-    parts = table_partitioning(target_dir)
-    if not parts:
-        raise ValueError(
-            f"{target_dir} is not PARTITIONED BY — dynamic partition "
-            f"overwrite needs partition columns")
-    if not set(parts) <= set(key_cols):
-        raise ValueError(
-            f"PARTITIONED BY columns {list(parts)} must be part of "
-            f"key_cols {key_cols} for dynamic overwrite — otherwise a "
-            f"key could live in an untouched partition AND the batch, "
-            f"breaking the unique-keys invariant")
-    if table_identity_column(target_dir):
-        raise ValueError(
-            "dynamic partition overwrite is not supported on identity "
-            "tables — a whole-partition replace has no matched rows to "
-            "inherit ids through; use MERGE INTO")
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
-    defaults = table_column_defaults(target_dir)
-    if defaults:
-        # the snapshot-types read is only needed to type the fills —
-        # skip it (journal parse + footer read) on default-free tables
-        batch_df = _apply_defaults(
-            batch_df, defaults,
-            _current_table_types(batch_df.sparkSession, target_dir))
-    dup = (batch_df.groupBy(*key_cols).count()
-           .filter(F.col("count") > 1).limit(1).count())
-    if dup:
-        raise ValueError(
-            "overwrite batch has multiple rows for at least one key — "
-            "reduce it (e.g. keep-latest) first")
-    gens = table_generated_columns(target_dir)
-    if gens:
-        batch_df = _apply_generated(batch_df, gens, "the overwrite batch")
-    cons = table_check_constraints(target_dir)
-    if cons:
-        _validate_constraints(batch_df, cons, "the overwrite batch")
-
     def stage(commits, stage_dir):
+        meta = table_metadata(target_dir, commits)
+        parts = meta.get("partitioning", {})
+        if not parts:
+            raise ValueError(
+                f"{target_dir} is not PARTITIONED BY — dynamic partition "
+                f"overwrite needs partition columns")
+        if not set(parts) <= set(key_cols):
+            raise ValueError(
+                f"PARTITIONED BY columns {list(parts)} must be part of "
+                f"key_cols {key_cols} for dynamic overwrite — otherwise "
+                f"a key could live in an untouched partition AND the "
+                f"batch, breaking the unique-keys invariant")
+        if meta.get("identity"):
+            raise ValueError(
+                "dynamic partition overwrite is not supported on "
+                "identity tables — a whole-partition replace has no "
+                "matched rows to inherit ids through; use MERGE INTO")
         base_dir = _head_dir(
             target_dir, commits,
             " — dynamic overwrite needs an existing table (first write "
             "goes through upsert_commit_batch)")
+        snapshot = _snapshot_read(spark, meta, base_dir)
+        batch = _incoming_rows(batch_df, meta, target_dir, snapshot,
+                               "the overwrite batch")
+        dup = (batch.groupBy(*key_cols).count()
+               .filter(F.col("count") > 1).limit(1).count())
+        if dup:
+            raise ValueError(
+                "overwrite batch has multiple rows for at least one key "
+                "— reduce it (e.g. keep-latest) first")
         # the batch's own partitions — delta-sized distinct
         replaced = {
             tuple(r[c] for c in parts)
-            for r in batch_df.select(*parts).dropDuplicates().collect()}
+            for r in batch.select(*parts).dropDuplicates().collect()}
         from .partitioning import partition_values_of
         kept = []
         touched_n = 0
@@ -1719,13 +1737,11 @@ def upsert_overwrite_partitions(spark, target_dir: str, batch_id: int,
                 touched_n += 1
             else:
                 kept.append(f)
-        _stage_with_reuse(base_dir, stage_dir, kept, batch_df,
-                          target_dir=target_dir)
+        _stage_with_reuse(base_dir, stage_dir, kept, batch, meta=meta)
         fields = {"files_rewritten": touched_n, "files_reused": len(kept),
                   "replaced_partitions": len(replaced)}
         if len(replaced) <= PARTITION_PRUNE_CAP and _schemas_match(
-                _snapshot_read(spark, target_dir, base_dir).schema,
-                batch_df.schema):
+                snapshot.schema, batch.schema):
             # exact scope by construction: a dynamic overwrite touches
             # precisely its batch's partitions (requires parts ⊆ key).
             # The schema gate matters: a claim certifies an UNCHANGED
@@ -1974,8 +1990,6 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                 "MERGE source has multiple rows for at least one key — "
                 "reduce it (e.g. keep-latest) before merging, as Delta "
                 "requires")
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
     has_nmbs = (not_matched_by_source_delete is not None
                 or not_matched_by_source_update is not None)
     set_cols = set(matched_update_set or {}) \
@@ -1985,45 +1999,59 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
         raise ValueError(
             f"MERGE SET on key column(s) {bad_keys} refused — "
             f"rewriting merge keys breaks the unique-keys invariant")
-    gens = table_generated_columns(target_dir)
-    if gens and set_cols:
-        raise ValueError(
-            "MERGE SET maps are not supported on tables with GENERATED"
-            " ALWAYS AS columns — an assignment could stale a generated"
-            " value without recompute; use UPDATE SET * semantics or "
-            "upsert_update_where (which recomputes)")
-    if gens:
-        source = _apply_generated(source, gens, "the MERGE source")
-    ident = table_identity_column(target_dir)
-    if ident and ident["name"] in source.columns:
-        raise ValueError(
-            f"column {ident['name']!r} is GENERATED ALWAYS AS IDENTITY "
-            f"— a MERGE source cannot supply it; matched rows keep the "
-            f"target's value, inserted rows get fresh allocations")
-    if ident and ident["name"] in set_cols:
-        raise ValueError(
-            f"MERGE SET on identity column {ident['name']!r} refused "
-            f"— GENERATED ALWAYS AS IDENTITY values are "
-            f"allocation-owned")
-    cons = table_check_constraints(target_dir)
-    merge_defaults = table_column_defaults(target_dir)
-    # a NOT NULL column ABSENT from the source is fine when a DEFAULT
-    # will fill it on INSERT (updates retain the target's non-null
-    # value) — validating the raw source would refuse it wrongly; the
-    # post-image pass below still covers a NULL-producing default
-    nn_absent_defaulted = {
-        n for n, e in cons.items()
-        if isinstance(e, dict) and e.get("kind") == "not_null"
-        and e["col"] not in source.columns
-        and e["col"] in merge_defaults}
-    src_cons = {n: e for n, e in cons.items()
-                if n not in nn_absent_defaulted}
-    if src_cons:
-        _validate_constraints(source, src_cons, "the MERGE source")
     versions_root = target_dir + "_versions"
     os.makedirs(versions_root, exist_ok=True)
+    raw_source = source
 
-    def fill_identity(merged, commits):
+    def write_contract(meta):
+        """The source-side checks under the attempt's metadata: the
+        generated columns computed or validated, the identity column
+        refused, and the CHECK / NOT NULL constraints on the source
+        rows. Returns (source, constraints, defaults, the NOT NULL
+        constraints a DEFAULT satisfies)."""
+        from .partitioning import _check_features
+        _check_features(meta, target_dir, writer=True)
+        src = raw_source
+        gens = meta.get("generated", {})
+        if gens and set_cols:
+            raise ValueError(
+                "MERGE SET maps are not supported on tables with "
+                "GENERATED ALWAYS AS columns — an assignment could "
+                "stale a generated value without recompute; use UPDATE "
+                "SET * semantics or upsert_update_where (which "
+                "recomputes)")
+        if gens:
+            src = _apply_generated(src, gens, "the MERGE source")
+        ident = meta.get("identity")
+        if ident and ident["name"] in src.columns:
+            raise ValueError(
+                f"column {ident['name']!r} is GENERATED ALWAYS AS "
+                f"IDENTITY — a MERGE source cannot supply it; matched "
+                f"rows keep the target's value, inserted rows get "
+                f"fresh allocations")
+        if ident and ident["name"] in set_cols:
+            raise ValueError(
+                f"MERGE SET on identity column {ident['name']!r} "
+                f"refused — GENERATED ALWAYS AS IDENTITY values are "
+                f"allocation-owned")
+        cons = meta.get("constraints", {})
+        defaults = meta.get("defaults", {})
+        # a NOT NULL column ABSENT from the source is fine when a
+        # DEFAULT will fill it on INSERT (updates retain the target's
+        # non-null value) — validating the raw source would refuse it
+        # wrongly; the post-image pass still covers a NULL-producing
+        # default
+        nn_absent_defaulted = {
+            n for n, e in cons.items()
+            if isinstance(e, dict) and e.get("kind") == "not_null"
+            and e["col"] not in src.columns and e["col"] in defaults}
+        src_cons = {n: e for n, e in cons.items()
+                    if n not in nn_absent_defaulted}
+        if src_cons:
+            _validate_constraints(src, src_cons, "the MERGE source")
+        return src, cons, defaults, nn_absent_defaulted
+
+    def fill_identity(merged, commits, ident):
         """Inserted rows (NULL identity after the full-outer merge —
         or every row when merging into an empty table) get fresh
         allocations above the journal head's mark; matched/carried
@@ -2039,20 +2067,24 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
         return has.unionByName(
             _assign_identity(needs, ident, hwm)), hwm
 
-    # disjoint-writer scope claim (shared mechanics with
-    # upsert_commit_batch via _delta_partition_scope): the source's
-    # distinct partition tuples bound BOTH the touched files and every
-    # INSERTed row's partition (parts ⊆ key, and SET maps are refused
-    # on key columns), so the claim is exact for the incremental path.
-    # Lazy: full-rewrite merges never pay the collect.
-    _scope = functools.cache(
-        lambda: _delta_partition_scope(source, target_dir, key_cols))
-
     def stage(commits, stage_dir):
+        meta = table_metadata(target_dir, commits)
+        source, cons, merge_defaults, nn_absent_defaulted = \
+            write_contract(meta)
+        ident = meta.get("identity")
+        # disjoint-writer scope claim (shared mechanics with
+        # upsert_commit_batch via _delta_partition_scope): the source's
+        # distinct partition tuples bound BOTH the touched files and
+        # every INSERTed row's partition (parts ⊆ key, and SET maps are
+        # refused on key columns), so the claim is exact for the
+        # incremental path. Lazy: full-rewrite merges never pay the
+        # collect.
+        _scope = functools.cache(lambda: _delta_partition_scope(
+            source, meta.get("partitioning", {}), key_cols))
         fields: dict = {}
         ident_hwm = None
         ident_carried: list[str] = []
-        if not commits:
+        if _head_name(commits) is None:
             # MERGE into an empty table: only the INSERT clause
             # can produce rows
             ins = not_matched_insert
@@ -2064,12 +2096,11 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                 merged = source.alias("s").filter(c)
             merged = merged.drop(*source_meta_cols)
             merged = _apply_defaults(merged, merge_defaults)
-            merged, ident_hwm = fill_identity(merged, commits)
-            _staged_write(merged, target_dir, stage_dir)
+            merged, ident_hwm = fill_identity(merged, commits, ident)
+            _staged_write(merged, meta, stage_dir)
         else:
-            base_dir = os.path.join(versions_root,
-                                    commits[-1]["version_name"])
-            snapshot = _snapshot_read(spark, target_dir, base_dir)
+            base_dir = _head_dir(target_dir, commits)
+            snapshot = _snapshot_read(spark, meta, base_dir)
             t_types = {f.name: f.dataType
                        for f in snapshot.schema.fields}
             s_types = {f.name: f.dataType
@@ -2115,9 +2146,9 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                     and base_bytes
                     >= _min_bytes_cutoff(incremental_min_bytes)):
                 touched, kept = _touched_files_by_keys(
-                    spark, base_dir, source, key_cols, target_dir,
+                    spark, meta, base_dir, source, key_cols,
                     part_tuples=_scope()[0])
-                sub = (_snapshot_read(spark, target_dir, base_dir,
+                sub = (_snapshot_read(spark, meta, base_dir,
                                       files=sorted(touched))
                        if touched else snapshot.limit(0))
                 merged = _merge_result(sub, source, key_cols,
@@ -2131,9 +2162,9 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                     # frame is touched-data-sized here
                     _validate_constraints(merged, cons,
                                           "the MERGE post-image")
-                merged, ident_hwm = fill_identity(merged, commits)
+                merged, ident_hwm = fill_identity(merged, commits, ident)
                 _stage_with_reuse(base_dir, stage_dir, kept, merged,
-                                  target_dir=target_dir)
+                                  meta=meta)
                 fields["files_rewritten"] = len(touched)
                 fields["files_reused"] = len(kept)
                 if _scope()[1] is not None:
@@ -2148,10 +2179,10 @@ def upsert_merge_into(spark, target_dir: str, batch_id: int, source,
                              or nn_absent_defaulted):
                     _validate_constraints(merged, cons,
                                           "the MERGE post-image")
-                merged, ident_hwm = fill_identity(merged, commits)
+                merged, ident_hwm = fill_identity(merged, commits, ident)
                 # full rewrite: output ≈ base snapshot — size the
                 # staging shuffle to the base's known bytes
-                _staged_write(merged, target_dir, stage_dir,
+                _staged_write(merged, meta, stage_dir,
                               input_bytes_hint=2 * base_bytes)
         if ident:
             fields["identity_hwm"] = _staged_identity_hwm(
@@ -2346,21 +2377,21 @@ def optimize_upsert_target(spark, target_dir: str,
     import math
     import os
 
-    from .partitioning import table_partitioning
+    from .partitioning import _check_features
 
     if min_file_bytes is not None and zorder_by:
         raise ValueError(
             "zorder_by requires the full rewrite — clustering is a "
             "global property of the snapshot; drop min_file_bytes or "
             "zorder_by")
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
 
     def stage(commits, stage_dir):
-        if not commits:
+        meta = table_metadata(target_dir, commits)
+        _check_features(meta, target_dir, writer=True)
+        if _head_name(commits) is None:
             return None
-        src = os.path.join(target_dir + "_versions",
-                           commits[-1]["version_name"])
+        src = _head_dir(target_dir, commits)
+        parts = meta.get("partitioning", {})
         fields: dict = {"zorder": list(zorder_by)} if zorder_by else {}
         if min_file_bytes is not None:
             # incremental compaction: bin-pack ONLY the small-file
@@ -2390,16 +2421,13 @@ def optimize_upsert_target(spark, target_dir: str,
             pack_bytes = sum(sizes[f] for f in to_pack)
             n_parts = max(1, math.ceil(
                 pack_bytes / max(target_file_bytes, 1)))
-            sub = _snapshot_read(spark, target_dir, src,
-                                 files=sorted(to_pack))
-            parts = table_partitioning(target_dir)
+            sub = _snapshot_read(spark, meta, src, files=sorted(to_pack))
             # hash-cluster on the partition columns so each Hive
             # partition's small files collapse into ~one output
             # file instead of splintering across every task
             rewritten = (sub.repartition(n_parts, *parts)
                          if parts else sub.repartition(n_parts))
-            _stage_with_reuse(src, stage_dir, kept, rewritten,
-                              target_dir=target_dir)
+            _stage_with_reuse(src, stage_dir, kept, rewritten, meta=meta)
             fields["files_rewritten"] = len(to_pack)
             fields["files_reused"] = len(kept)
             # incremental compaction packs per partition dir and the
@@ -2408,7 +2436,7 @@ def optimize_upsert_target(spark, target_dir: str,
             # the disjoint-writer classifier (a writer racing an
             # autoCompact of OTHER partitions rebases instead of
             # re-merging)
-            claim = _touched_partition_claim(target_dir, to_pack)
+            claim = _touched_partition_claim(parts, to_pack)
             if claim is not None:
                 fields["touched_partitions"] = claim
             # incremental runs keep the layout; stats manifests are
@@ -2416,7 +2444,7 @@ def optimize_upsert_target(spark, target_dir: str,
             return fields
         n_parts = max(1, math.ceil(
             _data_file_bytes(src) / max(target_file_bytes, 1)))
-        snap = _snapshot_read(spark, target_dir, src)
+        snap = _snapshot_read(spark, meta, src)
         if zorder_by:
             # OPTIMIZE ZORDER: range-partition + sort on the
             # Morton z-value so every output file is narrow in
@@ -2436,7 +2464,7 @@ def optimize_upsert_target(spark, target_dir: str,
                 .drop("_z"))
         else:
             rewritten = snap.repartition(n_parts)
-        _staged_write(rewritten, target_dir, stage_dir,
+        _staged_write(rewritten, meta, stage_dir,
                       max_records_per_file=max_records_per_file)
         manifest_cols = (list(zorder_by or []) if stats_cols is None
                          else list(stats_cols))
@@ -2446,8 +2474,7 @@ def optimize_upsert_target(spark, target_dir: str,
             # from their Hive paths (min = max = value), so one
             # manifest prunes on partition AND data columns
             write_stats_manifest(
-                stage_dir, manifest_cols,
-                spark=spark, parts=table_partitioning(target_dir))
+                stage_dir, manifest_cols, spark=spark, parts=parts)
         return fields
 
     # claims the head's version; a lost race re-reads the journal and
@@ -2523,8 +2550,7 @@ def restore_upsert_target(spark, target_dir: str, version: int,
     is already applied (restore ids are exactly-once like batch ids)."""
     import shutil
 
-    from .partitioning import check_table_writable
-    check_table_writable(target_dir)
+    from .partitioning import _check_features
     versions_root = target_dir + "_versions"
 
     def replay(commits, applied):
@@ -2547,7 +2573,9 @@ def restore_upsert_target(spark, target_dir: str, version: int,
             f"different commit (applied={sorted(applied)})")
 
     def stage(commits, stage_dir):
-        src = _resolve_version_dir(versions_root, version)
+        meta = table_metadata(target_dir, commits)
+        _check_features(meta, target_dir, writer=True)
+        src = _resolve_version_dir(versions_root, version, commits)
         if src is None:
             raise FileNotFoundError(
                 f"version {version} not retained — cannot restore "
@@ -2560,10 +2588,10 @@ def restore_upsert_target(spark, target_dir: str, version: int,
         # enforce_constraints=False is the deliberate operator override
         # (restore first, repair data second), mirrored on Delta's
         # constraint-vs-restore escape hatch.
-        cons = table_check_constraints(target_dir)
+        cons = meta.get("constraints", {})
         if cons and enforce_constraints:
             _validate_constraints(
-                _snapshot_read(spark, target_dir, src), cons,
+                _snapshot_read(spark, meta, src), cons,
                 f"version {version} being restored (pass "
                 f"enforce_constraints=False to restore anyway)")
         # Generated columns are write-path invariants of the same
@@ -2573,9 +2601,9 @@ def restore_upsert_target(spark, target_dir: str, version: int,
         # Absent columns are also a refusal — a restored snapshot
         # missing the generated column would break every reader that
         # selects it.
-        gens = table_generated_columns(target_dir)
+        gens = meta.get("generated", {})
         if gens and enforce_constraints:
-            snap = _snapshot_read(spark, target_dir, src)
+            snap = _snapshot_read(spark, meta, src)
             for gname, gexpr in gens.items():
                 if gname not in snap.columns:
                     raise GeneratedColumnViolation(
@@ -2716,9 +2744,11 @@ def read_upsert_changes(spark, target_dir: str, v_from: int, v_to: int,
     pre = read_upsert_version(spark, target_dir, v_from)
     post = read_upsert_version(spark, target_dir, v_to)
     versions_root = target_dir + "_versions"
-    d_from = _resolve_version_dir(versions_root, v_from)
-    d_to = _resolve_version_dir(versions_root, v_to)
+    commits, _ = _journal_state(versions_root)
+    d_from = _resolve_version_dir(versions_root, v_from, commits)
+    d_to = _resolve_version_dir(versions_root, v_to, commits)
     if d_from and d_to:
+        meta = table_metadata(target_dir, commits)
         f_from = set(_snapshot_data_files(d_from))
         f_to = set(_snapshot_data_files(d_to))
         u_from = sorted(f_from - f_to)
@@ -2727,9 +2757,9 @@ def read_upsert_changes(spark, target_dir: str, v_from: int, v_to: int,
         # schema-uniform — evolution forces a full rewrite), read only
         # the name-unique files; an empty unique side means that side
         # contributes nothing (pure-insert / pure-delete transitions)
-        pre = (_snapshot_read(spark, target_dir, d_from, files=u_from)
+        pre = (_snapshot_read(spark, meta, d_from, files=u_from)
                if u_from else pre.limit(0))
-        post = (_snapshot_read(spark, target_dir, d_to, files=u_to)
+        post = (_snapshot_read(spark, meta, d_to, files=u_to)
                 if u_to else post.limit(0))
     pre_t, post_t = dict(pre.dtypes), dict(post.dtypes)
     payload = [c for c in post.columns if c not in key_cols]
@@ -3544,11 +3574,12 @@ def clone_upsert_table(src_target: str, dst_target: str,
     version number and a ``cloned_from`` provenance field — DESCRIBE
     HISTORY on the clone shows where it came from; time travel works
     from the cloned version forward. Table METADATA travels with the
-    clone too: CHECK constraints and generated-column declarations are
-    copied (Delta's SHALLOW CLONE carries table properties and
-    constraints — a clone of a constrained table starts constrained;
-    drop them on the clone to diverge). Pure filesystem op, no Spark
-    session needed. Raises FileExistsError if dst already exists."""
+    clone too: that entry carries the source head's metadata document
+    (Delta's SHALLOW CLONE carries table properties and constraints —
+    a clone of a constrained table is constrained from its first
+    commit; drop them on the clone to diverge). Pure filesystem op, no
+    Spark session needed. Raises FileExistsError if dst already
+    exists."""
     import os
     import shutil
     import uuid
@@ -3557,8 +3588,7 @@ def clone_upsert_table(src_target: str, dst_target: str,
 
     src_root = src_target + "_versions"
     commits, _ = _journal_state(src_root)
-    if not commits:
-        raise FileNotFoundError(f"no upsert table at {src_target}")
+    src_dir = _head_dir(src_target, commits)
     dst_root = dst_target + "_versions"
     if os.path.exists(dst_target) or (
             os.path.isdir(dst_root)
@@ -3566,7 +3596,6 @@ def clone_upsert_table(src_target: str, dst_target: str,
         raise FileExistsError(
             f"clone destination {dst_target} already exists")
     head = commits[-1]
-    src_dir = os.path.join(src_root, head["version_name"])
     os.makedirs(dst_root, exist_ok=True)
     stage = os.path.join(dst_root, f"_stage_{writer}_{uuid.uuid4().hex[:8]}")
     os.makedirs(stage)
@@ -3590,31 +3619,17 @@ def clone_upsert_table(src_target: str, dst_target: str,
              "files_rewritten": 0,
              "files_reused": len(_snapshot_data_files(
                  os.path.join(dst_root, perm)))}
-    _src_ident = table_identity_column(src_target)
-    if _src_ident:
+    meta = table_metadata(src_target, commits)
+    if "identity" in meta:
         # allocation on the clone must continue ABOVE the cloned ids
-        entry["identity_hwm"] = _identity_high_water(commits, _src_ident)
+        entry["identity_hwm"] = _identity_high_water(commits,
+                                                     meta["identity"])
+    if meta:
+        entry["metadata"] = meta
     if not try_commit(_commits_dir(dst_root), 0, entry):
         shutil.rmtree(os.path.join(dst_root, perm), ignore_errors=True)
         raise FileExistsError(
             f"clone destination {dst_target} was created concurrently")
-    from ..fsutil import atomic_write_json
-    from .colmap import _colmap_path, _has_mapping, table_column_mapping
-    from .partitioning import (_partitioning_path, _protocol_path,
-                               _read_protocol, table_partitioning)
-    src_map = table_column_mapping(src_target)
-    src_proto = _read_protocol(src_target)
-    for meta, path_of in (
-            (table_check_constraints(src_target), _constraints_path),
-            (table_generated_columns(src_target), _generated_path),
-            (table_identity_column(src_target), _identity_path),
-            (table_partitioning(src_target), _partitioning_path),
-            (_has_mapping(src_map) and src_map, _colmap_path),
-            (table_column_defaults(src_target), _defaults_path),
-            ((src_proto["features"] or src_proto["writer_features"])
-             and src_proto, _protocol_path)):
-        if meta:
-            atomic_write_json(path_of(dst_target), meta)
     cms, _ = _journal_state(dst_root)
     _publish_commit(dst_target, dst_root, cms, keep_versions=2)
     return perm
@@ -3664,27 +3679,56 @@ def shared_base_table(sf_dir: str, name: str, build) -> str:
     return target
 
 
-# --- CHECK constraints ------------------------------------------------------
+# --- table metadata as journal commits --------------------------------------
+#
+# Every declaration below (ALTER TABLE ... ADD CONSTRAINT / SET NOT NULL
+# / SET DEFAULT / generated and identity columns, and colmap's RENAME /
+# DROP COLUMN, partitioning's PARTITIONED BY) is ONE commit through the
+# driver: its stage validates against the attempt's head — snapshot and
+# metadata document — and returns the new document, and the CAS orders
+# it against every data commit. A writer that staged under the old
+# document loses its CAS and re-validates under the new one, so a
+# constraint can never be added beside rows that violate it.
 
-_CONSTRAINTS_FILE = "_CONSTRAINTS.json"
-
-
-def _constraints_path(target_dir: str) -> str:
+def _commit_metadata(target_dir: str, declare) -> None:
+    """Commit a metadata declaration: ``declare(commits, meta)`` edits
+    ``meta`` — a private copy of the attempt's document — in place,
+    raising to refuse. The entry (op ``metadata``) reuses the head's
+    version and snapshot name (None before the first data commit),
+    writes no snapshot dir, prunes nothing and claims no partitions; an
+    unchanged document commits nothing."""
+    import copy
     import os
-    return os.path.join(target_dir + "_versions", _CONSTRAINTS_FILE)
+
+    os.makedirs(target_dir + "_versions", exist_ok=True)
+
+    def stage(commits, _stage_dir):
+        before = table_metadata(target_dir, commits)
+        meta = copy.deepcopy(before)
+        declare(commits, meta)
+        if meta == before:
+            return None
+        return {"metadata": {k: v for k, v in meta.items() if v}}
+
+    _commit_version(target_dir, "metadata", None, stage, writer="alter",
+                    keep_versions=None,
+                    exhausted=f"metadata commit on {target_dir} lost 24 "
+                              f"consecutive CAS races")
+
+
+def _head_snapshot(spark, target_dir: str, commits: list[dict],
+                   meta: dict):
+    """The attempt head's snapshot under ``meta``, or None while the
+    table has no data (a declaration then has nothing to validate)."""
+    if _head_name(commits) is None:
+        return None
+    return _snapshot_read(spark, meta, _head_dir(target_dir, commits))
 
 
 def table_check_constraints(target_dir: str) -> dict[str, str]:
     """{name: sql_expr} of the table's CHECK constraints (empty if
-    none). Stored beside the journal; read on every commit."""
-    import json
-    import os
-
-    p = _constraints_path(target_dir)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    none) — a view of the journal head's metadata document."""
+    return dict(table_metadata(target_dir).get("constraints", {}))
 
 
 class CheckConstraintViolation(ValueError):
@@ -3737,70 +3781,59 @@ def _validate_constraints(df, constraints: dict, what: str) -> None:
 
 def set_table_check_constraint(spark, target_dir: str, name: str,
                                expr: str) -> None:
-    """ALTER TABLE ADD CONSTRAINT CHECK: validates the CURRENT snapshot
+    """ALTER TABLE ADD CONSTRAINT CHECK: validates the head snapshot
     first (Delta refuses to add a constraint existing data violates),
-    then persists it; every subsequent upsert/MERGE validates its
-    incoming rows before committing. Single-admin op (last write wins
-    on the constraints file); the enforcement path is what multi-writer
-    commits share."""
-    import os
+    then commits it; every subsequent upsert/MERGE validates its
+    incoming rows before committing. The commit is CAS-ordered against
+    data commits: a write that lands between the validation and the
+    CAS makes this commit retry and re-validate."""
+    from .partitioning import _add_feature
 
-    from ..fsutil import atomic_write_json
+    def declare(commits, meta):
+        snap = _head_snapshot(spark, target_dir, commits, meta)
+        if snap is not None:
+            _validate_constraints(snap, {name: expr},
+                                  "existing table data")
+        meta.setdefault("constraints", {})[name] = expr
+        _add_feature(meta, "check_constraints", kind="writer")
 
-    cons = table_check_constraints(target_dir)
-    commits, _ = _journal_state(target_dir + "_versions")
-    if commits:
-        snap = _snapshot_read(spark, target_dir, os.path.join(
-            target_dir + "_versions", commits[-1]["version_name"]))
-        _validate_constraints(snap, {name: expr}, "existing table data")
-    cons[name] = expr
-    atomic_write_json(_constraints_path(target_dir), cons)
-    from .partitioning import register_table_feature
-    register_table_feature(target_dir, "check_constraints",
-                           kind="writer")
+    _commit_metadata(target_dir, declare)
 
 
 def drop_table_check_constraint(target_dir: str, name: str) -> None:
-    from ..fsutil import atomic_write_json
-
-    cons = table_check_constraints(target_dir)
-    cons.pop(name, None)
-    atomic_write_json(_constraints_path(target_dir), cons)
+    _commit_metadata(target_dir, lambda commits, meta: meta.get(
+        "constraints", {}).pop(name, None))
 
 
 def set_table_not_null(spark, target_dir: str, col: str) -> None:
     """ALTER TABLE ALTER COLUMN col SET NOT NULL. Distinct from CHECK
     (whose three-valued logic PASSES NULLs — ``CHECK (col IS NOT
-    NULL)`` is exactly the constraint CHECK cannot express); stored in
-    the same constraints file as a typed entry so every existing
+    NULL)`` is exactly the constraint CHECK cannot express); stored
+    among the constraints as a typed entry so every existing
     enforcement point (incoming batches, MERGE sources, UPDATE/MERGE
     post-images, RESTORE, overwrite batches) covers it with zero new
     plumbing. Like Delta, refused if existing data already violates."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from ..fsutil import atomic_write_json
-    from .partitioning import register_table_feature
+    from .partitioning import _add_feature
 
-    cons = table_check_constraints(target_dir)
-    commits, _ = _journal_state(target_dir + "_versions")
-    if commits:
-        snap = _snapshot_read(spark, target_dir, os.path.join(
-            target_dir + "_versions", commits[-1]["version_name"]))
-        if col not in snap.columns:
-            raise CheckConstraintViolation(
-                f"cannot declare NOT NULL on {col!r}: not a column of "
-                f"this table (columns: {snap.columns})")
-        if snap.filter(F.col(col).isNull()).limit(1).collect():
-            raise CheckConstraintViolation(
-                f"existing table data has NULLs in {col!r} — repair "
-                f"before declaring NOT NULL (Delta refuses the same "
-                f"way)")
-    cons[f"{col}__not_null"] = {"kind": "not_null", "col": col}
-    atomic_write_json(_constraints_path(target_dir), cons)
-    register_table_feature(target_dir, "not_null_constraints",
-                           kind="writer")
+    def declare(commits, meta):
+        snap = _head_snapshot(spark, target_dir, commits, meta)
+        if snap is not None:
+            if col not in snap.columns:
+                raise CheckConstraintViolation(
+                    f"cannot declare NOT NULL on {col!r}: not a column "
+                    f"of this table (columns: {snap.columns})")
+            if snap.filter(F.col(col).isNull()).limit(1).collect():
+                raise CheckConstraintViolation(
+                    f"existing table data has NULLs in {col!r} — repair "
+                    f"before declaring NOT NULL (Delta refuses the same "
+                    f"way)")
+        meta.setdefault("constraints", {})[f"{col}__not_null"] = {
+            "kind": "not_null", "col": col}
+        _add_feature(meta, "not_null_constraints", kind="writer")
+
+    _commit_metadata(target_dir, declare)
 
 
 def drop_table_not_null(target_dir: str, col: str) -> None:
@@ -3809,24 +3842,9 @@ def drop_table_not_null(target_dir: str, col: str) -> None:
 
 # --- column DEFAULT values --------------------------------------------------
 
-_DEFAULTS_FILE = "_DEFAULTS.json"
-
-
-def _defaults_path(target_dir: str) -> str:
-    import os
-    return os.path.join(target_dir + "_versions", _DEFAULTS_FILE)
-
-
 def table_column_defaults(target_dir: str) -> dict[str, str]:
     """{column: sql_expr} DEFAULT declarations (empty if none)."""
-    import json
-    import os
-
-    p = _defaults_path(target_dir)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    return dict(table_metadata(target_dir).get("defaults", {}))
 
 
 def set_table_column_default(target_dir: str, col: str,
@@ -3837,21 +3855,18 @@ def set_table_column_default(target_dir: str, col: str,
     expression must be evaluable without any input row (literals and
     deterministic functions — Delta's same restriction); existing data
     is never backfilled (SQL DEFAULT applies at write time)."""
-    from ..fsutil import atomic_write_json
-    from .partitioning import register_table_feature
+    from .partitioning import _add_feature
 
-    d = table_column_defaults(target_dir)
-    d[col] = expr
-    atomic_write_json(_defaults_path(target_dir), d)
-    register_table_feature(target_dir, "column_defaults", kind="writer")
+    def declare(commits, meta):
+        meta.setdefault("defaults", {})[col] = expr
+        _add_feature(meta, "column_defaults", kind="writer")
+
+    _commit_metadata(target_dir, declare)
 
 
 def drop_table_column_default(target_dir: str, col: str) -> None:
-    from ..fsutil import atomic_write_json
-
-    d = table_column_defaults(target_dir)
-    d.pop(col, None)
-    atomic_write_json(_defaults_path(target_dir), d)
+    _commit_metadata(target_dir, lambda commits, meta: meta.get(
+        "defaults", {}).pop(col, None))
 
 
 def _apply_defaults(df, defaults: dict[str, str], types=None):
@@ -3877,48 +3892,41 @@ def _apply_defaults(df, defaults: dict[str, str], types=None):
     return df
 
 
-def _current_table_types(spark, target_dir: str) -> dict:
-    """{col: DataType} of the table's current snapshot, {} before the
-    first commit — feeds the DEFAULT-fill store-assignment cast."""
-    import os
+def _incoming_rows(df, meta: dict, target_dir: str, snapshot,
+                   what: str):
+    """The write contract on incoming rows under one metadata document
+    (a commit attempt's): the writer protocol gate, DEFAULT fills
+    (store-assignment cast to ``snapshot``'s column types when the
+    table has data), generated columns (omitted ones computed, supplied
+    ones validated), then CHECK / NOT NULL validation — one
+    delta-sized pass, never the table, and only for what ``meta``
+    declares. Returns the filled frame."""
+    from .partitioning import _check_features
 
-    versions_root = target_dir + "_versions"
-    try:
-        commits, _ = _journal_state(versions_root)
-    except Exception:
-        return {}
-    if not commits:
-        return {}
-    base_dir = os.path.join(versions_root, commits[-1]["version_name"])
-    try:
-        snap = _snapshot_read(spark, target_dir, base_dir)
-    except Exception:
-        return {}
-    return {f.name: f.dataType for f in snap.schema.fields}
+    _check_features(meta, target_dir, writer=True)
+    defaults = meta.get("defaults", {})
+    if defaults:
+        # DEFAULT before generated: a generated expression may
+        # reference a defaulted input
+        df = _apply_defaults(df, defaults, None if snapshot is None else {
+            f.name: f.dataType for f in snapshot.schema.fields})
+    gens = meta.get("generated", {})
+    if gens:
+        # generated columns first (a CHECK may reference one)
+        df = _apply_generated(df, gens, what)
+    cons = meta.get("constraints", {})
+    if cons:
+        _validate_constraints(df, cons, what)
+    return df
 
 
 # --- generated columns ------------------------------------------------------
 
-_GENERATED_FILE = "_GENERATED.json"
-
-
-def _generated_path(target_dir: str) -> str:
-    import os
-    return os.path.join(target_dir + "_versions", _GENERATED_FILE)
-
-
 def table_generated_columns(target_dir: str) -> dict[str, str]:
     """{name: sql_expr} of the table's GENERATED ALWAYS AS columns
-    (empty if none). Stored beside the journal like CHECK constraints;
-    read on every commit."""
-    import json
-    import os
-
-    p = _generated_path(target_dir)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    (empty if none) — a view of the journal head's metadata
+    document."""
+    return dict(table_metadata(target_dir).get("generated", {}))
 
 
 class GeneratedColumnViolation(ValueError):
@@ -3957,88 +3965,66 @@ def set_table_generated_column(spark, target_dir: str, name: str,
     satisfies ``name <=> expr`` for every row — generated columns
     never backfill (that would be a disguised table rewrite; run an
     explicit UPDATE first if that is what you want)."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from ..fsutil import atomic_write_json
+    from .partitioning import _add_feature
 
-    gens = table_generated_columns(target_dir)
-    commits, _ = _journal_state(target_dir + "_versions")
-    if commits:
-        snap = _snapshot_read(spark, target_dir, os.path.join(
-            target_dir + "_versions", commits[-1]["version_name"]))
-        if name not in snap.columns:
-            raise GeneratedColumnViolation(
-                f"column {name!r} absent from existing table data — "
-                f"generated columns never backfill; declare before the "
-                f"first commit, or add the column with an explicit "
-                f"UPDATE/upsert first")
-        bad = snap.filter(~F.col(name).eqNullSafe(F.expr(expr))) \
-            .limit(1).collect()
-        if bad:
-            raise GeneratedColumnViolation(
-                f"existing table data violates {name!r} ALWAYS AS "
-                f"{expr}: first offending row {bad[0].asDict()!r}")
-    gens[name] = expr
-    atomic_write_json(_generated_path(target_dir), gens)
-    from .partitioning import register_table_feature
-    register_table_feature(target_dir, "generated_columns",
-                           kind="writer")
+    def declare(commits, meta):
+        snap = _head_snapshot(spark, target_dir, commits, meta)
+        if snap is not None:
+            if name not in snap.columns:
+                raise GeneratedColumnViolation(
+                    f"column {name!r} absent from existing table data — "
+                    f"generated columns never backfill; declare before "
+                    f"the first commit, or add the column with an "
+                    f"explicit UPDATE/upsert first")
+            bad = snap.filter(~F.col(name).eqNullSafe(F.expr(expr))) \
+                .limit(1).collect()
+            if bad:
+                raise GeneratedColumnViolation(
+                    f"existing table data violates {name!r} ALWAYS AS "
+                    f"{expr}: first offending row {bad[0].asDict()!r}")
+        meta.setdefault("generated", {})[name] = expr
+        _add_feature(meta, "generated_columns", kind="writer")
+
+    _commit_metadata(target_dir, declare)
 
 
 def drop_table_generated_column(target_dir: str, name: str) -> None:
-    from ..fsutil import atomic_write_json
-
-    gens = table_generated_columns(target_dir)
-    gens.pop(name, None)
-    atomic_write_json(_generated_path(target_dir), gens)
+    _commit_metadata(target_dir, lambda commits, meta: meta.get(
+        "generated", {}).pop(name, None))
 
 
 # --- IDENTITY columns -------------------------------------------------------
 
-_IDENTITY_FILE = "_IDENTITY.json"
-
-
-def _identity_path(target_dir: str) -> str:
-    import os
-    return os.path.join(target_dir + "_versions", _IDENTITY_FILE)
-
-
 def table_identity_column(target_dir: str) -> dict | None:
     """{"name": ..., "start": ..., "step": ...} or None. One identity
     column per table (Delta's limit)."""
-    import json
-    import os
-
-    p = _identity_path(target_dir)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    ident = table_metadata(target_dir).get("identity")
+    return dict(ident) if ident else None
 
 
 def set_table_identity_column(target_dir: str, name: str,
                               start: int = 1, step: int = 1) -> None:
     """Declare ``name GENERATED ALWAYS AS IDENTITY (START WITH start
     INCREMENT BY step)``. Creation-time only, like Delta: the table
-    must have no commits yet (identity values can never backfill, and
-    a retro-declared column could collide with existing data)."""
-    from ..fsutil import atomic_write_json
+    must have no data yet (identity values can never backfill, and a
+    retro-declared column could collide with existing data)."""
+    from .partitioning import _add_feature
 
     if step == 0:
         raise ValueError("identity INCREMENT BY must be non-zero")
-    commits, _ = _journal_state(target_dir + "_versions")
-    if commits:
-        raise ValueError(
-            "identity columns are declared at table creation — this "
-            "table already has commits")
-    atomic_write_json(_identity_path(target_dir),
-                      {"name": name, "start": int(start),
-                       "step": int(step)})
-    from .partitioning import register_table_feature
-    register_table_feature(target_dir, "identity_columns",
-                           kind="writer")
+
+    def declare(commits, meta):
+        if _head_name(commits) is not None:
+            raise ValueError(
+                "identity columns are declared at table creation — "
+                "this table already has commits")
+        meta["identity"] = {"name": name, "start": int(start),
+                            "step": int(step)}
+        _add_feature(meta, "identity_columns", kind="writer")
+
+    _commit_metadata(target_dir, declare)
 
 
 def _identity_high_water(commits: list[dict], ident: dict) -> int:
@@ -4545,8 +4531,9 @@ def describe_upsert_detail(spark, target_dir: str) -> DataFrame:
     location, format, current version, file count and bytes of the
     published snapshot, partition columns, and the declared metadata
     surfaces (CHECK constraints, generated columns, identity, column
-    mapping, clone provenance). Driver-side journal/metadata reads plus
-    one directory walk of the HEAD snapshot only (file counts at 100 TB
+    mapping, clone provenance). One journal read — the head carries the
+    metadata document — plus one directory walk of the HEAD snapshot
+    only (file counts at 100 TB
     come from the listing the table already maintains — never a data
     scan), returned as a DataFrame so it composes with the rest of the
     API like describe_upsert_history."""
@@ -4555,20 +4542,18 @@ def describe_upsert_detail(spark, target_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from .colmap import table_column_mapping
-    from .partitioning import table_partitioning, table_writer_features
+    from .colmap import _mapping_of
+    from .partitioning import _features
 
     versions_root = target_dir + "_versions"
     commits, applied = _journal_state(versions_root)
-    if not commits:
-        raise FileNotFoundError(f"no upsert table at {target_dir}")
+    head_dir = _head_dir(target_dir, commits)
     head = commits[-1]
-    head_dir = os.path.join(versions_root, head["version_name"])
     files = _snapshot_data_files(head_dir)
     size = _data_file_bytes(head_dir)
-    parts = table_partitioning(target_dir)
-    m = table_column_mapping(target_dir)
-    ident = table_identity_column(target_dir)
+    meta = table_metadata(target_dir, commits)
+    m = _mapping_of(meta)
+    ident = meta.get("identity")
     cloned = next((c["cloned_from"] for c in commits
                    if c.get("cloned_from")), None)
     schema = T.StructType([
@@ -4602,15 +4587,15 @@ def describe_upsert_detail(spark, target_dir: str) -> DataFrame:
                                        c.get("version_name") or ""))})
     cons_str = {n: (f"NOT NULL ({e['col']})" if isinstance(e, dict)
                     else e)
-                for n, e in table_check_constraints(target_dir).items()}
+                for n, e in meta.get("constraints", {}).items()}
     row = (os.path.abspath(target_dir), "parquet/upsert-journal",
            int(head["version"]), len(files), int(size), retained,
-           list(parts), cons_str,
-           table_generated_columns(target_dir),
+           list(meta.get("partitioning", {})), cons_str,
+           meta.get("generated", {}),
            json.dumps(ident) if ident else None,
-           dict(m["renames"]), list(m["dropped"]), cloned,
-           table_column_defaults(target_dir),
-           sorted(table_writer_features(target_dir)))
+           m["renames"], m["dropped"], cloned,
+           meta.get("defaults", {}),
+           sorted(_features(meta, writer=True)))
     return spark.createDataFrame([row], schema)
 
 

@@ -2,9 +2,9 @@
 snapshots with declared partition-column types.
 
 Delta/Iceberg tables carry a partitioning spec in table metadata; here
-it is ``_PARTITIONING.json`` beside the commit journal (the same
-placement as CHECK constraints and identity declarations), and every
-snapshot directory is written ``.partitionBy(*cols)`` — standard Hive
+it is the ``partitioning`` field of the metadata document every journal
+entry carries (``ingest.table_metadata`` — the same document as CHECK
+constraints and identity declarations), and every snapshot directory is written ``.partitionBy(*cols)`` — standard Hive
 ``col=value/`` subdirectories, so a published snapshot STAYS readable
 with a plain ``spark.read.parquet`` (the format's core contract;
 partition-column types are then whatever Spark's partition inference
@@ -55,8 +55,6 @@ from __future__ import annotations
 import json
 import os
 
-_PARTITIONING_FILE = "_PARTITIONING.json"
-
 # Types whose values round-trip losslessly through a Hive path segment
 # AND through the Python change-feed reader's value parser.
 _SUPPORTED_DDL = ("tinyint", "smallint", "int", "bigint", "string",
@@ -65,28 +63,22 @@ _SUPPORTED_DDL = ("tinyint", "smallint", "int", "bigint", "string",
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _partitioning_path(target_dir: str) -> str:
-    return os.path.join(target_dir + "_versions", _PARTITIONING_FILE)
-
-
 def table_partitioning(target_dir: str) -> dict[str, str]:
     """Ordered {column: ddl_type} of the table's PARTITIONED BY spec
-    (empty dict if unpartitioned). Stored beside the journal; consulted
-    by every read and staged write."""
-    p = _partitioning_path(target_dir)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    (empty dict if unpartitioned) — a view of the journal head's
+    metadata document."""
+    from .ingest import table_metadata
+    return dict(table_metadata(target_dir).get("partitioning", {}))
 
 
 def set_table_partitioning(target_dir: str, cols: dict[str, str]) -> None:
     """Declare ``PARTITIONED BY (col type, ...)``. Creation-time only,
-    like Delta/Iceberg v1: the table must have no commits yet —
+    like Delta/Iceberg v1: the table must have no data yet —
     re-partitioning existing data is an explicit rewrite (read +
     re-create), never an in-place metadata flip, because every retained
-    snapshot already has a physical layout."""
-    from ..fsutil import atomic_write_json, read_commit_journal
+    snapshot already has a physical layout. A metadata commit, so it
+    serializes with a racing first write."""
+    from .ingest import _commit_metadata, _head_name
 
     if not cols:
         raise ValueError("PARTITIONED BY requires at least one column")
@@ -105,16 +97,17 @@ def set_table_partitioning(target_dir: str, cols: dict[str, str]) -> None:
                 f"partition column {c!r} has unsupported type {t!r} — "
                 f"supported: {_SUPPORTED_DDL} (types whose values "
                 f"round-trip through Hive directory names)")
-    commits_dir = os.path.join(target_dir + "_versions", "_commits")
-    if read_commit_journal(commits_dir):
-        raise ValueError(
-            "PARTITIONED BY is declared at table creation — this table "
-            "already has commits; re-partition by reading the head and "
-            "creating a new table")
-    os.makedirs(target_dir + "_versions", exist_ok=True)
-    atomic_write_json(_partitioning_path(target_dir),
-                      {c: t.lower() for c, t in cols.items()})
-    register_table_feature(target_dir, "partitioning")
+
+    def declare(commits, meta):
+        if _head_name(commits) is not None:
+            raise ValueError(
+                "PARTITIONED BY is declared at table creation — this "
+                "table already has commits; re-partition by reading the "
+                "head and creating a new table")
+        meta["partitioning"] = {c: t.lower() for c, t in cols.items()}
+        _add_feature(meta, "partitioning")
+
+    _commit_metadata(target_dir, declare)
 
 
 def arrow_to_ddl_type(t) -> str:
@@ -221,17 +214,13 @@ def snapshot_schema_ddl(snapshot_dir: str, parts: dict[str, str]) -> str:
 
 
 def read_snapshot(spark, snapshot_dir: str, parts: dict[str, str],
-                  files: list[str] | None = None,
-                  base_dir: str | None = None):
+                  files: list[str] | None = None):
     """Typed read of a partitioned snapshot — whole dir, or a specific
     changed-file subset (``files`` are paths relative to
     ``snapshot_dir``). ``basePath`` anchors partition discovery so a
     leaf-file read still yields the partition columns; the explicit
-    schema pins their types to the declaration. ``base_dir`` overrides
-    the schema source when ``snapshot_dir`` itself is the basePath
-    anchor but the footers live elsewhere (not needed by current
-    callers; kept for symmetry)."""
-    ddl = snapshot_schema_ddl(base_dir or snapshot_dir, parts)
+    schema pins their types to the declaration."""
+    ddl = snapshot_schema_ddl(snapshot_dir, parts)
     r = spark.read.schema(ddl).option("basePath", snapshot_dir)
     if files is not None:
         df = r.parquet(*(os.path.join(snapshot_dir, f) for f in files))
@@ -416,26 +405,21 @@ def partition_tuple_filter(parts: dict[str, str], tuples):
 # --- protocol feature gates (Delta's minReader/minWriter analog) -----------
 #
 # Every table-level metadata surface that CHANGES HOW BYTES MUST BE
-# INTERPRETED registers a feature name in _PROTOCOL.json beside the
-# journal. A reader/writer built before a feature existed would
-# otherwise silently misread (plain column names on a column-mapped
-# table, missing partition columns on a Hive-layout one); the gate
-# turns that into a loud upgrade error — exactly why Delta has
-# reader/writer protocol versions. Tables without the file (or with
-# only known features) are untouched.
-
-_PROTOCOL_FILE = "_PROTOCOL.json"
+# INTERPRETED registers a feature name in the ``protocol`` field of the
+# table's metadata document (committed with the declaration itself). A
+# reader/writer built before a feature existed would otherwise silently
+# misread (plain column names on a column-mapped table, missing
+# partition columns on a Hive-layout one); the gate turns that into a
+# loud upgrade error — exactly why Delta has reader/writer protocol
+# versions. Tables without a protocol (or with only known features)
+# are untouched.
 
 # features THIS build understands; unknown names in a table's protocol
-# file mean the table was written by a newer build
+# mean the table was written by a newer build
 SUPPORTED_FEATURES = frozenset({
     "partitioning", "column_mapping", "check_constraints",
     "generated_columns", "identity_columns",
 })
-
-
-def _protocol_path(target_dir: str) -> str:
-    return os.path.join(target_dir + "_versions", _PROTOCOL_FILE)
 
 
 # features only WRITERS must understand (they gate what may be
@@ -447,77 +431,90 @@ SUPPORTED_WRITER_FEATURES = frozenset({
 }) | SUPPORTED_FEATURES
 
 
-def _read_protocol(target_dir: str) -> dict:
-    p = _protocol_path(target_dir)
-    if not os.path.exists(p):
-        return {"features": [], "writer_features": []}
-    with open(p) as f:
-        d = json.load(f)
-    d.setdefault("features", [])
-    d.setdefault("writer_features", [])
-    return d
+def _features(meta: dict, writer: bool) -> set[str]:
+    """READER features of a metadata document; with ``writer`` also
+    its writer-only features."""
+    proto = meta.get("protocol", {})
+    out = set(proto.get("features", []))
+    if writer:
+        out |= set(proto.get("writer_features", []))
+    return out
 
 
 def table_protocol_features(target_dir: str) -> set[str]:
     """READER features — change how bytes must be interpreted."""
-    return set(_read_protocol(target_dir)["features"])
+    from .ingest import table_metadata
+    return _features(table_metadata(target_dir), writer=False)
 
 
 def table_writer_features(target_dir: str) -> set[str]:
     """WRITER features — gate what commits must enforce (constraints,
     generated/identity/default columns); reads are unaffected."""
-    d = _read_protocol(target_dir)
-    return set(d["writer_features"]) | set(d["features"])
+    from .ingest import table_metadata
+    return _features(table_metadata(target_dir), writer=True)
+
+
+def _add_feature(meta: dict, feature: str,
+                      kind: str = "reader") -> None:
+    """Record in a metadata document (in place) that the table depends
+    on ``feature`` — every metadata declaration adds its own in the
+    same commit. ``kind`` is "reader" (affects byte interpretation —
+    readers AND writers must know it) or "writer" (enforcement-only —
+    old readers stay valid), Delta's reader/writer feature split."""
+    key = "features" if kind == "reader" else "writer_features"
+    proto = meta.setdefault("protocol", {})
+    proto[key] = sorted(set(proto.get(key, [])) | {feature})
 
 
 def register_table_feature(target_dir: str, feature: str,
                            kind: str = "reader") -> None:
-    """Record that this table now depends on ``feature`` — called by
-    each metadata declaration (set_table_partitioning, rename/drop
-    column, constraint/default declarations...). ``kind`` is
-    "reader" (affects byte interpretation — readers AND writers must
-    know it) or "writer" (enforcement-only — old readers stay valid),
-    Delta's reader/writer feature split. Idempotent; the file is tiny
-    and read once per operation."""
-    from ..fsutil import atomic_write_json
-
-    d = _read_protocol(target_dir)
-    key = "features" if kind == "reader" else "writer_features"
-    if feature in d[key]:
-        return
-    os.makedirs(target_dir + "_versions", exist_ok=True)
-    d[key] = sorted(set(d[key]) | {feature})
-    atomic_write_json(_protocol_path(target_dir), d)
+    """Commit ``feature`` into the table's protocol on its own — a
+    metadata commit; idempotent (no commit when already listed)."""
+    from .ingest import _commit_metadata
+    _commit_metadata(
+        target_dir, lambda commits, meta: _add_feature(
+            meta, feature, kind))
 
 
 class UnsupportedTableFeature(RuntimeError):
     pass
 
 
-def check_table_readable(target_dir: str) -> None:
-    """Raise if the table's protocol lists a READER feature this build
-    does not implement — reading on anyway would be silent corruption
-    (the exact failure mode Delta's protocol versions exist to
-    prevent). Writer-only features never block reads."""
-    unknown = table_protocol_features(target_dir) - SUPPORTED_FEATURES
+def _check_features(meta: dict, where: str, writer: bool) -> None:
+    """The protocol gate on one metadata document. Reads (``writer``
+    False) refuse an unknown READER feature — reading on anyway would
+    be silent corruption (the exact failure mode Delta's protocol
+    versions exist to prevent); writer-only features never block
+    reads. Commits refuse ANY unknown feature — a commit from a build
+    that can't enforce a declared constraint/default could publish
+    violating rows, Delta's writer-version contract."""
+    if not writer:
+        unknown = _features(meta, writer=False) - SUPPORTED_FEATURES
+        if unknown:
+            raise UnsupportedTableFeature(
+                f"table {where} uses feature(s) {sorted(unknown)} "
+                f"this build does not support (supported: "
+                f"{sorted(SUPPORTED_FEATURES)}) — upgrade the library "
+                f"to read or write this table")
+        return
+    unknown = _features(meta, writer=True) - SUPPORTED_WRITER_FEATURES
     if unknown:
         raise UnsupportedTableFeature(
-            f"table {target_dir} uses feature(s) {sorted(unknown)} "
-            f"this build does not support (supported: "
-            f"{sorted(SUPPORTED_FEATURES)}) — upgrade the library to "
-            f"read or write this table")
+            f"table {where} declares writer feature(s) "
+            f"{sorted(unknown)} this build cannot enforce — committing "
+            f"would bypass them; upgrade the library to write this "
+            f"table")
+
+
+def check_table_readable(target_dir: str) -> None:
+    """Raise if the table's protocol lists a READER feature this build
+    does not implement (``_check_features``)."""
+    from .ingest import table_metadata
+    _check_features(table_metadata(target_dir), target_dir, writer=False)
 
 
 def check_table_writable(target_dir: str) -> None:
     """Raise if the table lists ANY feature (reader or writer) this
-    build does not implement — a commit from a build that can't
-    enforce a declared constraint/default could publish violating
-    rows, Delta's writer-version contract."""
-    unknown = table_writer_features(target_dir) \
-        - SUPPORTED_WRITER_FEATURES
-    if unknown:
-        raise UnsupportedTableFeature(
-            f"table {target_dir} declares writer feature(s) "
-            f"{sorted(unknown)} this build cannot enforce — committing "
-            f"would bypass them; upgrade the library to write this "
-            f"table")
+    build does not implement (``_check_features``)."""
+    from .ingest import table_metadata
+    _check_features(table_metadata(target_dir), target_dir, writer=True)

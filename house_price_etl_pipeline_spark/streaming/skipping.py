@@ -253,19 +253,20 @@ def read_skipping(spark: SparkSession, target_dir: str,
     survivors — with the ranges RE-APPLIED as real filters so the
     result is exactly ``read(target).filter(ranges)`` regardless of
     manifest state. Returns (df, n_files_scanned, n_files_total)."""
-    from .ingest import _snapshot_read
+    from .ingest import (_snapshot_read, resolve_published_snapshot,
+                         table_metadata)
 
-    from .ingest import resolve_published_snapshot
     snapshot_dir = resolve_published_snapshot(target_dir)
+    meta = table_metadata(target_dir)
     kept, total = prune_files(snapshot_dir, predicates)
     if kept:
         # _snapshot_read keeps partition columns (basePath + declared
         # types) and applies the column mapping for file-subset reads
-        df = _snapshot_read(spark, target_dir, snapshot_dir, files=kept)
+        df = _snapshot_read(spark, meta, snapshot_dir, files=kept)
     else:
         # every file pruned: preserve the schema via an empty scan of
         # the full snapshot (filters below make it empty anyway)
-        df = _snapshot_read(spark, target_dir, snapshot_dir)
+        df = _snapshot_read(spark, meta, snapshot_dir)
     for col, (lo, hi) in predicates.items():
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))

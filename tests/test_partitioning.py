@@ -291,7 +291,7 @@ def test_history_shows_partition_ops(spark, tmp_path):
                                 key_cols=["k", "bucket"], keep_versions=8)
     hist = describe_upsert_history(spark, t)
     ops = [r["op"] for r in hist.orderBy("seq").collect()]
-    assert ops == ["upsert", "delete", "overwrite"]
+    assert ops == ["metadata", "upsert", "delete", "overwrite"]
 
 
 def test_incremental_optimize_packs_only_small_files(spark, tmp_path):
@@ -495,7 +495,8 @@ if _HAVE_HYPOTHESIS:
         assert got == model
         # CDC replay invariant across the partition ops
         versions = [c["version"] for c in
-                    _journal_state(target + "_versions")[0]]
+                    _journal_state(target + "_versions")[0]
+                    if c["op"] != "metadata"]
         replay = {r.k: r.v for r in
                   read_upsert_version(spark, target,
                                       versions[0]).collect()}
@@ -653,7 +654,8 @@ def test_partitioned_concurrent_writers_stress(spark, tmp_path):
     assert errors == []
     commits = read_commit_journal(_commits_dir(target + "_versions"))
     assert [c["seq"] for c in commits] == list(range(len(commits)))
-    applied = {c["version"] for c in commits if c["op"] != "optimize"}
+    applied = {c["version"] for c in commits
+               if c["op"] not in ("optimize", "metadata")}
     assert applied == set(range(9))
     # serial keep-latest model: highest batch id covering a key wins
     model = {}
@@ -699,11 +701,9 @@ def test_protocol_feature_gate(spark, tmp_path):
     know a feature refuses to read rather than silently misreading
     (plain names on a column-mapped table, missing partition columns)
     — Delta's reader-protocol contract."""
-    import json
-
-    from house_price_etl_pipeline_spark.fsutil import atomic_write_json
     from house_price_etl_pipeline_spark.streaming.partitioning import (
-        UnsupportedTableFeature, _protocol_path, table_protocol_features)
+        UnsupportedTableFeature, register_table_feature,
+        table_protocol_features)
 
     t = _mk(spark, tmp_path)
     assert table_protocol_features(t) == {"partitioning"}
@@ -718,8 +718,7 @@ def test_protocol_feature_gate(spark, tmp_path):
     assert table_protocol_features(c) == {"partitioning",
                                           "column_mapping"}
     # a feature from the future refuses loudly
-    feats = sorted(table_protocol_features(t) | {"deletion_vectors_v9"})
-    atomic_write_json(_protocol_path(t), {"features": feats})
+    register_table_feature(t, "deletion_vectors_v9")
     with pytest.raises(UnsupportedTableFeature, match="deletion_vectors"):
         read_upsert_version(spark, t).count()
 
@@ -1029,7 +1028,8 @@ def test_disjoint_writer_stress_zero_restages(spark, tmp_path,
     commits = read_commit_journal(
         ing._commits_dir(target + "_versions"))
     assert [c["seq"] for c in commits] == list(range(len(commits)))
-    assert {c["version"] for c in commits} == set(range(9))
+    assert {c["version"] for c in commits
+            if c["op"] != "metadata"} == set(range(9))
     got = {r.k: (r.bucket, r.payload) for r in
            read_upsert_version(spark, target).collect()}
     model = {i: (i % 3, 0) for i in range(30)}
@@ -1223,7 +1223,8 @@ def test_rebase_fast_path_survives_concurrent_vacuum(spark, tmp_path):
 
     commits, _ = _journal_state(t + "_versions")
     assert [c["seq"] for c in commits] == list(range(len(commits)))
-    assert {c["version"] for c in commits} == set(range(11))
+    assert {c["version"] for c in commits
+            if c["op"] != "metadata"} == set(range(11))
     # final state == serial keep-latest application
     got = {r.k: (r.bucket, r.payload) for r in
            read_upsert_version(spark, t).collect()}
@@ -1566,7 +1567,8 @@ def test_every_commit_op_survives_a_lost_cas(spark, tmp_path, monkeypatch,
     commits, _ = _journal_state(vr)
     assert [c["seq"] for c in commits] == list(range(len(commits)))
     # the rival landed in the op's first slot; the op landed after it
-    assert [c["version"] for c in commits[1:]] == [
+    # (entries 0-1: the partitioning declaration and the base upsert)
+    assert [c["version"] for c in commits[2:]] == [
         50, 50 if op == "optimize" else 60]
     if op == "optimize":
         assert "_compact_" in out and commits[-1]["version_name"] == out

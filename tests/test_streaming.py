@@ -3958,20 +3958,17 @@ def test_writer_feature_gate_blocks_unknown_enforcement(spark, tmp_path):
     still READABLE but refuses commits — Delta's reader/writer split."""
     import os
 
-    from house_price_etl_pipeline_spark.fsutil import atomic_write_json
     from house_price_etl_pipeline_spark.streaming.ingest import (
         read_upsert_version, upsert_commit_batch, upsert_delete_where)
     from house_price_etl_pipeline_spark.streaming.partitioning import (
-        UnsupportedTableFeature, _protocol_path, _read_protocol)
+        UnsupportedTableFeature, register_table_feature)
     import pytest as _pytest
 
     t = os.path.join(str(tmp_path), "tbl")
     df = spark.createDataFrame([(1, 10)], "k long, v long")
     upsert_commit_batch(df, t, 0, key_cols=["k"], order_col="v",
                         keep_versions=8)
-    proto = _read_protocol(t)
-    proto["writer_features"] = ["row_tracking_v7"]
-    atomic_write_json(_protocol_path(t), proto)
+    register_table_feature(t, "row_tracking_v7", kind="writer")
     # reads fine
     assert read_upsert_version(spark, t).count() == 1
     # writes refuse
