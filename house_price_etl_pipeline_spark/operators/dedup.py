@@ -45,6 +45,16 @@ def dedup_shuffle_partitions() -> int:
     return int(os.environ.get("SPARK_GRAFT_DEDUP_PARTITIONS", "8"))
 
 
+def _pair_session(spark: SparkSession) -> SparkSession:
+    """A private clone of ``spark`` at the pair-scale shuffle width:
+    pair-scale plans are built on it, never by editing ``spark``'s
+    conf, and their checkpointed results are rebound to ``spark``."""
+    from ..session import private_session
+
+    return private_session(spark, {"spark.sql.shuffle.partitions":
+                                   str(dedup_shuffle_partitions())})
+
+
 # Corpus-scale aggregations (the 64-column SimHash bit-vote and the
 # 16-column MinHash signature groupBys) carry WIDE per-group state:
 # ~520 B/doc of hash-map buffer. With a FIXED partition count the
@@ -423,12 +433,14 @@ def exact_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = _EXACT_PAIRS_CACHE.get(key)
     if cached is not None:
         return cached
-    tok = _shared_shingle_tok(spark, sf_dir)
+    from ..session import rebind
+
+    tok = rebind(_shared_shingle_tok(spark, sf_dir), _pair_session(spark))
     # localCheckpoint (not cache): truncates the inverted-index self-join
     # plan so every consumer job plans against a leaf (see
     # _shared_shingle_tok) — eager, so the fill can't be raced
-    exact = ngram_jaccard_pairs(tok, JACCARD_THRESHOLD,
-                                UNCAPPED).localCheckpoint(eager=True)
+    exact = rebind(ngram_jaccard_pairs(tok, JACCARD_THRESHOLD, UNCAPPED)
+                   .localCheckpoint(eager=True), spark)
     _EXACT_PAIRS_CACHE[key] = exact
     return exact
 
@@ -446,17 +458,14 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = _PAIRS_CACHE.get(key)
     if cached is not None:
         return cached
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(dedup_shuffle_partitions()))
-    try:
-        tok = _shared_shingle_tok(spark, sf_dir)
-        cand = lsh_candidate_pairs(minhash_signatures(tok))
-        # localCheckpoint: materialized under the pair-scale shuffle conf
-        # AND plan-truncated (see _shared_shingle_tok)
-        verified = verify_candidate_pairs(cand, tok).localCheckpoint(
-            eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    from ..session import rebind
+
+    tok = rebind(_shared_shingle_tok(spark, sf_dir), _pair_session(spark))
+    cand = lsh_candidate_pairs(minhash_signatures(tok))
+    # localCheckpoint: materialized at the pair-scale width AND
+    # plan-truncated (see _shared_shingle_tok)
+    verified = rebind(verify_candidate_pairs(cand, tok).localCheckpoint(
+        eager=True), spark)
     _PAIRS_CACHE[key] = verified
     return verified
 
@@ -800,16 +809,13 @@ def lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters from the MinHash+LSH pair list: every clustered
     doc with its canonical (min-id) representative and the cluster size —
     the decision table a dedup pipeline keeps for provenance. Label
-    propagation runs under the pair-scale shuffle conf: every iteration's
+    propagation runs at the pair-scale width: every iteration's
     join/agg is over the (tiny) pair list, so task overhead — not data —
     dominates at core-count partitions."""
-    pairs = lsh_verified_pairs(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(dedup_shuffle_partitions()))
-    try:
-        cc = connected_components(pairs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    from ..session import rebind
+
+    pairs = rebind(lsh_verified_pairs(spark, sf_dir), _pair_session(spark))
+    cc = rebind(connected_components(pairs), spark)
     sizes = cc.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (
         cc.join(sizes, "label")
@@ -848,12 +854,10 @@ def _twin_cc_labels(spark: SparkSession,
     _shared_shingle_tok(spark, sf_dir)
     import threading
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # set the pair-scale conf around BOTH threads: shuffle.partitions is
-    # session-global, so the builds must agree on it for deterministic
-    # plans (lsh_verified_pairs' own set/restore becomes a no-op here)
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(dedup_shuffle_partitions()))
+    from ..session import rebind
+
+    # each pair build runs at the pair-scale width on its own private
+    # session (exact_shingle_pairs, lsh_verified_pairs)
     results: dict[str, DataFrame] = {}
     errors: list[BaseException] = []
 
@@ -863,33 +867,31 @@ def _twin_cc_labels(spark: SparkSession,
         except BaseException as exc:  # re-raised on the caller thread
             errors.append(exc)
 
-    try:
-        threads = [
-            threading.Thread(target=_run, args=("exact", exact_shingle_pairs)),
-            threading.Thread(target=_run, args=("lsh", lsh_verified_pairs)),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errors:
-            raise errors[0]
-        exact, ver = results["exact"], results["lsh"]
-        # disjoint-range offset: one cheap agg over the two cached pair
-        # lists (control-plane scalar, not data-plane collect)
-        mx = (exact.select(F.col("doc_b").alias("m"))
-              .unionByName(ver.select(F.col("doc_b").alias("m")))
-              .agg(F.max("m")).collect()[0][0])
-        off = int(mx or 0) + 1
-        merged = (
-            exact.select("doc_a", "doc_b")
-            .unionByName(ver.select(
-                (F.col("doc_a") + off).alias("doc_a"),
-                (F.col("doc_b") + off).alias("doc_b")))
-        )
-        labels = connected_components(merged)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    threads = [
+        threading.Thread(target=_run, args=("exact", exact_shingle_pairs)),
+        threading.Thread(target=_run, args=("lsh", lsh_verified_pairs)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    exact, ver = results["exact"], results["lsh"]
+    # disjoint-range offset: one cheap agg over the two cached pair
+    # lists (control-plane scalar, not data-plane collect)
+    mx = (exact.select(F.col("doc_b").alias("m"))
+          .unionByName(ver.select(F.col("doc_b").alias("m")))
+          .agg(F.max("m")).collect()[0][0])
+    off = int(mx or 0) + 1
+    merged = (
+        exact.select("doc_a", "doc_b")
+        .unionByName(ver.select(
+            (F.col("doc_a") + off).alias("doc_a"),
+            (F.col("doc_b") + off).alias("doc_b")))
+    )
+    labels = rebind(connected_components(
+        rebind(merged, _pair_session(spark))), spark)
     exact_cc = labels.filter(F.col("node") < off)
     lsh_cc = labels.filter(F.col("node") >= off).select(
         (F.col("node") - off).alias("node"),

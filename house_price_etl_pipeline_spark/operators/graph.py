@@ -113,12 +113,13 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributions shuffle-summed by destination + the dangling mass
     (suppliers with no out-edges) redistributed uniformly via a 1-row
     broadcast. localCheckpoint per round keeps the plan flat."""
+    from ..session import private_session, rebind
     from ..sources.tables import scaled_partitions, table_rowcount
     from .dedup import dedup_shuffle_partitions
 
     # Edge construction is a data-scale stage — leave it at the session's
-    # shuffle sizing. The ROUNDS are sized to EDGE volume with a floor at
-    # the pair-scale knob: locally they run at 8 partitions (fixed task
+    # shuffle sizing. The ROUNDS run on a private session sized to EDGE
+    # volume with a floor at the pair-scale knob: locally they run at 8 partitions (fixed task
     # cost dominates thousands-row relations), while at 64× the
     # contribution shuffles spread (a fixed 8-way width put 7M rows per
     # reduce task). The materialized edge list is checkpointed DISK_ONLY
@@ -137,12 +138,9 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_shuffle_partitions(),
         scaled_partitions(spark, sf_dir, "lineitem",
                           rows_per_partition=150_000, floor=1))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(rounds_width))
-    try:
-        return _pagerank_rounds(spark, sf_dir, edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    own = private_session(spark, {"spark.sql.shuffle.partitions":
+                                  str(rounds_width)})
+    return rebind(_pagerank_rounds(own, sf_dir, rebind(edges, own)), spark)
 
 
 # Conservative serialized-row estimate for the node-sized relations

@@ -106,37 +106,29 @@ def join_bloom_runtime_filter(spark, sf_dir):
     filtered dim keys (bloom_filter_agg) and inserts a might_contain()
     predicate on the fact side, so the big join input is pre-filtered
     BEFORE the shuffle — at scale this is the difference between
-    shuffling 2% and 100% of a fact table. The broadcast threshold is
-    disabled while planning so the join genuinely shuffles (with a
-    broadcast join Spark correctly skips the bloom: the hash table
-    already prunes); the physical plan is locked in under these confs
-    (executedPlan is memoized per QueryExecution) and session conf is
-    restored. Plan assertion (might_contain + bloom_filter_agg) lives in
-    tests/test_plans.py; the oracle is the PLAIN join — the bloom is a
-    pure physical rewrite, identical result bits."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
-    conf = spark.conf
-    saved = {k: conf.get(k) for k in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-    )}
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    shuffling 2% and 100% of a fact table. The query is built on a
+    private session with broadcasting disabled (with a broadcast join
+    Spark correctly skips the bloom: the hash table already prunes), so
+    the join genuinely shuffles however the result is planned later,
+    and the caller's session is never edited. Plan assertion
+    (might_contain + bloom_filter_agg) lives in tests/test_plans.py;
+    the oracle is the PLAIN join — the bloom is a pure physical
+    rewrite, identical result bits."""
+    from ..session import private_session
+
+    own = private_session(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
         # local parquet files sit below the default 10GB application-side
         # gate that assumes cluster-scale scans; the bloom mechanism is
         # what's demonstrated, thresholds are deploy tuning
-        conf.set("spark.sql.optimizer.runtime.bloomFilter."
-                 "applicationSideScanSizeThreshold", "0")
-        out = (
-            li.join(p, li.l_partkey == p.p_partkey)
-            .groupBy("p_brand")
-            .agg(F.count("*").alias("n_rows"),
-                 fixed_sum("l_extendedprice", 2).alias("sum_price"))
-        )
-        # lock the physical plan in under these confs (memoized)
-        out._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
-    return out
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold": "0",
+    })
+    li = load_table(own, sf_dir, "lineitem")
+    p = load_table(own, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
+    return (
+        li.join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_brand")
+        .agg(F.count("*").alias("n_rows"),
+             fixed_sum("l_extendedprice", 2).alias("sum_price"))
+    )

@@ -403,18 +403,15 @@ def sql_recursive_supplier_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shuffle sizing: every iteration pays per-partition fixed costs on a
     frontier of |supplier| rows — same reasoning as the dedup pair
-    stages and streaming state stores (8 partitions while the recursion
-    RUNS, restored after). The recursion is executed eagerly inside the
-    conf window via localCheckpoint — a lazily-returned plan would
-    execute after the conf restore and see 32 partitions again. On a
-    real cluster this is sized to frontier volume, not core count."""
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _recursive_chain_sql(spark).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stages and streaming state stores. The recursion runs on a private
+    session at 8 partitions, and its view of ``supplier`` lives there
+    too. On a real cluster this is sized to frontier volume, not core
+    count."""
+    from ..session import private_session
+
+    own = private_session(spark, {"spark.sql.shuffle.partitions": "8"})
+    _t(own, sf_dir, "supplier").createOrReplaceTempView("supplier")
+    return _recursive_chain_sql(own)
 
 
 def _recursive_chain_sql(spark: SparkSession) -> DataFrame:

@@ -16,8 +16,9 @@ real cluster:
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -77,3 +78,41 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static configs on some builds; non-fatal
     return spark
+
+
+# SparkSession's constructor re-points RDD.toDF at the session it
+# builds; private_session puts it back, one clone at a time.
+_CLONE_LOCK = threading.Lock()
+
+
+def private_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session owned by one query: a clone of ``spark`` (its runtime
+    SQL conf, temp views, UDFs and Python data sources; same
+    SparkContext and cache) with ``conf`` applied. Settings Spark reads
+    at planning time — a stateful stream's state-store width, fixed
+    when it starts; the broadcast and pushdown switches a plan is built
+    under — go here, so ``spark``'s own conf is never edited and a
+    query planned on it concurrently never sees them.
+    (``spark.newSession()`` would drop conf set at runtime, such as
+    tune_session's UTC pin.)"""
+    from pyspark.rdd import RDD
+
+    with _CLONE_LOCK:
+        to_df = RDD.toDF
+        clone = SparkSession(spark.sparkContext,
+                             spark._jsparkSession.cloneSession())
+        RDD.toDF = to_df
+    for k, v in conf.items():
+        clone.conf.set(k, v)
+    return clone
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s plan bound to ``session``: what is planned from the
+    result is planned under ``session``'s conf. A file scan keeps the
+    session it was read with (its reader honours that session's
+    flags), so a frame read on a private session can be handed back
+    to the caller's."""
+    jds = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jds, session)

@@ -210,29 +210,20 @@ def scan_agg_pushdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     data pages. At 100 TB this is the difference between a stats lookup
     and a full-table scan for the table-profile queries every pipeline
     runs constantly. Needs the V2 parquet reader (parquet removed from
-    useV1SourceList while the plan locks in; restored after — same
-    memoized-executedPlan discipline as join_bloom_runtime_filter), and
-    holds only for un-grouped/un-filtered aggregates over
+    useV1SourceList), so the query is built on a private session with
+    DSv2 and aggregate pushdown on — the caller's session is never
+    edited — and holds only for un-grouped/un-filtered aggregates over
     non-partition columns with footer stats; the plan gate asserts
     PushedAggregation actually reached the BatchScan."""
-    conf = spark.conf
-    saved = {
-        "spark.sql.parquet.aggregatePushdown":
-            conf.get("spark.sql.parquet.aggregatePushdown"),
-        "spark.sql.sources.useV1SourceList":
-            conf.get("spark.sql.sources.useV1SourceList"),
-    }
-    try:
-        conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        conf.set("spark.sql.sources.useV1SourceList", "")
-        out = (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .agg(F.count("*").alias("n_rows"),
-                 F.min("l_quantity").alias("min_qty"),
-                 F.max("l_quantity").alias("max_qty"))
-        )
-        out._jdf.queryExecution().executedPlan()  # lock in under DSv2
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
-    return out
+    from ..session import private_session
+
+    own = private_session(spark, {
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    })
+    return (
+        own.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+        .agg(F.count("*").alias("n_rows"),
+             F.min("l_quantity").alias("min_qty"),
+             F.max("l_quantity").alias("max_qty"))
+    )

@@ -41,12 +41,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # timestamps apply, so oracle comparisons line up.
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        from ..session import rebind
+
+        df = rebind(nanos_session(spark).read.parquet(path), spark)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(path)
+
+
+def nanos_session(spark: SparkSession) -> SparkSession:
+    """A private clone of ``spark`` that reads TIMESTAMP(NANOS) parquet
+    as raw int64 (``nanosAsLong``). A scan keeps the session it was
+    read with, so a frame read here and rebound to ``spark`` reads the
+    same way while ``spark``'s own conf never gains the flag."""
+    from ..session import private_session
+
+    return private_session(
+        spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
 
 
 def stream_table_reader(spark: SparkSession, sf_dir: str, name: str,
@@ -105,10 +117,9 @@ def table_schema_raw(spark: SparkSession, sf_dir: str, name: str):
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        reader = nanos_session(spark) if name == "events" else spark
         path = os.path.join(sf_dir, f"{name}.parquet")
-        sch = spark.read.parquet(path).schema
+        sch = reader.read.parquet(path).schema
         _SCHEMA_CACHE[key] = sch
     return sch
 

@@ -92,23 +92,25 @@ def run_upsert_stream(spark: SparkSession, state_root: str,
                       partitions: int = FB_PARTS) -> DataFrame:
     """Drain the synthetic-events stream through the foreachBatch upsert
     and return the final state snapshot."""
+    from ..session import private_session
     from .windows import stream_shuffle_partitions
 
-    register_synthetic_source(spark)
+    # per-batch merge shuffles (delta agg + union/re-agg — the monoid
+    # merge, NOT a full-outer join; see upsert_batch) carry a few
+    # hundred keys: size them like the other streaming state paths (fixed
+    # per-task cost dominates at 32 partitions x stages x batches). Each
+    # batch runs on a clone of the session that starts the stream, so
+    # the width goes on a private session, never on ``spark``.
+    own = private_session(spark, {"spark.sql.shuffle.partitions":
+                                  str(stream_shuffle_partitions())})
+    register_synthetic_source(own)
     stream = (
-        spark.readStream.format("synthetic_events")
+        own.readStream.format("synthetic_events")
         .option("rows", str(rows))
         .option("rows_per_batch", str(per_batch))
         .option("partitions", str(partitions))
         .load()
     )
-    # per-batch merge shuffles (delta agg + union/re-agg — the monoid
-    # merge, NOT a full-outer join; see upsert_batch) carry a few
-    # hundred keys: size them like the other streaming state paths (fixed
-    # per-task cost dominates at 32 partitions x stages x batches)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(stream_shuffle_partitions()))
     q = (
         stream.writeStream
         .foreachBatch(lambda df, bid: upsert_batch(state_root, df, bid))
@@ -125,7 +127,6 @@ def run_upsert_stream(spark: SparkSession, state_root: str,
         q.processAllAvailable()
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_batches = -(-rows // per_batch)
     ptr = _load_pointer(state_root)  # one snapshot for both reads
     if len(ptr["applied"]) < n_batches:  # defensive: drain contract violated

@@ -897,6 +897,7 @@ def stream_index_compact_ingest(spark: SparkSession,
     import tempfile
 
     from ..operators.dedup import dedup_shuffle_partitions
+    from ..session import private_session
     from ..sources.tables import load_table
     from .joins import stream_documents
 
@@ -917,32 +918,31 @@ def stream_index_compact_ingest(spark: SparkSession,
     def _lifecycle():
         shutil.rmtree(work, ignore_errors=True)
         os.makedirs(work)
-        docs = load_table(spark, sf_dir,
+        # the index's shuffles (and its ingest streams' per-batch
+        # merges) carry pair-scale data: run the lifecycle on a private
+        # session at the dedup width, never on ``spark``'s conf
+        own = private_session(spark, {"spark.sql.shuffle.partitions":
+                                      str(dedup_shuffle_partitions())})
+        docs = load_table(own, sf_dir,
                           "documents").select("doc_id", "text")
 
         def stream_wave(w: int) -> DataFrame:
-            return (stream_documents(spark, sf_dir)
+            return (stream_documents(own, sf_dir)
                     .filter(F.col("doc_id") % 3 == w)
                     .select("doc_id", "text"))
 
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(dedup_shuffle_partitions()))
-        try:
-            build_band_index(spark,
-                             docs.filter(F.col("doc_id") % 3 == 0),
-                             index_dir, keys_fn=prefix_fingerprint_keys)
-            run_index_ingest(spark, stream_wave(1), index_dir,
-                             os.path.join(work, "ckpt1"),
-                             keys_fn=prefix_fingerprint_keys)
-            purged = docs.filter(
-                F.col("doc_id") % 10 == 1).select("doc_id")
-            compact_band_index(spark, index_dir, drop_docs=purged)
-            run_index_ingest(spark, stream_wave(2), index_dir,
-                             os.path.join(work, "ckpt2"),
-                             keys_fn=prefix_fingerprint_keys)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        build_band_index(own,
+                         docs.filter(F.col("doc_id") % 3 == 0),
+                         index_dir, keys_fn=prefix_fingerprint_keys)
+        run_index_ingest(own, stream_wave(1), index_dir,
+                         os.path.join(work, "ckpt1"),
+                         keys_fn=prefix_fingerprint_keys)
+        purged = docs.filter(
+            F.col("doc_id") % 10 == 1).select("doc_id")
+        compact_band_index(own, index_dir, drop_docs=purged)
+        run_index_ingest(own, stream_wave(2), index_dir,
+                         os.path.join(work, "ckpt2"),
+                         keys_fn=prefix_fingerprint_keys)
         return work
 
     from ..fsutil import run_serialized

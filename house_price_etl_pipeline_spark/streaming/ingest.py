@@ -174,8 +174,17 @@ def read_upsert_version(spark, target_dir: str,
     if version is None:
         return _snapshot_read(spark, table_metadata(target_dir),
                               resolve_published_snapshot(target_dir))
+    commits, applied = _journal_state(target_dir + "_versions")
+    return _read_journaled_version(spark, target_dir, version, commits,
+                                   applied)
+
+
+def _read_journaled_version(spark, target_dir: str, version: int,
+                            commits: list[dict],
+                            applied: set[int]) -> DataFrame:
+    """``read_upsert_version(..., version)`` against a journal the
+    caller already read (``commits``, ``applied``: _journal_state)."""
     versions_root = target_dir + "_versions"
-    commits, applied = _journal_state(versions_root)
     vdir = _resolve_version_dir(versions_root, version, commits)
     if vdir is None:
         retained = sorted(
@@ -553,70 +562,23 @@ def _snapshot_read(spark, meta: dict, snap_dir: str,
     return to_logical(df, _mapping_of(meta))
 
 
-def _stage_partition_bytes() -> int:
-    """Compressed input bytes each staging shuffle partition should
-    carry. 32 MiB of zstd parquet unpacks to roughly the 100 MB-1 GB
-    row band guide §2.2 wants per reduce partition; override for a
-    cluster via SPARK_GRAFT_STAGE_PARTITION_BYTES."""
-    import os
-    return int(os.environ.get("SPARK_GRAFT_STAGE_PARTITION_BYTES",
-                              str(32 << 20)))
+# Compressed input bytes each staging partition should carry: 32 MiB of
+# zstd parquet unpacks to roughly the 100 MB-1 GB row band guide §2.2
+# wants per reduce partition.
+STAGE_PARTITION_BYTES = 32 << 20
 
 
 def _stage_width(spark, input_bytes: int) -> int:
-    """Shuffle width for a staging computation whose input size is
-    KNOWN (touched-file bytes, base snapshot bytes): a copy-on-write
-    commit that rewrites 2 MB must not fan its merge shuffle out to
-    the session's compute width — 32 reduce tasks plus 32 task commits
-    for one tiny output file is pure per-task overhead (guide §1.2/§6;
-    the r14 'delta-scaled staging width' prototype). Scale-adaptive by
+    """Width for a staging computation whose input size is KNOWN
+    (touched-file bytes, base snapshot bytes): a copy-on-write commit
+    that rewrites 2 MB must not fan out to the session's compute width
+    — 32 reduce tasks plus 32 task commits for one tiny output file is
+    pure per-task overhead (guide §1.2/§6). Scale-adaptive by
     construction: width grows with the delta, capped at the session's
     configured width so a big rewrite keeps full parallelism."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(cap, -(-int(input_bytes)
-                             // max(_stage_partition_bytes(), 1))))
-
-
-# Staging writes mutate session-global SQL confs around the write
-# action (coalescing mode + delta-scaled width). The lock keeps two
-# CONCURRENT staged writes in one session from restoring each other's
-# overrides mid-flight (VERDICT r14 item 7); a concurrent COMPUTE query
-# planned inside the window still sees the staging settings — perf-only
-# (size-first coalescing / narrower shuffle), never correctness.
-_STAGE_CONF_LOCK = __import__("threading").RLock()
-
-
-@__import__("contextlib").contextmanager
-def _staging_conf(spark, input_bytes_hint: int | None):
-    """The staging-write conf window, shared by every snapshot/state
-    writer: size-first AQE coalescing (64 MB+ output files, guide §6)
-    plus the delta-scaled shuffle width when the input size is known."""
-    with _STAGE_CONF_LOCK:
-        prev = spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "true")
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions", None)
-        try:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "false")
-            if input_bytes_hint is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(_stage_width(spark, input_bytes_hint)))
-            yield
-        finally:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                prev)
-            if input_bytes_hint is not None:
-                # a session that never set the width gets it unset
-                # again, not left at the delta-scaled value
-                if prev_width is None:
-                    spark.conf.unset("spark.sql.shuffle.partitions")
-                else:
-                    spark.conf.set("spark.sql.shuffle.partitions",
-                                   prev_width)
+                             // max(STAGE_PARTITION_BYTES, 1))))
 
 
 def _staged_write(df, meta: dict, stage_path: str,
@@ -628,8 +590,9 @@ def _staged_write(df, meta: dict, stage_path: str,
     physical names, so renames never change the on-disk schema and
     hard-link carries stay valid); the one write path every full
     rewrite shares. ``input_bytes_hint`` — the staging computation's
-    known input size (compressed bytes) — scales the shuffle width to
-    the delta instead of the session's compute width (_stage_width)."""
+    known input size (compressed bytes) — caps the write's width in its
+    plan at the delta's size instead of the session's compute width
+    (_stage_width)."""
     from .colmap import _mapping_of, to_physical
 
     df = to_physical(df, _mapping_of(meta))
@@ -654,22 +617,18 @@ def _staged_write(df, meta: dict, stage_path: str,
         # read_snapshot / partition_values_of)
         from .partitioning import encode_partition_sentinels
         df = encode_partition_sentinels(df, parts)
+    if input_bytes_hint is not None:
+        # the write's width is part of its plan: for a write job more
+        # tasks means more small files and more task overhead, so a
+        # known input size caps the tasks (and output files) here,
+        # not a session-wide conf that a concurrent query would see
+        df = df.coalesce(_stage_width(df.sparkSession, input_bytes_hint))
     w = df.write.mode("overwrite")
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
     if parts:
         w = w.partitionBy(*parts)
-    # staged writes coalesce to ADVISORY-SIZED partitions, not to core
-    # count: for a write job "more parallelism" means more small output
-    # files + more task overhead, while advisory sizing yields the
-    # 64 MB+ parquet files guide §6 wants at any scale. Scoped to the
-    # write action (set/restore): the global default stays
-    # parallelism-first for compute stages, where an A/B showed the
-    # opposite trade (clean_winsorize +0.53 s under size-first vs
-    # commit paths −0.3 s).
-    spark = df.sparkSession
-    with _staging_conf(spark, input_bytes_hint):
-        w.parquet(stage_path)
+    w.parquet(stage_path)
     if parts:
         from .partitioning import write_empty_marker_if_needed
         # a DELETE/drop that empties a PARTITIONED table writes ZERO
@@ -777,7 +736,7 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
 
     if rewritten_df is not None:
         # the rewrite's input is the TOUCHED subset of the base (plus a
-        # delta of comparable size): size the staging shuffle to it —
+        # delta of comparable size): size the staging write to it —
         # a tiny copy-on-write commit gets a 1-2 task write, a big one
         # keeps the session width (_stage_width). An insert-only
         # commit touches no base file: its input is the whole delta,
@@ -1313,7 +1272,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                     delta = _assign_identity(delta, ident, ident_hwm)
                 merged = delta
             # full rewrite over a known base: size the staging
-            # shuffle to its bytes (first commits have no base and
+            # write to its bytes (first commits have no base and
             # an unknown batch size — keep the session width)
             _staged_write(merged, meta, stage_dir,
                           input_bytes_hint=(
@@ -2741,10 +2700,14 @@ def read_upsert_changes(spark, target_dir: str, v_from: int, v_to: int,
 
     from pyspark.sql import functions as F
 
-    pre = read_upsert_version(spark, target_dir, v_from)
-    post = read_upsert_version(spark, target_dir, v_to)
+    # one journal read serves both version reads, both dirs and the
+    # metadata
     versions_root = target_dir + "_versions"
-    commits, _ = _journal_state(versions_root)
+    commits, applied = _journal_state(versions_root)
+    pre = _read_journaled_version(spark, target_dir, v_from, commits,
+                                  applied)
+    post = _read_journaled_version(spark, target_dir, v_to, commits,
+                                   applied)
     d_from = _resolve_version_dir(versions_root, v_from, commits)
     d_to = _resolve_version_dir(versions_root, v_to, commits)
     if d_from and d_to:

@@ -99,26 +99,11 @@ def drain_user_profiles(spark: SparkSession, events: DataFrame) -> DataFrame:
     sink; with update output the LAST emission per user is the final
     profile — deduped here by (user_id, n_events DESC) since n_events is
     monotone in batch order."""
-    from .windows import stream_shuffle_partitions
+    from .windows import _drain
 
-    name = "user_profiles_out"  # stable: reruns replace the buffer
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # see windows.stream_shuffle_partitions: state-store count = shuffle
-    # partition count; fixed per-store commit cost dwarfs the work here
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_partitions()))
-    try:
-        q = (
-            user_profile_stream(events)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.table(name)
+    # state-store count = stream_shuffle_partitions() (see _drain)
+    out = _drain(user_profile_stream(events), spark, output_mode="update",
+                 name="user_profiles_out")
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
@@ -222,39 +207,23 @@ def drain_running_totals(spark, stream_df):
             timeMode="none",
         )
     )
-    from .windows import stream_shuffle_partitions
+    from .windows import _drain, stream_shuffle_partitions
 
-    name = "twstate_out"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    store_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_store = spark.conf.get(store_key, None)
     # Unlike the JVM-side stream-stream joins (fewer stores win there),
     # this drain's cost is the PYTHON state-server loop — one protobuf
     # get+update round trip per key, serialized within a partition — so
     # more partitions parallelize it until RocksDB open/commit overhead
     # bites. r14 interleaved A/B at sf0.1 (5 reps, medians): 4 parts
     # 4.89 s, 8 → 3.67 s, 16 → 3.54 s, 32 → 3.74 s; 2x the stream
-    # default is the measured knee.
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(max(2, 2 * stream_shuffle_partitions())))
-    # transformWithState keeps each typed state variable in its own
-    # column family — only the RocksDB provider supports that (the
-    # HDFS-backed default refuses); Spark bundles the RocksDB JNI.
-    spark.conf.set(
-        store_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        q = (result.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_store is None:
-            spark.conf.unset(store_key)
-        else:
-            spark.conf.set(store_key, prev_store)
-    out = spark.table(name)
+    # default is the measured knee. transformWithState keeps each typed
+    # state variable in its own column family — only the RocksDB
+    # provider supports that (the HDFS-backed default refuses); Spark
+    # bundles the RocksDB JNI.
+    out = _drain(result, spark, output_mode="append", name="twstate_out",
+                 partitions=max(2, 2 * stream_shuffle_partitions()),
+                 conf={"spark.sql.streaming.stateStore.providerClass":
+                       "org.apache.spark.sql.execution.streaming.state."
+                       "RocksDBStateStoreProvider"})
     from pyspark.sql import Window as w
     latest = (out.withColumn(
         "_rn", F.row_number().over(

@@ -40,14 +40,17 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (read as raw int64 via nanosAsLong, then truncated to µs) and as plain
     TIMESTAMP(MICROS). Derive the schema from the parquet footer instead
     of hardcoding either encoding."""
-    from ..sources.tables import stream_table_reader, table_schema_raw
+    from ..session import rebind
+    from ..sources.tables import (nanos_session, stream_table_reader,
+                                  table_schema_raw)
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = table_schema_raw(spark, sf_dir, "events")  # memoized footer
     # layout-aware source: single-file testdata scans sf_dir glob-
     # filtered to the file name (the reference's *a.csv suffix trick);
-    # a directory-shaped table (Spark writer layout) streams directly
-    raw = stream_table_reader(spark, sf_dir, "events", schema)
+    # a directory-shaped table (Spark writer layout) streams directly.
+    # The source reads every batch with the session it was built on.
+    raw = rebind(stream_table_reader(nanos_session(spark), sf_dir,
+                                     "events", schema), spark)
     if isinstance(schema["ts"].dataType, T.LongType):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
@@ -70,48 +73,40 @@ def stream_shuffle_partitions() -> int:
 def _drain(agg: DataFrame, spark: SparkSession,
            output_mode: str = "complete",
            name: str | None = None,
-           partitions: int | None = None) -> DataFrame:
+           partitions: int | None = None,
+           conf: dict[str, str] | None = None) -> DataFrame:
     """Run the streaming aggregation to completion into a memory sink and
     return the materialized result. ``complete`` mode + AvailableNow: the
     finite source drains in one trigger, so the final table is exactly
     the batch answer.
 
-    The sink's temp-view name defaults to the CALLING function's name —
-    stable per query — so a re-run (bench iterations, retries) REPLACES
-    the previous run's driver-side buffer instead of accumulating a
-    fresh memory sink per invocation (review r9: the old per-call
-    counter names leaked every drained result set for the session's
-    lifetime). If a stream with that name is STILL ACTIVE — a
-    concurrent execution of the same query, or two call sites sharing
-    a function name — a per-run token is appended so the two drains
-    cannot interleave into one sink (ADVICE r9); only the concurrent
-    loser leaks its one view, the serial-rerun replacement property is
-    unchanged. ``partitions`` overrides the stateful-stream shuffle
-    sizing for queries whose state is keyed differently (the dedup
-    ingest path) — previously an inline copy of this whole block."""
+    The query runs on a private clone of ``spark`` whose shuffle width
+    — the state-store count, fixed when the query starts — is
+    ``partitions`` (default stream_shuffle_partitions()), plus any
+    other start-time ``conf`` (a state-store provider); ``spark``'s
+    own conf is never edited. The memory sink's view lives in the
+    clone, so concurrent drains never share a sink and a finished
+    drain's buffer goes with its result. ``name`` defaults to the
+    CALLING function's name."""
     import sys
-    import uuid
+
+    from ..session import private_session, rebind
 
     if name is None:
         name = f"drain_{sys._getframe(1).f_code.co_name}"
-    if any(q.name == name for q in spark.streams.active):
-        name = f"{name}_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(partitions if partitions is not None
-                       else stream_shuffle_partitions()))
-    try:
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    width = partitions if partitions is not None \
+        else stream_shuffle_partitions()
+    own = private_session(spark, {"spark.sql.shuffle.partitions": str(width),
+                                  **(conf or {})})
+    q = (
+        rebind(agg, own).writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return rebind(own.table(name), spark)
 
 
 @register(

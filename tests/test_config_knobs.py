@@ -91,10 +91,12 @@ def test_incremental_commit_knobs(monkeypatch):
 
 
 def test_stage_width_scales_with_input_bytes(monkeypatch, spark):
-    """Staged writes size their shuffle to the KNOWN input bytes
+    """Staged writes size their width to the KNOWN input bytes
     (round-15: delta-scaled staging width): 1 partition for a tiny
     copy-on-write delta, growing with bytes, capped at the session's
-    configured width — and the per-partition target is env-tunable."""
+    configured width — and the per-partition target is the module's
+    STAGE_PARTITION_BYTES."""
+    from house_price_etl_pipeline_spark.streaming import ingest
     from house_price_etl_pipeline_spark.streaming.ingest import \
         _stage_width
 
@@ -104,25 +106,45 @@ def test_stage_width_scales_with_input_bytes(monkeypatch, spark):
     assert _stage_width(spark, 32 << 20) == 1
     assert _stage_width(spark, (32 << 20) + 1) == min(2, cap)
     assert _stage_width(spark, 10 << 40) == cap
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_PARTITION_BYTES", "1024")
+    monkeypatch.setattr(ingest, "STAGE_PARTITION_BYTES", 1024)
     assert _stage_width(spark, 4096) == min(4, cap)
 
 
-def test_staging_conf_unsets_a_width_the_session_never_set(spark):
-    """A session that never set ``spark.sql.shuffle.partitions`` must
-    read it as unset again after a staged write: restoring "nothing"
-    by skipping the restore would leave the delta-scaled width (1 for a
-    tiny input) in the session for every later query."""
-    from house_price_etl_pipeline_spark.streaming.ingest import \
-        _staging_conf
+def test_table_ops_leave_an_unset_width_unset(spark, tmp_path):
+    """A session that never set ``spark.sql.shuffle.partitions`` reads
+    it as unset after an upsert, a MERGE, a DELETE and an OPTIMIZE, and
+    its whole conf is unchanged: a staged write's delta-scaled width (1
+    for a tiny input) lives in the write's plan, never in the
+    session."""
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        optimize_upsert_target, upsert_commit_batch, upsert_delete_where,
+        upsert_merge_into)
 
     key = "spark.sql.shuffle.partitions"
     width = spark.conf.get(key)
+    target = str(tmp_path / "t")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k long, v long")
+
+    ops = [
+        lambda: upsert_commit_batch(batch([(1, 1), (2, 2)]), target, 0,
+                                    key_cols=["k"], order_col="v"),
+        lambda: upsert_commit_batch(batch([(2, 3), (3, 3)]), target, 1,
+                                    key_cols=["k"], order_col="v"),
+        lambda: upsert_merge_into(spark, target, 2, batch([(1, 9)]),
+                                  ["k"]),
+        lambda: upsert_delete_where(spark, target, 3, "k = 3"),
+        lambda: optimize_upsert_target(spark, target),
+    ]
     try:
         spark.conf.unset(key)
-        assert spark.conf.get(key, None) is None
-        with _staging_conf(spark, input_bytes_hint=1):
-            assert spark.conf.get(key) == "1"
-        assert spark.conf.get(key, None) is None
+        before = spark.conf.getAll
+        for op in ops:
+            op()
+            assert spark.conf.get(key, None) is None
+        assert spark.conf.getAll == before
     finally:
         spark.conf.set(key, width)
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) \
+        == [(1, 9), (2, 3)]

@@ -1231,7 +1231,8 @@ if _HAVE_HYPOTHESIS:
         assert got == [mirror(r) for r in rows]
 
 
-def test_upsert_optimize_vacuum_and_change_feed(spark, tmp_path):
+def test_upsert_optimize_vacuum_and_change_feed(spark, tmp_path,
+                                                monkeypatch):
     """Snapshot maintenance (VERDICT r4 item 3): OPTIMIZE compacts the
     published snapshot into fewer sized files while serving the same
     version through the journal; VACUUM reclaims orphaned/retired dirs
@@ -1242,6 +1243,7 @@ def test_upsert_optimize_vacuum_and_change_feed(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from house_price_etl_pipeline_spark.streaming import ingest
     from house_price_etl_pipeline_spark.streaming.ingest import (
         optimize_upsert_target, read_upsert_changes, read_upsert_version,
         upsert_commit_batch, vacuum_upsert_target)
@@ -1261,8 +1263,7 @@ def test_upsert_optimize_vacuum_and_change_feed(spark, tmp_path):
     prev_coalesce = spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    prev_stage = os.environ.get("SPARK_GRAFT_STAGE_PARTITION_BYTES")
-    os.environ["SPARK_GRAFT_STAGE_PARTITION_BYTES"] = "1"
+    monkeypatch.setattr(ingest, "STAGE_PARTITION_BYTES", 1)
     try:
         b0 = frame([(1, "2024-01-01 10:00:00", 1, "click", 1.0, "{}"),
                     (2, "2024-01-01 10:05:00", 2, "view", 2.0, "{}")])
@@ -1274,10 +1275,7 @@ def test_upsert_optimize_vacuum_and_change_feed(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                        prev_coalesce)
-        if prev_stage is None:
-            os.environ.pop("SPARK_GRAFT_STAGE_PARTITION_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_STAGE_PARTITION_BYTES"] = prev_stage
+        monkeypatch.undo()
 
     versions_root = target + "_versions"
     pre_files = _glob.glob(os.path.join(os.path.realpath(target),

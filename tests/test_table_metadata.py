@@ -16,7 +16,7 @@ from house_price_etl_pipeline_spark.streaming.colmap import (
     drop_table_column, rename_table_column)
 from house_price_etl_pipeline_spark.streaming.ingest import (
     CheckConstraintViolation, clone_upsert_table, describe_upsert_detail,
-    read_upsert_version, set_table_check_constraint,
+    read_upsert_changes, read_upsert_version, set_table_check_constraint,
     set_table_column_default, set_table_generated_column,
     set_table_identity_column, set_table_not_null, table_check_constraints,
     upsert_commit_batch)
@@ -96,6 +96,29 @@ def test_not_retained_error_reads_the_journal_once(spark, tmp_path,
     with pytest.raises(FileNotFoundError, match=r"retained=\[3\]"):
         read_upsert_version(spark, t, 0)
     assert len(calls) <= 2
+
+
+def test_change_feed_reads_the_journal_once(spark, tmp_path, monkeypatch):
+    """read_upsert_changes resolves both versions, both dirs and the
+    metadata from ONE journal read, not one per version plus one."""
+    t = _base(spark, tmp_path)
+    upsert_commit_batch(spark.createDataFrame([(2, 5), (4, 4)],
+                                              "k long, v long"),
+                        t, 1, key_cols=["k"], order_col="v",
+                        keep_versions=8)
+    calls = []
+    real = fsutil.read_commit_journal
+
+    def counting(commits_dir):
+        calls.append(commits_dir)
+        return real(commits_dir)
+
+    monkeypatch.setattr(fsutil, "read_commit_journal", counting)
+    changes = read_upsert_changes(spark, t, 0, 1, ["k"])
+    assert len(calls) == 1
+    monkeypatch.undo()
+    assert sorted((r.k, r.change_type) for r in changes.collect()) == [
+        (2, "update_postimage"), (2, "update_preimage"), (4, "insert")]
 
 
 def test_clone_metadata_is_atomic_with_its_commit(spark, tmp_path,
