@@ -16,7 +16,6 @@ real cluster:
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,31 +79,43 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# SparkSession's constructor re-points RDD.toDF at the session it
-# builds; private_session puts it back, one clone at a time.
-_CLONE_LOCK = threading.Lock()
-
-
 def private_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     """A session owned by one query: a clone of ``spark`` (its runtime
     SQL conf, temp views, UDFs and Python data sources; same
     SparkContext and cache) with ``conf`` applied. Settings Spark reads
-    at planning time — a stateful stream's state-store width, fixed
-    when it starts; the broadcast and pushdown switches a plan is built
-    under — go here, so ``spark``'s own conf is never edited and a
-    query planned on it concurrently never sees them.
+    at planning time — a staged write's width and coalescing mode, a
+    stateful stream's state-store width, fixed when it starts; the
+    broadcast and pushdown switches a plan is built under — go here,
+    so ``spark``'s own conf is never edited and a query planned on it
+    concurrently never sees them.
     (``spark.newSession()`` would drop conf set at runtime, such as
     tune_session's UTC pin.)"""
-    from pyspark.rdd import RDD
-
-    with _CLONE_LOCK:
-        to_df = RDD.toDF
-        clone = SparkSession(spark.sparkContext,
-                             spark._jsparkSession.cloneSession())
-        RDD.toDF = to_df
+    # the wrapper is built without SparkSession.__init__, which
+    # re-points the process-wide RDD.toDF at the session it builds (an
+    # rdd.toDF() on another thread would land on the clone)
+    clone = SparkSession.__new__(SparkSession)
+    clone._sc, clone._jsc, clone._jvm = spark._sc, spark._jsc, spark._jvm
+    clone._jsparkSession = spark._jsparkSession.cloneSession()
+    clone._profiler_collector = spark._profiler_collector
     for k, v in conf.items():
         clone.conf.set(k, v)
     return clone
+
+
+def close_streams(session: SparkSession) -> None:
+    """Unregister the streaming listener bus of a private session whose
+    streams have all stopped: Spark adds one to the SparkContext's
+    listener bus the first time a session starts a stream and never
+    removes it, so each drain on a fresh clone would leave one behind."""
+    manager = session._jsparkSession.streams()
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    session._jsc.sc().listenerBus().removeListener(field.get(manager))
+
+
+# py4j walks a class path one round trip per name component, so the
+# Dataset class rebind needs is looked up once per JVM: (jvm, class)
+_dataset_class: tuple = (None, None)
 
 
 def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
@@ -113,6 +124,10 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
     session it was read with (its reader honours that session's
     flags), so a frame read on a private session can be handed back
     to the caller's."""
-    jds = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        session._jsparkSession, df._jdf.logicalPlan())
+    global _dataset_class
+    jvm, cls = _dataset_class
+    if jvm is not session._jvm:
+        cls = session._jvm.org.apache.spark.sql.classic.Dataset
+        _dataset_class = (session._jvm, cls)
+    jds = cls.ofRows(session._jsparkSession, df._jdf.logicalPlan())
     return DataFrame(jds, session)

@@ -92,7 +92,7 @@ def run_upsert_stream(spark: SparkSession, state_root: str,
                       partitions: int = FB_PARTS) -> DataFrame:
     """Drain the synthetic-events stream through the foreachBatch upsert
     and return the final state snapshot."""
-    from ..session import private_session
+    from ..session import close_streams, private_session
     from .windows import stream_shuffle_partitions
 
     # per-batch merge shuffles (delta agg + union/re-agg — the monoid
@@ -127,6 +127,7 @@ def run_upsert_stream(spark: SparkSession, state_root: str,
         q.processAllAvailable()
     finally:
         q.stop()
+        close_streams(own)
     n_batches = -(-rows // per_batch)
     ptr = _load_pointer(state_root)  # one snapshot for both reads
     if len(ptr["applied"]) < n_batches:  # defensive: drain contract violated

@@ -897,7 +897,7 @@ def stream_index_compact_ingest(spark: SparkSession,
     import tempfile
 
     from ..operators.dedup import dedup_shuffle_partitions
-    from ..session import private_session
+    from ..session import close_streams, private_session
     from ..sources.tables import load_table
     from .joins import stream_documents
 
@@ -931,18 +931,21 @@ def stream_index_compact_ingest(spark: SparkSession,
                     .filter(F.col("doc_id") % 3 == w)
                     .select("doc_id", "text"))
 
-        build_band_index(own,
-                         docs.filter(F.col("doc_id") % 3 == 0),
-                         index_dir, keys_fn=prefix_fingerprint_keys)
-        run_index_ingest(own, stream_wave(1), index_dir,
-                         os.path.join(work, "ckpt1"),
-                         keys_fn=prefix_fingerprint_keys)
-        purged = docs.filter(
-            F.col("doc_id") % 10 == 1).select("doc_id")
-        compact_band_index(own, index_dir, drop_docs=purged)
-        run_index_ingest(own, stream_wave(2), index_dir,
-                         os.path.join(work, "ckpt2"),
-                         keys_fn=prefix_fingerprint_keys)
+        try:
+            build_band_index(own,
+                             docs.filter(F.col("doc_id") % 3 == 0),
+                             index_dir, keys_fn=prefix_fingerprint_keys)
+            run_index_ingest(own, stream_wave(1), index_dir,
+                             os.path.join(work, "ckpt1"),
+                             keys_fn=prefix_fingerprint_keys)
+            purged = docs.filter(
+                F.col("doc_id") % 10 == 1).select("doc_id")
+            compact_band_index(own, index_dir, drop_docs=purged)
+            run_index_ingest(own, stream_wave(2), index_dir,
+                             os.path.join(work, "ckpt2"),
+                             keys_fn=prefix_fingerprint_keys)
+        finally:
+            close_streams(own)
         return work
 
     from ..fsutil import run_serialized

@@ -569,16 +569,35 @@ STAGE_PARTITION_BYTES = 32 << 20
 
 
 def _stage_width(spark, input_bytes: int) -> int:
-    """Width for a staging computation whose input size is KNOWN
-    (touched-file bytes, base snapshot bytes): a copy-on-write commit
-    that rewrites 2 MB must not fan out to the session's compute width
-    — 32 reduce tasks plus 32 task commits for one tiny output file is
-    pure per-task overhead (guide §1.2/§6). Scale-adaptive by
+    """Shuffle width for a staging computation whose input size is
+    KNOWN (touched-file bytes, base snapshot bytes): a copy-on-write
+    commit that rewrites 2 MB must not fan its merge shuffle out to
+    the session's compute width — 32 reduce tasks plus 32 task commits
+    for one tiny output file is pure per-task overhead (guide §1.2/§6;
+    the r14 'delta-scaled staging width' prototype). Scale-adaptive by
     construction: width grows with the delta, capped at the session's
     configured width so a big rewrite keeps full parallelism."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(cap, -(-int(input_bytes)
                              // max(STAGE_PARTITION_BYTES, 1))))
+
+
+def _staging_session(spark, input_bytes_hint: int | None):
+    """The private session every snapshot and state write plans on:
+    size-first AQE coalescing (for a write, more tasks only means more
+    small files; advisory sizing gives the 64 MB+ files guide §6 wants)
+    plus the delta-scaled width when the input size is known. ``spark``
+    stays parallelism-first for compute stages (an A/B: clean_winsorize
+    +0.53 s under size-first vs commit paths −0.3 s) and keeps its
+    width while the write runs; a plan's own ``repartition(n)`` stands."""
+    from ..session import private_session
+
+    conf = {"spark.sql.adaptive.coalescePartitions.parallelismFirst":
+            "false"}
+    if input_bytes_hint is not None:
+        conf["spark.sql.shuffle.partitions"] = str(
+            _stage_width(spark, input_bytes_hint))
+    return private_session(spark, conf)
 
 
 def _staged_write(df, meta: dict, stage_path: str,
@@ -590,9 +609,10 @@ def _staged_write(df, meta: dict, stage_path: str,
     physical names, so renames never change the on-disk schema and
     hard-link carries stay valid); the one write path every full
     rewrite shares. ``input_bytes_hint`` — the staging computation's
-    known input size (compressed bytes) — caps the write's width in its
-    plan at the delta's size instead of the session's compute width
-    (_stage_width)."""
+    known input size (compressed bytes) — scales the shuffle width to
+    the delta instead of the session's compute width (_staging_session
+    runs the write)."""
+    from ..session import rebind
     from .colmap import _mapping_of, to_physical
 
     df = to_physical(df, _mapping_of(meta))
@@ -617,12 +637,7 @@ def _staged_write(df, meta: dict, stage_path: str,
         # read_snapshot / partition_values_of)
         from .partitioning import encode_partition_sentinels
         df = encode_partition_sentinels(df, parts)
-    if input_bytes_hint is not None:
-        # the write's width is part of its plan: for a write job more
-        # tasks means more small files and more task overhead, so a
-        # known input size caps the tasks (and output files) here,
-        # not a session-wide conf that a concurrent query would see
-        df = df.coalesce(_stage_width(df.sparkSession, input_bytes_hint))
+    df = rebind(df, _staging_session(df.sparkSession, input_bytes_hint))
     w = df.write.mode("overwrite")
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
@@ -736,7 +751,7 @@ def _stage_with_reuse(snapshot_dir: str, stage_dir: str,
 
     if rewritten_df is not None:
         # the rewrite's input is the TOUCHED subset of the base (plus a
-        # delta of comparable size): size the staging write to it —
+        # delta of comparable size): size the staging shuffle to it —
         # a tiny copy-on-write commit gets a 1-2 task write, a big one
         # keeps the session width (_stage_width). An insert-only
         # commit touches no base file: its input is the whole delta,
@@ -1272,7 +1287,7 @@ def upsert_commit_batch(batch_df, target_dir: str, batch_id: int,
                     delta = _assign_identity(delta, ident, ident_hwm)
                 merged = delta
             # full rewrite over a known base: size the staging
-            # write to its bytes (first commits have no base and
+            # shuffle to its bytes (first commits have no base and
             # an unknown batch size — keep the session width)
             _staged_write(merged, meta, stage_dir,
                           input_bytes_hint=(

@@ -101,16 +101,16 @@ def _stage_state(view_dir: str, df: DataFrame,
     """Materialize a candidate view state to a fresh uniquely-named
     subdir — data only, no pointer: the journal must only ever
     reference fully-written state (the same staging-before-CAS ordering
-    the upsert table uses). A known input size caps the write's width
-    in its plan, as the table's staged writes do (ingest._stage_width):
-    a grouped view state is output-file-sized work, not core-count
-    work."""
-    from .ingest import _stage_width
+    the upsert table uses). The write plans on the table's staging
+    session (ingest._staging_session: size-first coalescing plus the
+    delta-scaled width when the input size is known): a grouped view
+    state is output-file-sized work, not core-count work."""
+    from ..session import rebind
+    from .ingest import _staging_session
 
     os.makedirs(view_dir, exist_ok=True)
     name = f"state_{uuid.uuid4().hex[:8]}"
-    if input_bytes_hint is not None:
-        df = df.coalesce(_stage_width(df.sparkSession, input_bytes_hint))
+    df = rebind(df, _staging_session(df.sparkSession, input_bytes_hint))
     df.write.mode("overwrite").parquet(os.path.join(view_dir, name))
     return name
 

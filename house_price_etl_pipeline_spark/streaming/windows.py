@@ -90,7 +90,7 @@ def _drain(agg: DataFrame, spark: SparkSession,
     CALLING function's name."""
     import sys
 
-    from ..session import private_session, rebind
+    from ..session import close_streams, private_session, rebind
 
     if name is None:
         name = f"drain_{sys._getframe(1).f_code.co_name}"
@@ -105,7 +105,11 @@ def _drain(agg: DataFrame, spark: SparkSession,
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+        close_streams(own)
     return rebind(own.table(name), spark)
 
 

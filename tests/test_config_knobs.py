@@ -114,8 +114,8 @@ def test_table_ops_leave_an_unset_width_unset(spark, tmp_path):
     """A session that never set ``spark.sql.shuffle.partitions`` reads
     it as unset after an upsert, a MERGE, a DELETE and an OPTIMIZE, and
     its whole conf is unchanged: a staged write's delta-scaled width (1
-    for a tiny input) lives in the write's plan, never in the
-    session."""
+    for a tiny input) is set on the write's own private session, never
+    on the caller's."""
     from house_price_etl_pipeline_spark.streaming.ingest import (
         optimize_upsert_target, upsert_commit_batch, upsert_delete_where,
         upsert_merge_into)

@@ -343,6 +343,33 @@ def test_incremental_optimize_packs_only_small_files(spark, tmp_path):
                                zorder_by=["k"])
 
 
+def test_incremental_optimize_honours_target_file_bytes(spark, tmp_path):
+    """Incremental OPTIMIZE packs its small files into
+    ceil(pack bytes / target_file_bytes) files even when that is more
+    than the staging width its tiny input would get on its own: the
+    plan's explicit width stands."""
+    from house_price_etl_pipeline_spark.streaming.ingest import (
+        _snapshot_data_files)
+
+    t = os.path.join(str(tmp_path), "flat")
+    for i in range(4):
+        d = spark.range(i * 1000, i * 1000 + 200).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+        upsert_commit_batch(d, t, i, key_cols=["k"], order_col="v",
+                            keep_versions=8, incremental_min_bytes=0)
+    head = os.path.realpath(t)
+    pack = sum(os.path.getsize(os.path.join(head, f))
+               for f in _snapshot_data_files(head))
+    perm = optimize_upsert_target(spark, t, keep_versions=8,
+                                  min_file_bytes=1 << 20,
+                                  target_file_bytes=pack // 3 + 1,
+                                  stats_cols=[])
+    assert perm is not None
+    after = _snapshot_data_files(os.path.join(t + "_versions", perm))
+    assert len(after) == 3
+    assert read_upsert_version(spark, t).count() == 800
+
+
 def test_incremental_optimize_packs_per_partition(spark, tmp_path):
     """Small files pack WITHIN their Hive partition — the rewrite never
     moves a row across partition directories, and each partition's
